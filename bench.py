@@ -122,9 +122,9 @@ def build_spark(cpus: int, app: str = "ocr-parallel-spark-bench"):
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # Byte-based AQE coalescing starves the CPU-bound Arrow kernel
-        # stage (it can't see Python cost); keep AQE + skew-join, pin
-        # post-shuffle parallelism to the core count instead.
+        # Post-shuffle parallelism is pinned above (max(cpus, 8)), so
+        # coalescing stays off. (Submitted jobs coalesce instead; the
+        # kernel runs on scan partitions, before any shuffle, either way.)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         # CC pages are KB-MB blobs: smaller scan splits keep every core fed
         # (a 100 TB table scan has thousands of splits; mirror that shape).

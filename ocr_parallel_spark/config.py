@@ -45,6 +45,7 @@ ARROW_MAX_RECORDS_PER_BATCH = 256
 # Salt fan-out for pathologically hot domains (north_rule skew handling).
 DOMAIN_SALT_BUCKETS = 16
 
-# Default shuffle partitions for local testing; a real cluster would set this
-# to ~2-3x total cores via spark-submit conf.
+# Shuffle partitions of ``get_spark`` sessions (tests, notebooks). Submitted
+# jobs leave spark.sql.shuffle.partitions unset and let AQE coalesce each
+# shuffle to the data (scripts/submit.py JOB_CONFS).
 DEFAULT_SHUFFLE_PARTITIONS = 32

@@ -15,9 +15,12 @@ one IO interface:
   race this replaces; X9/S2 completion semantics become snapshot commits).
 - Resume = read committed keys, anti-join the source, process the rest,
   commit a new snapshot appending the new run directory.
-- Lineage: every snapshot records the run's counters (rows, pages
-  extracted, errors, dups dropped — from ``df.observe``) + per-run config,
-  mirroring A1/A5 metrics persistence.
+- Lineage: every snapshot records the run's counters (rows written,
+  pages extracted, errors, exact/near dups, chars out) + per-run config,
+  mirroring A1/A5 metrics persistence. The counters come from a
+  ``pyspark.sql.Observation`` on the write itself (``commit_counted``):
+  the result is computed once, by the pass that writes it, never
+  persisted and re-counted.
 
 Run ids derive from the snapshot ordinal — no uuid/wall-clock (determinism
 rule; reference used uuid4 at full_process.py:34-36).
@@ -28,8 +31,9 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -224,35 +228,42 @@ class SnapshotTable:
         appends it to the live set. Data lands fully before the manifest
         pointer flips — crash mid-write leaves the table at the previous
         snapshot."""
+        return self.commit_run(self.write_run(df), df.columns, lineage)
+
+    def overwrite(self, df: DataFrame, lineage: dict | None = None) -> dict:
+        return self.commit_run(
+            self.write_run(df), df.columns, lineage, replace=True
+        )
+
+    def write_run(self, df: DataFrame) -> str:
+        """Write ``df`` as the next ordinal's run directory, uncommitted:
+        readers keep seeing the current snapshot until ``commit_run``.
+        Returns the directory relative to the table root."""
         prior = self.current_snapshot()
         ordinal = (prior["ordinal"] + 1) if prior else 0
         run_dir = f"data/run-{ordinal:06d}"
         (self.root / "data").mkdir(parents=True, exist_ok=True)
         df.write.mode("errorifexists").parquet(str(self.root / run_dir))
+        return run_dir
 
-        data_dirs = (prior["data_dirs"] if prior else []) + [run_dir]
+    def commit_run(
+        self,
+        run_dir: str,
+        columns: list[str],
+        lineage: dict | None = None,
+        replace: bool = False,
+    ) -> dict:
+        """Commit a snapshot whose live set is the current one plus
+        ``run_dir`` (``replace``: just ``run_dir``)."""
+        prior = self.current_snapshot()
+        kept = [] if replace or prior is None else prior["data_dirs"]
         snap = {
-            "ordinal": ordinal,
-            "data_dirs": data_dirs,
+            "ordinal": int(run_dir.rsplit("-", 1)[1]),
+            "data_dirs": kept + [run_dir],
             # schema as committed THIS run (Iceberg records schema per
             # snapshot; an added column shows up here and time-travel
             # readers of older ordinals never see it)
-            "columns": df.columns,
-            "lineage": lineage or {},
-        }
-        self._commit(snap)
-        return snap
-
-    def overwrite(self, df: DataFrame, lineage: dict | None = None) -> dict:
-        prior = self.current_snapshot()
-        ordinal = (prior["ordinal"] + 1) if prior else 0
-        run_dir = f"data/run-{ordinal:06d}"
-        (self.root / "data").mkdir(parents=True, exist_ok=True)
-        df.write.mode("errorifexists").parquet(str(self.root / run_dir))
-        snap = {
-            "ordinal": ordinal,
-            "data_dirs": [run_dir],
-            "columns": df.columns,
+            "columns": list(columns),
             "lineage": lineage or {},
         }
         self._commit(snap)
@@ -294,8 +305,6 @@ class SnapshotTable:
         newer snapshots' live sets — such dirs are NOT deleted; real
         space comes back after a compaction made the old dirs
         unreferenced by the kept tail. Returns the deleted dirs."""
-        import shutil
-
         if keep_last < 1:
             raise ValueError("expire_snapshots: keep_last must be >= 1")
         snaps = self.snapshots()
@@ -332,25 +341,13 @@ def resume_filter(
 
 
 def partition_counters(df: DataFrame) -> list[dict]:
-    """Per-partition lineage counters (north_star: 'per-partition lineage +
-    counters persisted'): one row per physical partition with rows seen,
-    pages extracted, error rows, chars out — the distributed analog of the
-    reference's per-batch metrics (A1/A5). Cheap: one map-side agg over an
-    already-persisted result."""
-    cols = set(df.columns)
-    aggs = [F.count(F.lit(1)).alias("rows")]
-    if "status" in cols:
-        aggs.append(
-            F.count(F.when(F.col("status") == "found", 1)).alias("pages_extracted")
-        )
-        aggs.append(F.count(F.when(F.col("status") == "error", 1)).alias("errors"))
-    if "is_exact_dup" in cols:
-        aggs.append(F.count(F.when(F.col("is_exact_dup"), 1)).alias("exact_dups"))
-    if "n_chars_out" in cols:
-        aggs.append(F.sum("n_chars_out").alias("chars_out"))
+    """The lineage counters (``_run_counters``) per physical partition.
+    Not on the commit path, which counts the write itself: this is one
+    extra job over ``df``, only worth it over an already-persisted
+    frame."""
     rows = (
         df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(*aggs)
+        .agg(*_run_counters(df.columns))
         .collect()
     )
     return [r.asDict() for r in sorted(rows, key=lambda r: r.partition_id)]
@@ -370,6 +367,62 @@ def reason_histogram(df: DataFrame) -> dict | None:
     return {r.r: r["count"] for r in sorted(rows, key=lambda r: r.r)}
 
 
+def _run_counters(columns: list[str]) -> list:
+    """The lineage counters, as aggregates over the rows being written;
+    each applies only when the result has its column."""
+    cols = set(columns)
+    aggs = [F.count(F.lit(1)).alias("rows_written")]
+    if "status" in cols:
+        aggs.append(
+            F.count(F.when(F.col("status") == "found", 1)).alias("pages_extracted")
+        )
+        aggs.append(F.count(F.when(F.col("status") == "error", 1)).alias("errors"))
+    if "is_exact_dup" in cols:
+        aggs.append(F.count(F.when(F.col("is_exact_dup"), 1)).alias("exact_dups"))
+    if "is_near_dup" in cols:
+        aggs.append(F.count(F.when(F.col("is_near_dup"), 1)).alias("near_dups"))
+    if "n_chars_out" in cols:
+        aggs.append(F.sum("n_chars_out").alias("chars_out"))
+    return aggs
+
+
+def commit_counted(
+    table: SnapshotTable,
+    result: DataFrame,
+    lineage: dict | None = None,
+    replace: bool = False,
+) -> dict:
+    """Write ``result`` once and commit it with its counters in lineage.
+
+    The counters ride the write as a ``pyspark.sql.Observation``, so the
+    result is computed exactly once and never persisted. The pointer
+    flips only after the data and counters are in. An append that wrote
+    no rows commits nothing: its empty run directory is removed and a
+    ``noop`` dict comes back. A ``replace`` (overwrite) always commits.
+    Tables with a ``drop_reason`` column also get the ``reasons``
+    histogram, read back from the one column of the run just written."""
+    obs = Observation("snapshot_commit")
+    run_dir = table.write_run(result.observe(obs, *_run_counters(result.columns)))
+    info = dict(lineage or {})
+    info.update(obs.get)
+    if info["rows_written"] == 0 and not replace:
+        shutil.rmtree(table.root / run_dir)
+        prior = table.current_snapshot()
+        return {
+            "ordinal": prior["ordinal"] if prior else -1,
+            "noop": True,
+            "lineage": info,
+        }
+    if "drop_reason" in result.columns:
+        # the curation datasheet: every run's verdict breakdown rides
+        # its snapshot (the A1/A5 metrics-persistence shape)
+        info["reasons"] = reason_histogram(
+            result.sparkSession.read.parquet(str(table.root / run_dir))
+            .select("drop_reason")
+        )
+    return table.commit_run(run_dir, result.columns, info, replace=replace)
+
+
 def run_resumable(
     source: DataFrame,
     table: SnapshotTable,
@@ -379,32 +432,9 @@ def run_resumable(
     lineage: dict | None = None,
 ) -> dict:
     """One resumable batch step: filter out committed keys, apply the
-    pipeline ``transform``, append + commit. Returns the snapshot dict
-    (with ``rows_written`` + per-partition counters in lineage)."""
-    from pyspark import StorageLevel
-
+    pipeline ``transform``, append + commit through ``commit_counted``.
+    Returns the snapshot dict, whose lineage carries ``rows_written`` and
+    the run's counters; a run with nothing new returns a ``noop`` dict
+    and leaves the table as it was."""
     todo = resume_filter(source, table, spark, key_col)
-    result = transform(todo).persist(StorageLevel.MEMORY_AND_DISK)
-    n = result.count()
-    info = dict(lineage or {})
-    info["rows_written"] = n
-    if n:
-        info["partitions"] = partition_counters(result)
-        reasons = reason_histogram(result)
-        if reasons is not None:
-            # the curation datasheet: every run's verdict breakdown
-            # rides its snapshot (the A1/A5 metrics-persistence shape)
-            info["reasons"] = reasons
-    if n == 0:
-        # Nothing new to process: leave the table at its current snapshot
-        # and report a no-op instead of committing an empty append.
-        result.unpersist()
-        prior = table.current_snapshot()
-        return {
-            "ordinal": prior["ordinal"] if prior else -1,
-            "noop": True,
-            "lineage": info,
-        }
-    snap = table.append(result, lineage=info)
-    result.unpersist()
-    return snap
+    return commit_counted(table, transform(todo), lineage)

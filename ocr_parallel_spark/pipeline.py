@@ -6,9 +6,10 @@ Reference lifecycle (ocr_service.process_pages_async,
 
 Spark plan: scan -> size-cap filter (P5) -> mapInArrow kernel (X1/X2) on
 the scan partitions -> keep-first url dedup (D2, earliest crawl wins) ->
-sha-256 exact content dedup (D4) -> SimHash near-dup marking -> observe
-counters (A1/D3). Everything except the single Arrow kernel stage is
-whole-stage-codegen built-ins.
+sha-256 exact content dedup (D4) -> SimHash near-dup marking. Everything
+except the single Arrow kernel stage is whole-stage-codegen built-ins. The
+run's counters (A1/D3) are observed on the snapshot write that commits the
+result (``io.snapshot.commit_counted``), not here.
 
 Order rationale (vs the reference's dedup-before-work): the kernel runs
 BEFORE the url-dedup shuffle, so the multi-MB html payloads never cross an
@@ -31,8 +32,6 @@ from ocr_parallel_spark.operators.classify import classify_status, filter_oversi
 from ocr_parallel_spark.operators.dedup import keep_first, mark_exact_content_dups
 from ocr_parallel_spark.operators.extraction import extract_pages, repartition_by_key
 from ocr_parallel_spark.operators.neardup import mark_simhash_near_dups
-
-_OBS_SEQ = 0
 
 # X8 chooser: above this estimated duplicate-url rate, dropping dups
 # BEFORE the kernel wins — re-extracting that many duplicate payloads
@@ -85,7 +84,6 @@ def run_extraction_pipeline(
     near_dups: bool = True,
     repartition: bool = False,
     dedup_before_extract: bool | str = False,
-    observe_name: str | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang, ...) -> extraction results.
 
@@ -135,24 +133,7 @@ def run_extraction_pipeline(
             deduped.join(marked, "url", "left")
             .withColumn("is_near_dup", F.coalesce(F.col("is_near_dup"), F.lit(False)))
         )
-    # Metric-name rules: Spark rejects two CollectMetrics nodes with the
-    # same name and different results in one query (e.g. a diff of two
-    # pipeline variants), so the default is a session counter — which
-    # makes names invocation-order dependent. Callers that need a stable,
-    # reproducible metric name (dashboards, lineage) pass observe_name.
-    if observe_name is None:
-        global _OBS_SEQ
-        _OBS_SEQ += 1
-        observe_name = f"pipeline_{_OBS_SEQ}"
-    return deduped.observe(
-        observe_name,
-        F.count(F.lit(1)).alias("rows_out"),
-        F.count(F.when(F.col("status") == "found", 1)).alias("pages_extracted"),
-        F.count(F.when(F.col("status") == "error", 1)).alias("error_rows"),
-        F.count(F.when(F.col("is_exact_dup"), 1)).alias("exact_dups"),
-        F.sum("n_chars_in").alias("bytes_in"),
-        F.sum("n_chars_out").alias("chars_out"),
-    )
+    return deduped
 
 
 def pipeline_stats(result: DataFrame) -> DataFrame:

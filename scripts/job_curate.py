@@ -1049,7 +1049,11 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("ocr-parallel-spark-curate").getOrCreate()
 
-    from ocr_parallel_spark.io.snapshot import SnapshotTable, run_resumable
+    from ocr_parallel_spark.io.snapshot import (
+        SnapshotTable,
+        commit_counted,
+        run_resumable,
+    )
 
     if args.input_format == "warc":
         from ocr_parallel_spark.sources.warc import warc_docs
@@ -1300,22 +1304,12 @@ def main() -> None:
 
     if args.recompute:
         # Full-corpus arbiter: corpus-global verdicts recomputed over
-        # the entire input and committed as an overwrite snapshot. The
-        # result is pinned so the verdict-breakdown histogram and the
-        # write share one execution (run_resumable does the same).
-        from pyspark import StorageLevel
-
-        from ocr_parallel_spark.io.snapshot import reason_histogram
-
-        result = transform(docs).persist(StorageLevel.MEMORY_AND_DISK)
+        # the entire input and committed as an overwrite snapshot,
+        # counted by the write itself (run_resumable does the same).
         lineage = {"input": args.input, "mode": "recompute"}
         if sem_geo is not None:
             lineage["sem_geo"] = sem_geo
-        reasons = reason_histogram(result)
-        if reasons is not None:
-            lineage["reasons"] = reasons
-        snap = table.overwrite(result, lineage=lineage)
-        result.unpersist()
+        snap = commit_counted(table, transform(docs), lineage, replace=True)
     else:
         snap = run_resumable(
             docs,

@@ -24,6 +24,31 @@ import zipfile
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
+# The job profile every submitted job runs under (all runtime-settable
+# ``spark.sql.*`` keys). Shuffle widths come from the data: with no
+# ``spark.sql.shuffle.partitions`` set, AQE coalesces each 200-way
+# shuffle down to about ``defaultParallelism`` tasks. Timings are the
+# perfbench job walls on 4 cores: extract_heavy (job_extract over 1000
+# heavy pages) and full_process.
+JOB_CONFS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    # Splits oversized hot-key partitions of shuffled joins.
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    # Without coalescing every reduce stage ran 200 tasks of ~15 ms and
+    # extract_heavy took 26-29 s for ~2 core-s of kernel (5-7 s with).
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    # With parallelismFirst, coalescing then never drops below
+    # defaultParallelism tasks; the 1 MB default packs small shuffles
+    # into fewer tasks than cores (full_process 11.5-12.3 s vs 7.4-8.2 s).
+    ("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1"),
+    # Lets AQE coalesce persisted frames too: without it the near-dup
+    # persist kept 200 partitions (extract_heavy 15-17 s vs 5.5-6.4 s).
+    ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"),
+    # CC pages are KB-MB blobs: small scan splits keep every core fed.
+    ("spark.sql.files.maxPartitionBytes", "16m"),
+    ("spark.sql.execution.arrow.maxRecordsPerBatch", "2048"),
+)
+
 
 def build_zip(dest: pathlib.Path) -> pathlib.Path:
     """Zip the package (source only) for --py-files shipping."""
@@ -231,11 +256,7 @@ def main() -> None:
         "--master", args.master,
         "--py-files", str(zip_path),
         "--executor-memory", args.executor_memory,
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.sql.adaptive.skewJoin.enabled=true",
-        "--conf", "spark.sql.adaptive.coalescePartitions.enabled=false",
-        "--conf", "spark.sql.files.maxPartitionBytes=16m",
-        "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=2048",
+        *(w for k, v in JOB_CONFS for w in ("--conf", f"{k}={v}")),
         str(
             REPO
             / "scripts"

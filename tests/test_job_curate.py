@@ -513,6 +513,37 @@ def test_recompute_arbiter_applies_corpus_global_truth(spark, tmp_path):
     assert before.count() == 6
 
 
+def test_recompute_job_counts_its_overwrite(spark, sf_dir, tmp_path):
+    """job_curate --recompute commits its overwrite through the same
+    write-then-count path as run_resumable: the lineage carries the
+    observed rows_written and the reasons histogram of the committed
+    verdicts, and the live set is the one new run directory."""
+    import sys
+
+    from ocr_parallel_spark.io.snapshot import reason_histogram
+
+    src = str(tmp_path / "docs.parquet")
+    _docs(spark, sf_dir).write.parquet(src)
+    out = str(tmp_path / "verdicts")
+    argv, stop = sys.argv, type(spark).stop
+    type(spark).stop = lambda self: None
+    try:
+        for extra in ([], ["--recompute"]):
+            sys.argv = ["job_curate.py", "--input", src, "--output", out, *extra]
+            job.main()
+    finally:
+        sys.argv, type(spark).stop = argv, stop
+    table = SnapshotTable(out)
+    snap = table.current_snapshot()
+    assert snap["ordinal"] == 1 and snap["data_dirs"] == ["data/run-000001"]
+    lineage = snap["lineage"]
+    assert lineage["mode"] == "recompute"
+    committed = table.read(spark)
+    n_docs = spark.read.parquet(src).count()
+    assert lineage["rows_written"] == committed.count() == n_docs
+    assert lineage["reasons"] == reason_histogram(committed)
+
+
 def test_warc_input_feeds_curation(spark, sf_dir, tmp_path):
     """--input-format warc: the WARC fixture round-trips into the docs
     shape (text byte-identical to the documents table, stable hashed
