@@ -21,25 +21,35 @@ The partition probe (``df.rdd.getNumPartitions()``) is free for a bare
 scan chain (plan compilation only), but under AQE it EXECUTES query
 stages when the plan already contains an exchange or a broadcast build
 — a thrown-away job inside the timed region (round-6 review finding,
-confirmed experimentally). ``fan_out`` therefore probes only plans that
-are plain scan->filter->project chains; anything with a join, window,
-aggregate, or existing repartition is returned unchanged — such frames
-either already carry shuffle parallelism or were fanned upstream.
+confirmed experimentally). ``fan_out`` therefore probes only plans whose
+every analyzed node is a scan, filter, projection or alias; anything
+else (join, window, aggregate, distinct, sort, sample, existing
+repartition, ...) is returned unchanged — such frames either already
+carry shuffle parallelism or were fanned upstream. The check walks the
+node classes, not the rendered plan, so a column named ``Union`` or
+``Window`` does not change the decision.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 
-# Logical operators whose presence makes the partition probe expensive
-# (AQE materializes stages) or the fan-out redundant (the operator
-# itself re-establishes parallelism via its shuffle).
-_COMPLEX_NODE = re.compile(
-    r"\b(Join|Repartition|RepartitionByExpression|Rebalance|Window|"
-    r"Aggregate|Generate|LogicalRDD|Union)\b"
+# Logical node classes whose partition probe is plan compilation only
+# (a file scan is a LogicalRelation, rendered "Relation" in plan text).
+_SCAN_CHAIN_NODES = frozenset(
+    {"LogicalRelation", "Filter", "Project", "SubqueryAlias"}
 )
+
+
+def _is_scan_chain(df: DataFrame) -> bool:
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() not in _SCAN_CHAIN_NODES:
+            return False
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return True
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -47,7 +57,7 @@ def fan_out(df: DataFrame) -> DataFrame:
     scan whose planned partitioning would leave cores idle. No-op (and
     no exchange) when the scan already fans wide — i.e. at any
     realistic corpus size — and for non-scan plans (see module doc)."""
-    if _COMPLEX_NODE.search(df._jdf.queryExecution().analyzed().toString()):
+    if not _is_scan_chain(df):
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

@@ -1,5 +1,6 @@
 """Web-corpus curation expressions: line synthesis, repetition signals,
-deterministic stratified sampling, and PII scrubbing.
+deterministic stratified sampling, PII scrubbing, and the per-document
+screen job_curate runs first (``curate_docs``).
 
 These extend the training-data toolkit (SURVEY §2.8 beyond-reference
 scope) with the CCNet/Gopher-style curation steps a 100 TB text pipeline
@@ -17,8 +18,17 @@ lookaround, no '$' — see functions/urls.py for the '$'-vs-'\\z' trap).
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ocr_parallel_spark.functions.text_quality import (
+    LANG_PRECEDENCE,
+    detect_lang_from_hits,
+    stopword_hits_from_tokens,
+    tokens_col,
+)
+from ocr_parallel_spark.functions.urls import host_col
+from ocr_parallel_spark.operators.classify import normalize_col
 
 TOKENS_PER_LINE = 8
 
@@ -123,6 +133,57 @@ def scrub_pii(text: Column) -> Column:
     for kind in ("email", "phone", "ip"):
         out = F.regexp_replace(out, PII_PATTERNS[kind], PII_TOKENS[kind])
     return out
+
+
+def curate_docs(docs: DataFrame, blocked_hosts: DataFrame) -> DataFrame:
+    """The per-document curation screen: language ID, token count, PII
+    count and the host blocklist. Each signal is a row-local projection
+    or a broadcast join, so the screen needs no global view of the
+    corpus (line frequencies and dup ranking run after it in
+    job_curate).
+
+    ``blocked_hosts``: static DataFrame with a ``host`` column."""
+    d = docs.withColumn("norm", normalize_col("text")).withColumn(
+        "_toks", tokens_col(F.col("norm"))
+    )
+    for lang in LANG_PRECEDENCE:
+        d = d.withColumn(
+            f"_h_{lang}", stopword_hits_from_tokens(F.col("_toks"), lang)
+        )
+    hits = {lang: F.col(f"_h_{lang}") for lang in LANG_PRECEDENCE}
+    counts = pii_counts(F.col("norm"))
+    d = d.select(
+        "doc_id",
+        host_col(F.col("url")).alias("host"),
+        detect_lang_from_hits(hits).alias("pred_lang"),
+        F.size(F.col("_toks")).alias("n_tokens"),
+        (counts["email"] + counts["phone"] + counts["ip"]).alias("n_pii"),
+    )
+    blocked = F.broadcast(
+        # distinct AFTER lowercasing: caller rows that collide once
+        # lowered ('Example.com' + 'example.com') would otherwise fan
+        # every doc on that host into duplicate verdict rows through
+        # the left join
+        blocked_hosts.select(F.lower(F.col("host")).alias("host"))
+        .distinct()
+        .withColumn("_blocked", F.lit(True))
+    )
+    d = d.join(blocked, "host", "left")
+    reason = (
+        F.when(F.coalesce(F.col("_blocked"), F.lit(False)), F.lit("blocked"))
+        .when(F.col("pred_lang") != "en", F.lit("lang"))
+        .when(F.col("n_tokens") < 30, F.lit("too_short"))
+        .when(F.col("n_pii") >= 2, F.lit("pii"))
+    )
+    return d.select(
+        "doc_id",
+        "host",
+        "pred_lang",
+        "n_tokens",
+        "n_pii",
+        reason.isNull().alias("kept"),
+        reason.alias("drop_reason"),
+    )
 
 
 # Hashed-linear quality classifier (fastText application shape). The
@@ -292,7 +353,7 @@ def trained_quality_scores(
     # COALESCE before split: explode(NULL) would DROP the doc from the
     # output entirely, silently un-scoring it. '' instead splits to one
     # '' token (Spark and DuckDB string_split agree), so every input doc
-    # keeps a row — the same convention vote_score_expr applies.
+    # keeps a row.
     toks = docs.select(
         id_col,
         F.explode(
@@ -307,42 +368,6 @@ def trained_quality_scores(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
             F.sum(F.coalesce(F.col("_wt"), F.lit(0))).cast("long").alias("score"),
         )
-    )
-
-
-def vote_score_expr(norm_col: Column, weights: dict[int, int]) -> Column:
-    """STATELESS trained-classifier score: the ternary-vote table
-    (tiny by construction — only discriminative buckets survive
-    training) rides as a map literal, and the doc score is one
-    transform + aggregate over the token array — no explode, no
-    groupBy, no shuffle. This is the STREAMING-safe formulation (a
-    streaming groupBy aggregation would be stateful; this is a pure
-    projection, so the same definition screens a micro-batch and a
-    batch identically — pinned equal to trained_quality_scores in
-    pytest). Each token is hashed once inside the transform (the
-    array materializes before the aggregate — the Catalyst HOF
-    recompute trap does not apply)."""
-    if not weights:
-        return F.lit(0).cast("long")
-    entries = [
-        x
-        for b, w in sorted(weights.items())
-        for x in (F.lit(int(b)).cast("long"), F.lit(int(w)).cast("long"))
-    ]
-    wmap = F.create_map(*entries)
-    # NO empty-token filter: split('') yields [''] and the batch scorer
-    # (trained_quality_scores) and the DuckDB oracle both count that ''
-    # token, so the vote expression must too — filtering it would make
-    # the streaming screen diverge from batch on empty docs.
-    toks = F.split(F.coalesce(norm_col, F.lit("")), " ")
-    votes = F.transform(
-        toks,
-        lambda t: F.coalesce(
-            F.element_at(wmap, quality_bucket(t)), F.lit(0)
-        ).cast("long"),
-    )
-    return F.aggregate(
-        votes, F.lit(0).cast("long"), lambda acc, x: acc + x
     )
 
 

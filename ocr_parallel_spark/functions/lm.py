@@ -141,14 +141,6 @@ def fit_trigram_lm(
     )
 
 
-def model_to_dict(model: DataFrame) -> dict[str, int]:
-    """Collect a fitted model for task-closure shipping (the streaming
-    screen's deployment shape). Collectible BY CONTRACT: the min_count
-    prune drops the singleton tail — most of the gram space — which is
-    the same property that lets the batch scorer broadcast the model."""
-    return {r["gram"]: r["surprise"] for r in model.collect()}
-
-
 def doc_surprise(
     df: DataFrame,
     model: DataFrame,

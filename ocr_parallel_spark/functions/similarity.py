@@ -247,21 +247,6 @@ def ivf_assign(
     ).drop("_ivfv", "_ivfn")
 
 
-def deterministic_centroids(
-    vectors: DataFrame,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Deterministic centroid seed: the first ``n_cells`` vectors by id.
-    Kept as the trivial fallback; ``kmeans_centroids`` below is the
-    production path (balanced cells)."""
-    rows = (
-        vectors.orderBy(id_col).limit(n_cells).select(vec_col).collect()
-    )
-    return [list(map(float, r[0])) for r in rows]
-
-
 def kmeans_centroids(
     vectors: DataFrame,
     n_cells: int = 8,

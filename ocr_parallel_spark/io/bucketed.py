@@ -13,7 +13,7 @@ SURVEY §7.2 step 5 (no Iceberg jar ships in this sandbox).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 DEFAULT_BUCKETS = 16
 
@@ -39,6 +39,3 @@ def write_bucketed(
         w = w.sortBy(key)
     w.saveAsTable(table_name)
 
-
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)

@@ -256,8 +256,8 @@ def pack_sequences(
 
     ``base_offsets`` (``source_col``, ``base_offset``) shifts each
     source's stream start — the resume hook: an incremental run packs
-    its new docs CONTINUING from the committed stream end, exactly like
-    the streaming packer's state store."""
+    its new docs CONTINUING from the committed stream end, so the union
+    of all committed runs equals one batch pack (job_pack)."""
     from pyspark.sql import Window
 
     if n_tokens_col is None:

@@ -72,22 +72,3 @@ def filter_oversized(
     binary columns."""
     return df.filter(F.octet_length(F.col(payload_col)) <= max_bytes)
 
-
-def validate_page_range(
-    df: DataFrame, page_col: str = "page", total_col: str = "total_pages"
-) -> DataFrame:
-    """P4 as error-as-data: out-of-range page numbers become status='error'
-    rows instead of task failures (pdf_utils.py:31-42 semantics)."""
-    ok = (F.col(page_col) >= 1) & (F.col(page_col) <= F.col(total_col))
-    return df.withColumn(
-        "page_status", F.when(ok, F.lit("found")).otherwise(F.lit("error"))
-    )
-
-
-def non_empty_rows(df: DataFrame, *cols: str) -> DataFrame:
-    """P3: drop rows where any named column is empty/NULL (CSV hygiene,
-    scripts/test_full_process.py:94-100)."""
-    cond = F.lit(True)
-    for c in cols:
-        cond = cond & F.col(c).isNotNull() & (F.trim(F.col(c)) != "")
-    return df.filter(cond)

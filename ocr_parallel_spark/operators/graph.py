@@ -54,12 +54,15 @@ def connected_components(
     fwd = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
     rev = edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
     adj = fwd.union(rev).filter(F.col("node") != F.col("nbr")).distinct()
-    # Edge list is re-consumed every round — cut its lineage once, and
-    # store it PARTITIONED BY the join key: the neighbor-min join probes
-    # adj on ``nbr`` every round, and the distinct's (node, nbr) hash
-    # layout would re-exchange the whole edge list per round (guide
-    # §2.4 — the biggest table in the loop shuffles once, not O(rounds)
-    # times).
+    # Edge list is re-consumed every round — cut its lineage once.
+    # Under AQE (on in every session profile here) the checkpoint does
+    # NOT keep the repartition(nbr) layout: on Spark 4.1 the adaptive
+    # plan reports UnknownPartitioning, and the checkpointed LogicalRDD
+    # records that (with AQE off it keeps hashpartitioning(nbr)). So a
+    # sort-merge neighbor-min join still re-exchanges the whole edge
+    # list by ``nbr`` every round. Measured on a 4k-node chain with
+    # broadcast joins off: 5 shuffle exchanges per round (2 more
+    # reused), one of them over the edge list.
     adj = adj.repartition(F.col("nbr")).localCheckpoint(eager=False)
 
     seed = adj.select("node")
@@ -158,9 +161,11 @@ def pagerank_int(
     mode each iteration references ``ranks`` exactly ONCE, so the
     lineage is a linear chain — no per-iteration localCheckpoint is
     needed, the 10 iterations compile as one adaptive plan, and the
-    per-iteration RDD materialization + job boundaries (which also
-    discard partitioning info at the checkpoint seam, forcing extra
-    exchanges) disappear — measured 7.6s -> 4.4s at sf0.1.
+    per-iteration RDD materialization + job boundaries disappear —
+    measured 7.6s -> 4.4s at sf0.1. A localCheckpoint seam also drops
+    the frame's output partitioning under AQE (Spark 4.1), so the join
+    after it re-exchanges its input; connected_components pays that on
+    its edge list every round.
     ``redistribute`` references ``ranks`` twice per iteration (inbound
     join + dangling-mass aggregate), so WITHOUT a checkpoint the plan
     doubles per iteration (2^n_iter subtrees); that mode keeps the

@@ -35,19 +35,6 @@ HAMMING_THRESHOLD = 3
 MAX_BAND_BUCKET = 256
 
 
-def simhash_band_cols(df: DataFrame, simhash_col: str = "simhash") -> DataFrame:
-    """Split the int64 SimHash into N_BANDS unsigned 16-bit band values."""
-    out = df
-    for i in range(N_BANDS):
-        out = out.withColumn(
-            f"band_{i}",
-            F.shiftrightunsigned(F.col(simhash_col), i * BAND_BITS).bitwiseAND(
-                F.lit((1 << BAND_BITS) - 1)
-            ),
-        )
-    return out
-
-
 def mark_simhash_near_dups(
     df: DataFrame,
     simhash_col: str = "simhash",
@@ -243,11 +230,10 @@ def minhash_candidate_pairs(
 # MinHash-ESTIMATE verification: instead of re-reading both texts for an
 # exact Jaccard, estimate it as the fraction of agreeing signature
 # components (the textbook unbiased MinHash estimator, E[agree/n_perm] =
-# J). This is the verification a STREAMING dedup can afford — state
-# carries 512-byte signatures, never document text — and the batch twin
-# below exists so the streaming operator
-# (streaming/stateful.py streaming_near_dup) has an exact
-# DataFrame-native equivalence target. est_num/est_den give the
+# J). Verification then joins 512-byte signatures, never document text,
+# so its shuffle is bounded by the signature width whatever the document
+# size; the minhash_estimate_recall catalog query gates its recall
+# against the exact word-trigram Jaccard. est_num/est_den give the
 # agreement threshold as an integer fraction (1/2 = estimated J >= 0.5)
 # so the comparison is exact in both engines.
 
@@ -291,13 +277,12 @@ def signature_near_dup_marks(
     """Arrival-order near-dup marks from (id, sig, bands) rows: a doc is
     a near-dup of the MINIMUM earlier id that shares >= 1 LSH band with
     signature agreement >= est_num/est_den. Returns (id, near_rep,
-    is_near_dup) — the batch semantics the streaming operator pins
-    against. Candidate generation is the capped band self-join;
+    is_near_dup). Candidate generation is the capped band self-join;
     verification compares the two 64-slot signatures with zip_with
     (JVM-side, no Python)."""
     # candidate generation IS pairs_from_banded — one definition of the
     # bucket-cap + banded self-join, so a cap/predicate fix cannot drift
-    # between this batch twin and the other callers
+    # between this and the other callers
     cands = pairs_from_banded(sigs, id_col, max_bucket)
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("_sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("_sig_b"))

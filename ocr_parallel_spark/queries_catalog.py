@@ -2189,10 +2189,9 @@ def q_bpe_counts(spark, sf_dir):
 
 
 def q_minhash_estimate_recall(spark, sf_dir):
-    """Gate for the SIGNATURE-ESTIMATE dedup path (the verification a
-    streaming dedup can afford — operators/neardup.py
-    signature_near_dup_marks, whose stateful twin is
-    streaming/stateful.py streaming_near_dup): plant the same drifted
+    """Gate for the SIGNATURE-ESTIMATE dedup path (verification joins
+    64-slot signatures instead of document text — operators/neardup.py
+    signature_near_dup_marks): plant the same drifted
     near-copies as minhash_recall, mark near-dups by MinHash-estimate
     agreement (>= 1/2 of 64 permutations), and pin (a) recall >= 0.9
     vs the exact word-trigram-Jaccard truth the oracle recomputes in

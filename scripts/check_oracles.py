@@ -24,6 +24,16 @@ TABLES = [
 ]
 
 
+def connect(sf_dir):
+    """DuckDB connection with one view per ``TABLES`` parquet file."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
 def value_digest(rows, colnames):
     order = sorted(range(len(colnames)), key=lambda i: colnames[i])
     canon = sorted(
@@ -57,11 +67,7 @@ def main() -> int:
     spark = get_spark(master="local[8]", app_name="oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = connect(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

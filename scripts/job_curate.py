@@ -1,10 +1,10 @@
 """Web-corpus curation batch job (spark-submit entrypoint).
 
 docs parquet (doc_id, url, text, lang, source) -> per-document screens
-(language ID, token count, PII, domain blocklist — the SAME curate_docs
-definition the streaming tier runs) -> inter-document line dedup (CCNet
-boilerplate removal over the docs' real newlines; single-line docs fall
-back to fixed-width word lines) -> exact dedup on the CLEANED text ->
+(language ID, token count, PII, domain blocklist — functions/curation.py
+curate_docs) -> inter-document line dedup (CCNet boilerplate removal
+over the docs' real newlines; single-line docs fall back to fixed-width
+word lines) -> exact dedup on the CLEANED text ->
 optional benchmark decontamination (--bench parquet with a ``text``
 column) -> per-doc verdict rows snapshot-committed, resumable on doc_id
 (a crash or a re-run with new docs processes only never-committed ids).
@@ -140,16 +140,19 @@ def build_output(
     a run to be dropped, a near-dup pair split across runs is missed.
     That is the standard incremental-curation tension; the arbiter is
     ``--recompute``: re-run THIS composition over the full input and
-    overwrite the committed verdicts (main below), exactly the
-    streaming-ingest / batch-compaction split the rest of the engine
-    uses (streaming/curation.py docstring)."""
+    overwrite the committed verdicts (main below). The per-document
+    screens (curate_docs) need no global view, so they are exact under
+    resume."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ocr_parallel_spark.functions.curation import word_lines, word_ngrams
+    from ocr_parallel_spark.functions.curation import (
+        curate_docs,
+        word_lines,
+        word_ngrams,
+    )
     from ocr_parallel_spark.operators.classify import normalize_col
     from ocr_parallel_spark.operators.linededup import dedup_lines
-    from ocr_parallel_spark.streaming.curation import curate_docs
 
     if blocked_hosts is None:
         blocked_hosts = spark.createDataFrame([], "host string")

@@ -12,9 +12,8 @@ offset, window ids, straddle flag) snapshot-committed.
 Resumable on doc_id with OFFSET CONTINUATION: an incremental run packs
 only never-committed docs, but each source's stream start is the
 committed stream END (max(tok_offset + n_tokens) per source read from
-the table) — the batch analog of the streaming packer's state store, so
-the union of all committed runs equals one batch pack of the docs in
-arrival order.
+the table), so the union of all committed runs equals one batch pack of
+the docs in arrival order.
 
     spark-submit --py-files ocr_parallel_spark.zip scripts/job_pack.py \
         --input /data/docs --output /data/packs \

@@ -304,6 +304,45 @@ def test_host_col_normalizes_scheme_port_userinfo(spark):
     assert got == ["site-3.example.com", "site-5.example.com", "plain.org", ""]
 
 
+def _docs_with_urls(spark, sf_dir):
+    return (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .withColumn(
+            "url",
+            F.concat(
+                F.lit("https://site-"),
+                (F.col("doc_id") % 7).cast("string"),
+                F.lit(".example.com/p/"),
+                F.col("doc_id").cast("string"),
+            ),
+        )
+        .select("doc_id", "url", "text", "lang", "source")
+    )
+
+
+def test_blocklist_duplicates_do_not_fan_verdicts(spark, sf_dir):
+    """A blocklist whose rows collide after lowercasing ('Site-3...' +
+    'site-3...') must still yield exactly ONE verdict row per doc — the
+    broadcast side dedups post-normalization, or the left join would
+    emit every doc on that host once per colliding row."""
+    from ocr_parallel_spark.functions.curation import curate_docs
+
+    docs = _docs_with_urls(spark, sf_dir)
+    messy = spark.createDataFrame(
+        [("Site-3.example.com",), ("site-3.example.com",),
+         ("SITE-3.EXAMPLE.COM",)],
+        "host string",
+    )
+    out = curate_docs(docs, messy)
+    assert out.count() == docs.count()
+    assert out.select("doc_id").distinct().count() == docs.count()
+    blocked = out.filter("drop_reason = 'blocked'")
+    assert blocked.count() > 0
+    assert set(
+        r.host for r in blocked.select("host").distinct().collect()
+    ) == {"site-3.example.com"}
+
+
 def test_encoding_quality_flags_planted_mojibake(spark, sf_dir):
     from ocr_parallel_spark.queries_catalog import q_encoding_quality
 

@@ -1,6 +1,6 @@
 """Sequence-packing batch job: kept-doc filter, snapshot commit, and
-resume with OFFSET CONTINUATION (the batch analog of the streaming
-packer's state store)."""
+resume with OFFSET CONTINUATION (each run's stream starts at the
+committed stream end)."""
 
 from __future__ import annotations
 

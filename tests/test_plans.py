@@ -94,23 +94,28 @@ def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_bright")
 
 
-def test_with_input_idx_has_no_global_window_over_data(spark, sf_dir):
-    """W5 entry point: the input index must come from a partitioned rank +
-    offsets, never a single-reducer Window.orderBy over the data. The only
-    permitted unpartitioned window consumes the per-partition counts
-    aggregate (one row per partition)."""
-    from ocr_parallel_spark.operators.mapback import with_input_idx
+def test_fan_out_probes_only_scan_chains(spark, sf_dir):
+    """fan_out probes and repartitions only scan/filter/project chains:
+    the probe would run AQE query stages on anything else. Column names
+    do not count as plan nodes, so a column called ``Union`` or
+    ``Window`` still fans out."""
+    from ocr_parallel_spark.fanout import fan_out
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = with_input_idx(docs, ["doc_id"], num_partitions=7)
-    p = plan_of(out)
-    # the data-path window is partitioned by the range-partition id
-    assert "windowspecdefinition(_pid" in p
-    # correctness: dense 0..n-1 in key order, across >1 range partitions
-    rows = out.select("doc_id", "input_idx").collect()
-    n = len(rows)
-    by_key = sorted(rows, key=lambda r: r.doc_id)
-    assert [r.input_idx for r in by_key] == list(range(n))
+    assert docs.rdd.getNumPartitions() == 1  # one split at sf0.001
+    scan = docs.select(
+        F.col("doc_id").alias("Union"), F.col("text").alias("Window")
+    ).filter(F.col("Union") >= 0)
+    assert (
+        fan_out(scan).rdd.getNumPartitions()
+        == spark.sparkContext.defaultParallelism
+    )
+    for df in (
+        docs.join(docs.select("doc_id"), "doc_id"),
+        docs.groupBy("source").count(),
+        docs.distinct(),
+    ):
+        assert fan_out(df) is df
 
 
 def test_salted_rollup_two_stage(spark, sf_dir):

@@ -294,8 +294,7 @@ def test_winnow_shared_run_guarantee(prefix, suffix, shared):
 # ---- trigram-LM surprise scheme (functions/lm.py) ----
 #
 # Pure-Python mirror of the fit + scoring math (the Spark implementation
-# is value-hash-pinned by the lm_surprise oracle at 3 scales; the
-# streaming closure is pinned equal in test_streaming_curation). These
+# is value-hash-pinned by the lm_surprise oracle at 3 scales). These
 # pin the SCHEME's laws over random corpora the gate corpus can't sweep.
 
 LM_DOCS = st.lists(
