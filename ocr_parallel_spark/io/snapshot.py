@@ -16,11 +16,11 @@ one IO interface:
 - Resume = read committed keys, anti-join the source, process the rest,
   commit a new snapshot appending the new run directory.
 - Lineage: every snapshot records the run's counters (rows written,
-  pages extracted, errors, exact/near dups, chars out) + per-run config,
-  mirroring A1/A5 metrics persistence. The counters come from a
-  ``pyspark.sql.Observation`` on the write itself (``commit_counted``):
-  the result is computed once, by the pass that writes it, never
-  persisted and re-counted.
+  pages extracted, errors in total and by ``error_type``, exact/near
+  dups, chars out) + per-run config, mirroring A1/A5 metrics
+  persistence. The counters come from a ``pyspark.sql.Observation`` on
+  the write itself (``commit_counted``): the result is computed once, by
+  the pass that writes it, never persisted and re-counted.
 
 Run ids derive from the snapshot ordinal — no uuid/wall-clock (determinism
 rule; reference used uuid4 at full_process.py:34-36).
@@ -35,6 +35,8 @@ import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ocr_parallel_spark.kernel.extract import ERROR_TYPES
 
 
 class SnapshotTable:
@@ -377,6 +379,13 @@ def _run_counters(columns: list[str]) -> list:
             F.count(F.when(F.col("status") == "found", 1)).alias("pages_extracted")
         )
         aggs.append(F.count(F.when(F.col("status") == "error", 1)).alias("errors"))
+    if "error_type" in cols:
+        aggs.extend(
+            F.count(F.when(F.col("error_type") == t, 1)).alias(
+                f"errors_{t.lower()}"
+            )
+            for t in ERROR_TYPES
+        )
     if "is_exact_dup" in cols:
         aggs.append(F.count(F.when(F.col("is_exact_dup"), 1)).alias("exact_dups"))
     if "is_near_dup" in cols:

@@ -4,7 +4,7 @@ Error-as-data semantics mirror the reference (X7, SURVEY §2.9;
 /root/reference/app/services/ocr_service.py:163-205): every per-document
 failure becomes a status/error_type on the output row — the batch never
 fails. Error taxonomy generalizes the reference's
-``{GCS, PDF, Gemini, Unknown}`` to ``{EMPTY, DECODE, PARSE, PDF, UNKNOWN}``.
+``{GCS, PDF, Gemini, Unknown}`` to ``ERROR_TYPES``.
 
 This module is pure Python; the Spark boundary lives in
 ``ocr_parallel_spark.operators.extraction`` (mapInArrow) which calls
@@ -19,6 +19,8 @@ from ocr_parallel_spark.kernel.simhash import simhash64
 
 STATUS_FOUND = "found"
 STATUS_ERROR = "error"
+# Every status='error' row carries exactly one of these error_type values.
+ERROR_TYPES = ("EMPTY", "DECODE", "PARSE", "PDF")
 
 
 def extract_payload(payload: bytes | None, with_simhash: bool = True) -> dict:

@@ -63,12 +63,15 @@ def mark_exact_content_dups(
     # scale a ~1% error rate funnels billions of rows through a single
     # task for outputs the when() guards mask anyway. Spreading them by
     # url keeps every partition bounded; the \x00 prefix cannot collide
-    # with a hex sha.
-    w = Window.partitionBy(
+    # with a hex sha. The key is a column, not an expression, so
+    # row_number and first share one window and one exchange.
+    hashed = hashed.withColumn(
+        "_dk",
         F.coalesce(
             F.col("content_sha256"), F.concat(F.lit("\x00"), F.col("url"))
-        )
-    ).orderBy(*[F.col(c) for c in order_cols])
+        ),
+    )
+    w = Window.partitionBy("_dk").orderBy(*[F.col(c) for c in order_cols])
     return (
         hashed.withColumn(
             "_rn",
@@ -82,7 +85,7 @@ def mark_exact_content_dups(
                 F.first("url").over(w),
             ),
         )
-        .drop("_rn")
+        .drop("_rn", "_dk")
     )
 
 

@@ -2,15 +2,23 @@
 
 D4's near-dup half (SURVEY §2.4): the kernel already emits a 64-bit SimHash
 per document (one Python crossing, shared with extraction); everything after
-that is built-in expressions — band splitting via bit ops, candidate
-generation via a band-bucket self-join, Hamming verification via
-``bit_count(xor)``, representative election via ``min(url)`` per bucket.
+that is built-in expressions — band splitting via bit ops, bucket sizing
+with a count window on (band_idx, band_val), bucket-local Hamming
+verification via ``filter(members, bit_count(xor) <= t)`` over each
+bucket's collected (id, simhash) list, representative election via the
+minimum id among verified neighbours.
+
+Plan shape (``simhash_near_reps``): one exchange on (band_idx, band_val)
+serves both the bucket-size window and the member collection; one more on
+the doc id elects the representative. No join — and only (id, simhash)
+rows shuffle; callers join the small reps back onto their full rows.
 
 Scale notes: run AFTER exact dedup so identical texts (the worst band skew)
-are already collapsed; the band join shuffles on (band_idx, band_val) which
-is near-uniform after that; AQE skew-join splits any residual hot bucket.
-One-iteration min-representative labeling is the standard LSH
-approximation of connected components — documented, deterministic.
+are already collapsed; buckets wider than ``MAX_BAND_BUCKET`` are dropped,
+so per-bucket verify work is bounded by its square, and a hot bucket spills
+in the window buffer rather than skewing a join. One-iteration
+min-representative labeling is the standard LSH approximation of connected
+components — documented, deterministic.
 """
 
 from __future__ import annotations
@@ -18,7 +26,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ocr_parallel_spark.kernel.simhash import minhash_bands, minhash_signature
@@ -28,10 +36,10 @@ BAND_BITS = 64 // N_BANDS
 HAMMING_THRESHOLD = 3
 
 # A band bucket holding more than this many docs is degenerate (boilerplate
-# or adversarial near-constant content): joining it is quadratic for no
-# recall gain — every member already has 3 other band chances. Production
-# LSH dedup caps bucket width for exactly this reason; the cap keeps the
-# self-join linear in practice and is deterministic.
+# or adversarial near-constant content): pairing its members is quadratic
+# for no recall gain — every member already has 3 other band chances.
+# Production LSH dedup caps bucket width for exactly this reason; the cap
+# keeps candidate generation linear in practice and is deterministic.
 MAX_BAND_BUCKET = 256
 
 
@@ -49,7 +57,8 @@ def mark_simhash_near_dups(
     include all pairs within Hamming distance 3); verified with
     ``bit_count(a^b) <= threshold``; each verified doc maps to the minimum
     id in its candidate neighborhood, and ``is_near_dup`` is true when that
-    representative is a different, earlier doc.
+    representative is a different, earlier doc. Docs without a verified
+    neighbour get a NULL ``near_rep``.
 
     ``closure_rounds=0`` (default) is one-iteration min-representative
     labeling — the standard LSH approximation of connected components: a
@@ -62,6 +71,35 @@ def mark_simhash_near_dups(
     — drift chains longer than that are vanishingly rare — while staying
     a FIXED number of stages (no driver-side convergence loop at 100 TB).
     """
+    reps = simhash_near_reps(
+        df, simhash_col, id_col, hamming_threshold, max_bucket, closure_rounds
+    )
+    out = df.join(reps, df[id_col] == reps["_nd_id"], "left").drop("_nd_id")
+    return out.withColumn(
+        "is_near_dup",
+        F.coalesce(F.col("near_rep") != F.col(id_col), F.lit(False)),
+    )
+
+
+def simhash_near_reps(
+    df: DataFrame,
+    simhash_col: str = "simhash",
+    id_col: str = "url",
+    hamming_threshold: int = HAMMING_THRESHOLD,
+    max_bucket: int = MAX_BAND_BUCKET,
+    closure_rounds: int = 0,
+) -> DataFrame:
+    """(``_nd_id``, ``near_rep``) for every doc of ``df`` that has a
+    verified neighbour; semantics as in :func:`mark_simhash_near_dups`.
+
+    Reads only (id, simhash) — callers join the result back onto their
+    full rows, so wide rows never shuffle for near-dup work. Verification
+    is bucket-local: one exchange on (band_idx, band_val) sizes each
+    bucket and collects its members, and each member filters the bucket
+    for partners within ``hamming_threshold`` — the same pair multiset a
+    band self-join yields, at the same ``max_bucket``² bound per bucket,
+    with no join.
+    """
     ids = df.select(id_col, simhash_col).filter(F.col(simhash_col) != 0)
     # One pass over the input: posexplode the band array (a 4-way union
     # would scan the upstream table once per band).
@@ -71,44 +109,43 @@ def mark_simhash_near_dups(
         for i in range(N_BANDS)
     ]
     bands = ids.select(
-        F.col(id_col),
-        F.col(simhash_col),
+        F.struct(
+            F.col(id_col).alias("id"), F.col(simhash_col).alias("h")
+        ).alias("_nd_doc"),
         F.posexplode(F.array(*band_exprs)).alias("band_idx", "band_val"),
     )
-
     if max_bucket:
-        bucket_sizes = bands.groupBy("band_idx", "band_val").agg(
-            F.count(F.lit(1)).alias("_nd_bucket_n")
-        )
+        bucket = Window.partitionBy("band_idx", "band_val")
         bands = (
-            bands.join(bucket_sizes, ["band_idx", "band_val"])
+            bands.withColumn("_nd_bucket_n", F.count(F.lit(1)).over(bucket))
             .filter(F.col("_nd_bucket_n") <= max_bucket)
             .drop("_nd_bucket_n")
         )
-
-    left = bands.alias("l")
-    right = bands.alias("r")
+    # Same keys as the bucket window: the aggregate reuses its exchange.
+    members = bands.groupBy("band_idx", "band_val").agg(
+        F.collect_list("_nd_doc").alias("_nd_members")
+    )
+    me = F.col("_nd_me")
     pairs = (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_val") == F.col("r.band_val"))
-            & (F.col(f"l.{id_col}") != F.col(f"r.{id_col}")),
-        )
-        .filter(
-            F.bit_count(
-                F.col(f"l.{simhash_col}").bitwiseXOR(F.col(f"r.{simhash_col}"))
-            )
-            <= hamming_threshold
-        )
+        members.select(F.explode("_nd_members").alias("_nd_me"), "_nd_members")
         .select(
-            F.col(f"l.{id_col}").alias("_nd_id"),
-            F.col(f"r.{id_col}").alias("_nd_other"),
+            me["id"].alias("_nd_id"),
+            F.explode(
+                F.filter(
+                    "_nd_members",
+                    lambda o: (o["id"] != me["id"])
+                    & (
+                        F.bit_count(o["h"].bitwiseXOR(me["h"]))
+                        <= hamming_threshold
+                    ),
+                )
+            ).alias("_nd_o"),
         )
+        .select("_nd_id", F.col("_nd_o.id").alias("_nd_other"))
     )
     if closure_rounds > 0:
         # pairs is re-consumed every propagation round; without this the
-        # band self-join lineage re-executes per round. localCheckpoint
+        # bucket lineage re-executes per round. localCheckpoint
         # (not persist): persist pins blocks in the cache manager for the
         # SESSION lifetime with no handle for the caller to unpersist;
         # checkpoint blocks are freed by the ContextCleaner as soon as
@@ -138,11 +175,7 @@ def mark_simhash_near_dups(
                 F.coalesce(F.col("_min_nbr_rep"), F.col("near_rep")),
             ).alias("near_rep"),
         )
-    out = df.join(reps, df[id_col] == reps["_nd_id"], "left").drop("_nd_id")
-    return out.withColumn(
-        "is_near_dup",
-        F.coalesce(F.col("near_rep") != F.col(id_col), F.lit(False)),
-    )
+    return reps
 
 
 # ---- MinHash LSH (shingle Jaccard) ------------------------------------------

@@ -11,6 +11,12 @@ except the single Arrow kernel stage is whole-stage-codegen built-ins. The
 run's counters (A1/D3) are observed on the snapshot write that commits the
 result (``io.snapshot.commit_counted``), not here.
 
+Exchanges after the kernel: one by url (keep-first), one by content key
+(exact dedup: ``row_number`` and ``first`` share it), then the near-dup
+branch over the persisted result — one by band bucket and one by url, both
+over (url, simhash) rows only. Its reps are left-joined onto the persisted
+rows, which AQE plans as a broadcast: the full rows shuffle only twice.
+
 Order rationale (vs the reference's dedup-before-work): the kernel runs
 BEFORE the url-dedup shuffle, so the multi-MB html payloads never cross an
 exchange — only the ~10x-smaller extracted rows shuffle. At a 10^12-row
@@ -31,7 +37,7 @@ from ocr_parallel_spark.config import MAX_PAYLOAD_BYTES
 from ocr_parallel_spark.operators.classify import classify_status, filter_oversized
 from ocr_parallel_spark.operators.dedup import keep_first, mark_exact_content_dups
 from ocr_parallel_spark.operators.extraction import extract_pages, repartition_by_key
-from ocr_parallel_spark.operators.neardup import mark_simhash_near_dups
+from ocr_parallel_spark.operators.neardup import simhash_near_reps
 
 # X8 chooser: above this estimated duplicate-url rate, dropping dups
 # BEFORE the kernel wins — re-extracting that many duplicate payloads
@@ -122,16 +128,21 @@ def run_extraction_pipeline(
         from pyspark import StorageLevel
 
         deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
-        # Near-dup candidates only among exact-dedup survivors with real text.
+        # Near-dup candidates only among exact-dedup survivors with real
+        # text. Only their (url, simhash) rows feed the near-dup plan; the
+        # small reps join straight onto the full rows (AQE broadcasts
+        # them), so the wide rows never shuffle for near-dup work.
         survivors = deduped.filter(
             (~F.col("is_exact_dup")) & (F.col("status") == "found")
         ).select("url", "simhash")
-        marked = mark_simhash_near_dups(survivors, "simhash", "url").select(
-            "url", "near_rep", "is_near_dup"
-        )
+        reps = simhash_near_reps(survivors, "simhash", "url")
         deduped = (
-            deduped.join(marked, "url", "left")
-            .withColumn("is_near_dup", F.coalesce(F.col("is_near_dup"), F.lit(False)))
+            deduped.join(reps, deduped["url"] == reps["_nd_id"], "left")
+            .drop("_nd_id")
+            .withColumn(
+                "is_near_dup",
+                F.coalesce(F.col("near_rep") != F.col("url"), F.lit(False)),
+            )
         )
     return deduped
 

@@ -195,8 +195,8 @@ def synthesize_warc_fixture(spark: SparkSession, sf_dir: str) -> str:
 def response_bodies(recs: DataFrame, extra_cols: tuple = ()) -> DataFrame:
     """``response`` records -> (target_uri[, *extra_cols], body): HTTP
     framing stripped length-wise in one mapInPandas that pipelines with
-    the record splitter (same stage, no exchange — PLANS.md 'WARC
-    source'). Shared by the warc_extract gate and the curation/extract
+    the record splitter (same stage, no exchange — the 'WARC source'
+    plan that ``scripts/dump_plans.py`` writes). Shared by the warc_extract gate and the curation/extract
     jobs so their byte semantics cannot drift. ``extra_cols`` names
     string record columns (e.g. ``warc_date``) to carry through."""
     import pandas as pd  # noqa: F401

@@ -43,8 +43,9 @@ def main() -> None:
             "One MapInArrow boundary (the kernel); html bytes never cross an "
             "exchange (kernel runs on scan partitions, dedup windows shuffle "
             "only extracted rows); WindowGroupLimit cuts keep-first "
-            "duplicates map-side; extraction output persisted once for the "
-            "near-dup diamond.",
+            "duplicates map-side; exact dedup shuffles once by content "
+            "key; extraction output persisted once, near-dup reps computed "
+            "over (url, simhash) rows only and joined back onto it.",
             plan_of(out, "simple"),
         )
     )

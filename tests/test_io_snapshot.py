@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ocr_parallel_spark.io import SnapshotTable, resume_filter, run_resumable
+from ocr_parallel_spark.kernel.extract import ERROR_TYPES
 
 
 def _mkdf(spark, ids):
@@ -94,6 +95,12 @@ def test_lineage_counters_match_committed_rows(spark, tmp_path):
     ).first().asDict()
     assert {k: got[k] for k in c} == c
     assert c["errors"] > 0  # synthesis plants error rows
+    by_type = dict.fromkeys((f"errors_{e.lower()}" for e in ERROR_TYPES), 0)
+    for r in t.read(spark).groupBy("error_type").count().collect():
+        if r.error_type is not None:
+            by_type[f"errors_{r.error_type.lower()}"] = r["count"]
+    assert {k: got.get(k) for k in by_type} == by_type
+    assert sum(by_type.values()) == c["errors"]
     assert c["pages_extracted"] > 0 and c["exact_dups"] > 0
 
     again = run_resumable(pages, t, spark, transform, "url")

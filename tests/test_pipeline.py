@@ -6,6 +6,7 @@ url), error-as-data, dedup marking, and determinism across parallelism.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -216,3 +217,103 @@ def test_simhash_closure_collapses_chains(spark):
         for r in mark_simhash_near_dups(df2, closure_rounds=3).collect()
     }
     assert set(closed2.values()) == {"a"}, closed2
+
+
+def _near_dups_reference(rows, threshold, max_bucket, closure_rounds):
+    """Brute-force ``mark_simhash_near_dups``: (id, simhash) rows ->
+    {(id, simhash): (near_rep, is_near_dup)}, from the documented
+    semantics. Rows with simhash 0 take no part; a band bucket with more
+    than ``max_bucket`` rows yields no pairs; a candidate pair needs two
+    different non-NULL ids and Hamming distance <= ``threshold``."""
+    from collections import defaultdict
+
+    from ocr_parallel_spark.operators.neardup import BAND_BITS, N_BANDS
+
+    mask = (1 << 64) - 1
+    buckets = defaultdict(list)
+    for doc_id, h in rows:
+        if h == 0:
+            continue
+        for i in range(N_BANDS):
+            band = ((h & mask) >> (i * BAND_BITS)) & ((1 << BAND_BITS) - 1)
+            buckets[i, band].append((doc_id, h))
+    pairs = []
+    for members in buckets.values():
+        if len(members) > max_bucket:
+            continue
+        for a, ha in members:
+            for b, hb in members:
+                if (
+                    a is not None and b is not None and a != b
+                    and bin((ha ^ hb) & mask).count("1") <= threshold
+                ):
+                    pairs.append((a, b))
+    reps = {}
+    for a, b in pairs:
+        reps[a] = min(reps.get(a, a), b)
+    for _ in range(closure_rounds):
+        nbr = {}
+        for a, b in pairs:
+            nbr[a] = min(nbr.get(a, reps[b]), reps[b])
+        reps = {a: min(r, nbr[a]) for a, r in reps.items()}
+    return {
+        (doc_id, h): (reps.get(doc_id), doc_id in reps and reps[doc_id] != doc_id)
+        for doc_id, h in rows
+    }
+
+
+@pytest.mark.parametrize("closure_rounds", [0, 2])
+def test_simhash_near_dups_match_reference(spark, closure_rounds):
+    """``mark_simhash_near_dups`` equals the brute-force reference on a
+    seeded input with: clusters of docs within Hamming 3 of a base (so
+    pairs and chains), one band bucket of ``max_bucket + 1`` docs holding
+    a pair that shares no other band, ``simhash = 0`` rows and a NULL id."""
+    import random
+
+    from ocr_parallel_spark.operators.neardup import mark_simhash_near_dups
+
+    rng = random.Random(20261017)
+    max_bucket, threshold = 8, 3
+
+    def signed(h):
+        return h - (1 << 64) if h >= 1 << 63 else h
+
+    def flip(h, n):
+        for bit in rng.sample(range(64), n):
+            h ^= 1 << bit
+        return h
+
+    hashes = []
+    for _ in range(12):
+        base = rng.getrandbits(64)
+        hashes.append(base)
+        hashes += [flip(base, rng.randint(0, 3)) for _ in range(rng.randint(1, 4))]
+    # the hot bucket: max_bucket + 1 docs share band 0; two of them are
+    # within Hamming 3 but share band 0 only, so they must not pair
+    hot_low = rng.getrandbits(16)
+    hot = [(rng.getrandbits(48) << 16) | hot_low for _ in range(max_bucket)]
+    hot.append(hot[0] ^ (1 << 16 | 1 << 32 | 1 << 48))
+    hashes += hot
+    null_h = signed(hashes[0])  # a NULL id on a cluster base's simhash
+    # ids in random order, so a cluster's minimum id is often not its
+    # base and one-iteration labels differ from the closure's
+    rng.shuffle(hashes)
+    rows = [(f"u{i:03d}", signed(h)) for i, h in enumerate(hashes)]
+    rows += [("zero-a", 0), ("zero-b", 0), (None, null_h)]
+
+    want = _near_dups_reference(rows, threshold, max_bucket, closure_rounds)
+    df = spark.createDataFrame(rows, "url string, simhash long")
+    out = mark_simhash_near_dups(
+        df, hamming_threshold=threshold, max_bucket=max_bucket,
+        closure_rounds=closure_rounds,
+    ).collect()
+    assert len(out) == len(rows)
+    assert {(r.url, r.simhash): (r.near_rep, r.is_near_dup) for r in out} == want
+    # the input exercises what it should: near-dups exist, the capped
+    # bucket and the NULL id yield none, and closure changes labels
+    assert sum(d for _, d in want.values()) > 5
+    hot_hashes = {signed(h) for h in hot}
+    assert all(v == (None, False) for (_, h), v in want.items() if h in hot_hashes)
+    assert want[None, null_h] == (None, False)
+    if closure_rounds:
+        assert want != _near_dups_reference(rows, threshold, max_bucket, 0)

@@ -53,6 +53,36 @@ def test_keep_first_gets_mapside_rank_limit(spark, sf_dir):
     assert "WindowGroupLimit" in pre_exchange
 
 
+def test_exact_content_dups_shuffle_once(spark, sf_dir):
+    """row_number and first over the content key share one window, so
+    exact dedup shuffles the extracted rows once."""
+    from ocr_parallel_spark.operators.dedup import mark_exact_content_dups
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.col("source").alias("url"), F.col("doc_id").alias("warc_ts"), "text"
+    )
+    p = plan_of(mark_exact_content_dups(docs, "text", ["warc_ts", "url"]), "simple")
+    assert p.count("Exchange hashpartitioning") == 1
+
+
+def test_simhash_near_reps_verify_is_bucket_local(spark, sf_dir):
+    """Near-dup reps: one exchange by band bucket (shared by the size
+    window and the member collection), one by doc id, and no join."""
+    import re
+
+    from ocr_parallel_spark.operators.neardup import simhash_near_reps
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.col("doc_id").cast("string").alias("url"),
+        F.xxhash64("text").alias("simhash"),
+    )
+    p = plan_of(simhash_near_reps(docs, "simhash", "url"), "simple")
+    assert p.count("Exchange hashpartitioning") == 2
+    assert re.search(r"Exchange hashpartitioning\(band_idx#\d+, band_val#\d+L?,", p)
+    assert re.search(r"Exchange hashpartitioning\(_nd_id#\d+,", p)
+    assert "Join" not in p
+
+
 def test_theta_join_broadcasts_target_side(spark, sf_dir):
     from ocr_parallel_spark.queries_catalog import q_theta_join_localization
 
