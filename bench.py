@@ -114,6 +114,8 @@ BENCH_ONLY = {"ann_lsh_topk_wide": _ann_lsh_topk_wide}
 def build_spark(cpus: int, app: str = "ocr-parallel-spark-bench"):
     from pyspark.sql import SparkSession
 
+    # The headline's frozen profile, not config.SESSION_CONFS, so its walls
+    # stay comparable with every BENCH_r0*.json taken under it.
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)

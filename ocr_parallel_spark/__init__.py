@@ -14,10 +14,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from ocr_parallel_spark.config import (
-    ARROW_MAX_RECORDS_PER_BATCH,
-    DEFAULT_SHUFFLE_PARTITIONS,
-)
+from ocr_parallel_spark.config import SESSION_CONFS
 
 __version__ = "0.1.0"
 
@@ -25,33 +22,17 @@ __version__ = "0.1.0"
 def get_spark(
     master: str | None = None,
     app_name: str = "ocr-parallel-spark",
-    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
-    extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Session factory with the engine's execution profile.
-
-    AQE on (runtime coalesce + skew-join split, north_rule skew handling),
-    Arrow enabled with small batches (MB-scale html blobs), adaptive
-    shuffle sizing. On a real cluster the same confs ship via
-    ``spark-submit --conf``; master defaults to local[all cores] here.
-    """
+    """Session with the engine's one profile, ``config.SESSION_CONFS``:
+    the ``--conf`` set ``scripts/submit.py`` gives every job. Beyond it
+    only deployment settings: master (default ``local[SPARK_GRAFT_CPUS]``,
+    all cores when unset), app name, driver memory, no UI."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
+    return (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(ARROW_MAX_RECORDS_PER_BATCH),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config(map=dict(SESSION_CONFS))
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()

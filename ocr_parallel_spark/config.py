@@ -38,14 +38,39 @@ MAX_LINK_DENSITY = 0.35
 PDF_MAGIC = b"%FAKEPDF"
 
 # ---- execution (Spark-native) -----------------------------------------------
-# html payloads are MB-scale at Common-Crawl; keep Arrow batches small so one
-# batch of blobs fits comfortably in executor memory.
-ARROW_MAX_RECORDS_PER_BATCH = 256
+# The one session profile: every submitted job (scripts/submit.py prints it
+# as ``--conf`` pairs), ``get_spark`` sessions (tests, oracle checks, plan
+# dumps) and the benchmark run under exactly these runtime-settable
+# ``spark.sql.*`` keys. Shuffle widths come from the data: with no
+# ``spark.sql.shuffle.partitions`` set, AQE coalesces each 200-way shuffle
+# down to about ``defaultParallelism`` tasks. Timings are the perfbench job
+# walls on 4 cores: extract_heavy (job_extract over 1000 heavy pages) and
+# full_process.
+SESSION_CONFS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    # Splits oversized hot-key partitions of shuffled joins.
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    # Without coalescing every reduce stage ran 200 tasks of ~15 ms and
+    # extract_heavy took 26-29 s for ~2 core-s of kernel (5-7 s with).
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    # With parallelismFirst, coalescing then never drops below
+    # defaultParallelism tasks; the 1 MB default packs small shuffles
+    # into fewer tasks than cores (full_process 11.5-12.3 s vs 7.4-8.2 s).
+    ("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1"),
+    # Lets AQE coalesce persisted frames too: without it the near-dup
+    # persist kept 200 partitions (extract_heavy 15-17 s vs 5.5-6.4 s).
+    ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"),
+    # CC pages are KB-MB blobs: small scan splits keep every core fed.
+    ("spark.sql.files.maxPartitionBytes", "16m"),
+    # Rows per Arrow batch across every Python boundary (the kernel's
+    # mapInArrow, the multimodal UDFs). A row count, not a byte bound: at
+    # MB-scale CC pages one batch of 2048 html blobs is GB-sized.
+    ("spark.sql.execution.arrow.maxRecordsPerBatch", "2048"),
+    # Arrow for toPandas and createDataFrame(pandas).
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    # Timestamps (warc_ts) render and truncate the same on every host.
+    ("spark.sql.session.timeZone", "UTC"),
+)
 
 # Salt fan-out for pathologically hot domains (north_rule skew handling).
 DOMAIN_SALT_BUCKETS = 16
-
-# Shuffle partitions of ``get_spark`` sessions (tests, notebooks). Submitted
-# jobs leave spark.sql.shuffle.partitions unset and let AQE coalesce each
-# shuffle to the data (scripts/submit.py JOB_CONFS).
-DEFAULT_SHUFFLE_PARTITIONS = 32

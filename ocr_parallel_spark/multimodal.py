@@ -20,9 +20,10 @@ the decode boundary is explicit:
   (1 row -> N frame/chunk rows via ``explode(sequence(...))``) — JVM-side.
 
 At 10^12 scale the media table is Iceberg-partitioned like the pages table
-(bucket by media_id); batch memory is bounded by
-``spark.sql.execution.arrow.maxRecordsPerBatch`` (payloads are MBs — keep
-it low, as for html).
+(bucket by media_id); batch memory is set by
+``spark.sql.execution.arrow.maxRecordsPerBatch`` (2048 rows in
+``config.SESSION_CONFS``, as for html). That is a row count, not a byte
+bound: with MB payloads one batch is GB-sized.
 """
 
 from __future__ import annotations

@@ -24,12 +24,11 @@ def plan_of(df, mode="formatted"):
 
 
 def main() -> None:
-    from bench import build_spark
-    from ocr_parallel_spark import queries_catalog
+    from ocr_parallel_spark import get_spark, queries_catalog
     from ocr_parallel_spark.pages import synthesize_pages
     from ocr_parallel_spark.pipeline import run_extraction_pipeline
 
-    spark = build_spark(8, "dump-plans")
+    spark = get_spark(master="local[8]", app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     q = queries_catalog.queries()
 

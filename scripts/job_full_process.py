@@ -118,7 +118,14 @@ def main(argv=None) -> dict:
     ap.add_argument("--output", required=True, help="snapshot table dir")
     ap.add_argument("--chunk-size", type=int, default=DEFAULT_CHUNK)
     ap.add_argument("--overlap", type=int, default=DEFAULT_OVERLAP)
-    ap.add_argument("--start-marker", action="append", default=None)
+    ap.add_argument(
+        "--start-marker",
+        action="append",
+        default=None,
+        help="boundary start marker (repeatable). REQUIRED in production: "
+        "the defaults are synthetic-corpus literals that will never fire "
+        "on real pages.",
+    )
     ap.add_argument("--end-after-marker", action="append", default=None)
     ap.add_argument("--end-before-marker", action="append", default=None)
     args = ap.parse_args(argv)
@@ -128,7 +135,7 @@ def main(argv=None) -> dict:
 
     spark = SparkSession.builder.appName("ocr-parallel-spark-full-process").getOrCreate()
 
-    from ocr_parallel_spark.io.snapshot import SnapshotTable
+    from ocr_parallel_spark.io.snapshot import SnapshotTable, commit_counted
     from ocr_parallel_spark.queries_catalog import (
         BOUNDARY_END_AFTER,
         BOUNDARY_END_BEFORE,
@@ -155,16 +162,7 @@ def main(argv=None) -> dict:
         id_col=args.id_col,
         committed=table.read(spark),
     )
-    from pyspark import StorageLevel
-
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    n = out.count()
-    if n == 0:
-        prior = table.current_snapshot()
-        snap = {"ordinal": prior["ordinal"] if prior else -1, "noop": True}
-    else:
-        snap = table.append(out, lineage={"rows_written": n, "targets": args.targets})
-    out.unpersist()
+    snap = commit_counted(table, out, {"targets": args.targets})
     print(json.dumps(snap))
     spark.stop()
     return snap

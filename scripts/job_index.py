@@ -62,7 +62,11 @@ def main() -> None:
         build_lsh_index,
         kmeans_centroids,
     )
-    from ocr_parallel_spark.io.snapshot import SnapshotTable, run_resumable
+    from ocr_parallel_spark.io.snapshot import (
+        SnapshotTable,
+        commit_counted,
+        run_resumable,
+    )
 
     vectors = spark.read.parquet(args.input)
     table = SnapshotTable(args.output)
@@ -149,7 +153,9 @@ def main() -> None:
         lineage = params
 
     if args.rebuild:
-        snap = table.overwrite(build(vectors), lineage={**lineage, "mode": "rebuild"})
+        snap = commit_counted(
+            table, build(vectors), {**lineage, "mode": "rebuild"}, replace=True
+        )
     else:
         snap = run_resumable(
             vectors, table, spark, build, key_col="vec_id", lineage=lineage

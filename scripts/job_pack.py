@@ -148,6 +148,10 @@ def main() -> None:
     args = ap.parse_args()
     if bool(args.shards) != bool(args.shards_output):
         raise SystemExit("--shards and --shards-output go together")
+    if bool(args.input) == bool(args.from_verdicts):
+        raise SystemExit("exactly one of --input / --from-verdicts required")
+    if args.verdicts_since is not None and not args.from_verdicts:
+        raise SystemExit("--verdicts-since requires --from-verdicts")
 
     from pyspark.sql import SparkSession
 
@@ -155,10 +159,6 @@ def main() -> None:
 
     from ocr_parallel_spark.io.snapshot import SnapshotTable, run_resumable
 
-    if bool(args.input) == bool(args.from_verdicts):
-        raise SystemExit("exactly one of --input / --from-verdicts required")
-    if args.verdicts_since is not None and not args.from_verdicts:
-        raise SystemExit("--verdicts-since requires --from-verdicts")
     if args.from_verdicts:
         vt = SnapshotTable(args.from_verdicts)
         if args.verdicts_since is not None:

@@ -1,4 +1,5 @@
-"""Shared Spark session for the test suite (local[*], AQE on, Arrow on)."""
+"""Shared Spark session for the test suite: local[4] with the engine's one
+profile (``config.SESSION_CONFS``), the confs every submitted job runs under."""
 
 from __future__ import annotations
 

@@ -67,3 +67,35 @@ def test_full_process_job_end_to_end(spark, sf_dir, tmp_path):
         committed=table.read(spark),
     )
     assert remaining.count() == 0
+
+
+def test_full_process_main_commits_counted_and_resumes(spark, sf_dir, tmp_path):
+    """main() commits through commit_counted: rows_written is the number
+    of committed rows, and a rerun over the same input commits nothing."""
+    pages_dir = str(tmp_path / "pages")
+    synthesize_pages(spark, sf_dir).drop("doc_id").write.parquet(pages_dir)
+    targets_csv = tmp_path / "targets.csv"
+    targets_csv.write_text(
+        "inmueble,folio\ntable query value,TABLE\norder arrange,ORDER\n"
+    )
+    out = tmp_path / "results"
+    argv = ["--input", pages_dir, "--targets", str(targets_csv),
+            "--output", str(out), "--chunk-size", "8", "--overlap", "2",
+            "--start-marker", "STREAM WINDOW", "--end-after-marker", "AGG QUERY",
+            "--end-before-marker", "SLOW FILTER"]
+    old_stop = type(spark).stop
+    type(spark).stop = lambda self: None  # the job's session is the suite's
+    try:
+        snap1 = job.main(argv)
+        current = (out / "_manifests" / "CURRENT").read_text()
+        snap2 = job.main(argv)
+    finally:
+        type(spark).stop = old_stop
+    table = SnapshotTable(str(out))
+    n = table.read(spark).count()
+    assert snap1["ordinal"] == 0 and not snap1.get("noop")
+    assert snap1["lineage"]["rows_written"] == n > 0
+    assert snap1["lineage"]["targets"] == str(targets_csv)
+    assert snap2["noop"] is True and snap2["ordinal"] == 0
+    assert (out / "_manifests" / "CURRENT").read_text() == current
+    assert list((out / "data").iterdir()) == [out / "data" / "run-000000"]

@@ -95,6 +95,9 @@ def test_ivf_rebuild_refits_and_overwrites(spark, sf_dir, tmp_path, capsys):
     snap = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert snap["lineage"]["mode"] == "rebuild"
     assert len(snap["data_dirs"]) == 1  # overwrite, not append
+    # counted on the overwrite itself, like every other commit
+    assert snap["lineage"]["rows_written"] == 100
+    assert SnapshotTable(out).read(spark).count() == 100
     assert len(json.load(open(f"{out}/{job.IVF_CENTROIDS_FILE}"))) == 8
 
 

@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import importlib.util
 import pathlib
+import sys
 
+import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ocr_parallel_spark.io.snapshot import SnapshotTable, run_resumable
@@ -181,3 +184,23 @@ def test_pack_write_shards(spark, sf_dir, tmp_path):
         for r in spark.read.parquet(out).collect()
     }
     assert again == want
+
+
+@pytest.mark.parametrize(
+    "argv, message",
+    [
+        ([], "exactly one of --input / --from-verdicts required"),
+        (["--input", "d", "--from-verdicts", "v"],
+         "exactly one of --input / --from-verdicts required"),
+        (["--input", "d", "--verdicts-since", "3"],
+         "--verdicts-since requires --from-verdicts"),
+    ],
+)
+def test_bad_arguments_fail_before_spark_starts(argv, message, monkeypatch):
+    def no_spark(self):
+        raise AssertionError("Spark started before the arguments were checked")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_spark)
+    monkeypatch.setattr(sys, "argv", ["job_pack.py", "--output", "o", *argv])
+    with pytest.raises(SystemExit, match=message):
+        job.main()
