@@ -138,54 +138,28 @@ def _first_marker_pos(window: Column, markers: list[str]) -> Column:
     )
 
 
-# Segment size for the two-level window extraction. Spark's
-# UTF8String.substring walks bytes from position 0 to resolve a CHAR
-# offset (variable-width UTF-8), so taking W windows directly from an
-# n-char text costs O(W x n) — measured 2.3 s/group on 145 KB texts.
-# Cutting the text ONCE into SEG-char segments (each carrying a
-# window-size overlap tail) and slicing windows from their segment makes
-# the walks O(n^2/SEG + W x SEG): effectively linear for fixed params,
-# and safe at the reference's own 1500-page document envelope.
-WINDOW_SEG = 3000  # divisible by START_STRIDE so local offsets stay aligned
+def _windows(full_upper: Column, window_size: int) -> Column:
+    """Array of (i, w) sliding-window structs with Python
+    ``range(0, len - window, stride)`` semantics, built in ONE regex pass.
 
-
-def _segments(full_upper: Column, overlap: int) -> Column:
-    """The text cut once into WINDOW_SEG-char segments, each extended by
-    ``overlap`` chars so any window starting inside a segment is fully
-    contained in it. MUST be materialized as its own column: inlined into
-    the window lambda it would be rebuilt per element."""
-    n = F.length(full_upper).cast("long")
-    n_segs = F.ceil(n / F.lit(WINDOW_SEG)).cast("long")
-    return F.transform(
-        F.sequence(F.lit(0).cast("long"), F.greatest(n_segs - 1, F.lit(0))),
-        lambda k: F.substring(
-            full_upper, (k * WINDOW_SEG + 1).cast("int"), WINDOW_SEG + overlap
-        ),
+    Spark's ``UTF8String.substring`` resolves a CHAR offset by walking the
+    UTF-8 bytes from position 0 (no ASCII fast path), so slicing each
+    window out of the text costs a walk per window. Here each match
+    consumes one stride and captures the next ``window_size`` chars by
+    lookahead; the extra ``.`` after the capture needs one more char, so
+    the last window starts strictly before ``len - window`` (empty when
+    len <= window). Java's ``.`` under ``(?s)`` matches one whole code
+    point, line terminators included, so offsets stay in Spark's char
+    units."""
+    wins = F.regexp_extract_all(
+        full_upper,
+        F.lit(f"(?s)(?=(.{{{window_size}}}).).{{{START_STRIDE}}}"),
+        1,
     )
-
-
-def _windows(segments: Column, full_upper: Column, window_size: int) -> Column:
-    """Array of (i, w) sliding-window structs: Python
-    ``range(0, len - window, stride)`` semantics (empty when
-    len <= window), window text sliced from its pre-cut segment."""
-    n = F.length(full_upper).cast("long")
-    offsets = F.when(
-        n - window_size >= 1,
-        F.sequence(
-            F.lit(0).cast("long"),
-            (n - window_size - 1).cast("long"),
-            F.lit(START_STRIDE).cast("long"),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
     return F.transform(
-        offsets,
-        lambda i: F.struct(
-            i.alias("i"),
-            F.substring(
-                F.element_at(segments, (i / WINDOW_SEG).cast("int") + 1),
-                (i % WINDOW_SEG + 1).cast("int"),
-                window_size,
-            ).alias("w"),
+        wins,
+        lambda w, k: F.struct(
+            (k.cast("long") * START_STRIDE).alias("i"), w.alias("w")
         ),
     )
 
@@ -314,12 +288,10 @@ def refine_pages_with_boundaries(
     c = F.col
     t_count = F.size(c("tokens"))
 
-    # --- stage 1: window scans over the aggregate-produced text, via the
-    # materialized-once segment array (see WINDOW_SEG).
-    g = (
-        g.withColumn("_segs", _segments(c("_upper"), START_WINDOW))
-        .withColumn("_wins", _windows(c("_segs"), c("_upper"), START_WINDOW))
-        .withColumn("_fwins", _windows(c("_segs"), c("_upper"), FALLBACK_WINDOW))
+    # --- stage 1: window scans over the aggregate-produced text, one
+    # regex pass per window size (see _windows).
+    g = g.withColumn("_wins", _windows(c("_upper"), START_WINDOW)).withColumn(
+        "_fwins", _windows(c("_upper"), FALLBACK_WINDOW)
     )
 
     # --- stage 2: F5 main scan — earliest qualifying window w/ max hits.

@@ -22,6 +22,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ocr_parallel_spark.config import DOMAIN_SALT_BUCKETS
 from ocr_parallel_spark.kernel.extract import extract_payload
 
 # Arrow-side schema of the extraction result columns.
@@ -111,7 +112,9 @@ def repartition_by_key(df: DataFrame, key_col: str = "url") -> DataFrame:
 
 
 def salted_key(
-    group_col: str = "domain", fine_col: str = "url", salt_buckets: int = 16
+    group_col: str = "domain",
+    fine_col: str = "url",
+    salt_buckets: int = DOMAIN_SALT_BUCKETS,
 ):
     """Salted grouping key for per-domain aggregations over skewed hosts
     (north_rule): aggregate by (domain, salt-of-url) first, then re-aggregate

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ocr_parallel_spark.config import MATCH_THRESHOLD
+
 
 def tokenize(name_col: Column | str) -> Column:
     """F2: searchable token array from an entity name (distinct, order by
@@ -101,7 +103,7 @@ def expand_variants(
     expanded = F.flatten(
         F.transform(
             tokens_col,
-            lambda t: F.coalesce(syn_map.getItem(t), F.array(t)),
+            lambda t: F.coalesce(F.try_element_at(syn_map, t), F.array(t)),
         )
     )
     return F.array_distinct(expanded)
@@ -175,7 +177,7 @@ def localize(
     chunks: DataFrame,
     tokens_col: str = "tokens",
     text_col: str = "chunk_text",
-    threshold: float = 0.6,
+    threshold: float = MATCH_THRESHOLD,
 ) -> DataFrame:
     """J2: broadcast theta-join targets x chunks on score >= threshold.
 

@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ocr_parallel_spark.config import MATCH_THRESHOLD
 from ocr_parallel_spark.fanout import fan_out
 from ocr_parallel_spark.functions.similarity import brute_force_topk
 from ocr_parallel_spark.functions.text_quality import (
@@ -168,7 +169,7 @@ def q_theta_join_localization(spark, sf_dir):
     (text_localization.py:202-268; scorer :168-199)."""
     d = _docs(spark, sf_dir).select("doc_id", F.col("norm").alias("chunk_text"))
     targets = spark.createDataFrame(TARGETS, "target_id int, tokens array<string>")
-    hits = localize(targets, d, "tokens", "chunk_text", 0.6)
+    hits = localize(targets, d, "tokens", "chunk_text")
     return hits.select(
         "target_id", "doc_id", F.round(F.col("score"), 4).alias("score")
     )
@@ -433,7 +434,7 @@ def q_full_process(spark, sf_dir):
     targets = spark.createDataFrame(
         TARGETS, "target_id int, tokens array<string>"
     )
-    loc = localize(targets, chunks, "tokens", "chunk_text", 0.6)
+    loc = localize(targets, chunks, "tokens", "chunk_text")
     pages = loc.select(
         "target_id",
         "source",
@@ -464,7 +465,7 @@ def q_full_process_capped(spark, sf_dir):
     targets = spark.createDataFrame(
         TARGETS, "target_id int, tokens array<string>"
     )
-    loc = localize(targets, chunks, "tokens", "chunk_text", 0.6)
+    loc = localize(targets, chunks, "tokens", "chunk_text")
     pages = loc.select(
         "target_id",
         "source",
@@ -3081,8 +3082,8 @@ def q_localization_variants(spark, sf_dir):
         "doc_id",
         F.round(raw_s, 4).alias("score_raw"),
         F.round(exp_s, 4).alias("score_expanded"),
-        (raw_s >= 0.6).alias("matched_raw"),
-        (exp_s >= 0.6).alias("matched_expanded"),
+        (raw_s >= MATCH_THRESHOLD).alias("matched_raw"),
+        (exp_s >= MATCH_THRESHOLD).alias("matched_expanded"),
     )
 
 
@@ -3115,7 +3116,7 @@ def q_full_process_boundaries(spark, sf_dir):
         "target_id int, tokens array<string>, anchor string",
     )
     loc = localize(
-        targets.select("target_id", "tokens"), chunks, "tokens", "chunk_text", 0.6
+        targets.select("target_id", "tokens"), chunks, "tokens", "chunk_text"
     )
     cand = loc.select(
         "target_id",
@@ -3215,7 +3216,7 @@ def q_two_pass_localization(spark, sf_dir):
     gates the costly work, the plan-shape analog of predicate pushdown."""
     d = _docs(spark, sf_dir).select("doc_id", F.col("norm").alias("chunk_text"))
     targets = spark.createDataFrame(TARGETS, "target_id int, tokens array<string>")
-    p1 = localize(targets, d, "tokens", "chunk_text", 0.6).select(
+    p1 = localize(targets, d, "tokens", "chunk_text").select(
         "target_id", "doc_id", F.round(F.col("score"), 4).alias("score")
     )
     matched = p1.select("target_id").distinct()
@@ -3236,7 +3237,7 @@ def q_salted_rollup(spark, sf_dir):
     from ocr_parallel_spark.operators.extraction import salted_key
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    salted = docs.withColumn("_sk", salted_key("lang", "doc_id", 16))
+    salted = docs.withColumn("_sk", salted_key("lang", "doc_id"))
     partial = salted.groupBy("lang", "_sk").agg(
         F.count(F.lit(1)).alias("_n"), F.sum("n_chars").alias("_chars")
     )

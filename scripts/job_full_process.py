@@ -75,7 +75,7 @@ def build_output(spark, pages_df, targets_csv: str, chunk_size: int,
     )
     chunks = overlap_chunks(docs, "source", "doc_id", "norm", chunk_size, overlap)
     loc = localize(
-        targets.select("target_id", "tokens"), chunks, "tokens", "chunk_text", 0.6
+        targets.select("target_id", "tokens"), chunks, "tokens", "chunk_text"
     )
     # Resume happens HERE, before the expensive boundary refinement: a
     # (target, source) pair already in the committed snapshot is dropped

@@ -207,7 +207,26 @@ def _page(*parts: str, pad: int = 120) -> str:
     return body
 
 
+def _sized(n: int, body: str, at_end: bool = False) -> str:
+    """A page of exactly ``n`` chars: ``body`` first (or last), filler
+    around it."""
+    pad = FILLER * (n // len(FILLER) + 1)
+    s = pad[: n - len(body)] + body if at_end else (body + pad)[:n]
+    assert len(s) == n
+    return s
+
+
+def _joined_to(n: int, last_page: str) -> dict[int, str]:
+    """Two pages whose "\\n\\n"-joined text is exactly ``n`` chars; the
+    second page is ``last_page`` and the first is filler."""
+    first = _sized(n - B.PAGE_SEP_LEN - len(last_page), "")
+    pages = {0: first, 1: last_page}
+    assert len("\n\n".join(pages.values())) == n
+    return pages
+
+
 def test_branch_targeted_cases(spark):
+    W, FW = B.START_WINDOW, B.FALLBACK_WINDOW
     cases = [
         # 0: clean boundaries — start marker + tokens in one window,
         # after-marker a bit later (section fallback +500).
@@ -257,6 +276,43 @@ def test_branch_targeted_cases(spark):
             },
             ["GOLF", "HOTEL"],
             "GOLF",
+        ),
+        # 5-7: window end rule, range(0, len - W, stride). Joined length
+        # W has no main window; W + 1 has only the one at 0; W + 51 has
+        # a last window at 50 that alone holds the marker. The anchor is
+        # absent, so the fallback scan cannot stand in for a lost window.
+        (
+            _joined_to(W, _sized(W - 102, "ALPHA BRAVO qqstart alpha ")),
+            ["ALPHA", "BRAVO"],
+            "ZZNOANCHOR",
+        ),
+        (
+            _joined_to(W + 1, _sized(W - 101, "ALPHA BRAVO qqstart alpha ")),
+            ["ALPHA", "BRAVO"],
+            "ZZNOANCHOR",
+        ),
+        (
+            _joined_to(W + 51, _sized(W - 52, " BRAVO qqstart alpha", True) + "."),
+            ["ALPHA", "BRAVO"],
+            "ZZNOANCHOR",
+        ),
+        # 8-10: the same end rule for the fallback scan (no start marker
+        # anywhere, text shorter than W): joined length FW, FW + 1, and
+        # FW + 51 with the tokens and anchor only in the last window.
+        (
+            _joined_to(FW, _sized(FW - 102, "ECHO FOXTROT 77 ")),
+            ["ECHO", "FOXTROT", "77"],
+            "77",
+        ),
+        (
+            _joined_to(FW + 1, _sized(FW - 101, "ECHO FOXTROT 77 ")),
+            ["ECHO", "FOXTROT", "77"],
+            "77",
+        ),
+        (
+            _joined_to(FW + 51, _sized(FW - 52, " ECHO FOXTROT 77", True) + "."),
+            ["ECHO", "FOXTROT", "77"],
+            "77",
         ),
     ]
     _check(spark, cases)
@@ -370,11 +426,26 @@ def test_multibyte_chars_keep_char_offsets(spark):
             ["PÄPA", "QÜEBEC"],
             "PÄPA",
         ),
+        # supplementary-plane chars (one code point, two UTF-16 units),
+        # CRLF and U+0085 line breaks before the start marker: the
+        # window scan must step one code point at a time, like Python.
+        (
+            {
+                0: _page("😀 𝔘 mixed\r\nlines\u0085next 😀😀 𝔘𝔘 " * 4),
+                1: _page("\r\n😀 SIERRA TANGO\u0085 qqstart alpha SIERRA TANGO"),
+                2: _page("𝔘 body\r\n qqend beta closing 😀"),
+            },
+            ["SIERRA", "TANGO"],
+            "SIERRA",
+        ),
     ]
     _check(spark, cases)
-    # sanity: the text really is multi-byte (chars != bytes)
-    t = cases[0][0][0]
-    assert len(t.encode("utf-8")) > len(t)
+    # sanity: the texts really are multi-byte (chars != bytes), and the
+    # second case's first page is wider than chars in UTF-16 too
+    for page_texts, _tokens, _anchor in cases:
+        t = page_texts[0]
+        assert len(t.encode("utf-8")) > len(t)
+    assert len(cases[1][0][0].encode("utf-16-le")) > 2 * len(cases[1][0][0])
 
 
 @pytest.mark.parametrize("seed", [7, 42])
@@ -408,10 +479,11 @@ def test_randomized_agreement(spark, seed):
 
 def test_large_document_scan_is_not_quadratic(spark):
     """Scale guard: a single 800-page (~120 KB text) group must refine in
-    seconds. Before the segmented window extraction this was minutes —
-    UTF8String resolves char offsets by walking from position 0, so
-    direct substring windows cost O(windows x position). The mirror
-    (linear Python) cross-checks the answer at the same size."""
+    seconds. UTF8String resolves a char offset by walking from position
+    0, so windows taken by substring at their offsets cost
+    O(windows x position) — minutes at this size. The windows come from
+    one regex pass over the text instead. The mirror (linear Python)
+    cross-checks the answer at the same size."""
     import time
 
     pages = {
@@ -428,7 +500,7 @@ def test_large_document_scan_is_not_quadratic(spark):
     r = got[0]
     assert (r.method, r.start_char, r.end_char) == (method, start, end)
     assert r.pages_csv == ",".join(str(p) for p in pages_)
-    # generous bound: ~3 s typical with segments, minutes without
+    # generous bound: a few seconds typical, minutes if quadratic
     assert wall < 60, f"boundary scan took {wall:.0f}s — quadratic regression?"
 
 
