@@ -1,6 +1,6 @@
 """Bloom-filter sidecar for cross-run dedup prefiltering.
 
-The cross-run exact dedup in scripts/job_curate.py semi-joins every new
+The cross-run exact dedup in curation_pipeline.py semi-joins every new
 run's eligible docs against the COMMITTED kept-hash set. Correct — but at
 10^12 committed documents that semi-join shuffles a multi-terabyte hash
 column on every incremental run, even when the new slice contains almost
@@ -45,6 +45,9 @@ from pyspark.sql import functions as F
 # 8 hex chars (32 bits) of the sha256 digest per hash function; the
 # digest has 64 hex chars, so at most 8 independent slices.
 BLOOM_MAX_HASHES = 8
+# Hash functions per key: ~1.2% false positives at 10 bits per key. The
+# curation job records it in its sidecar's lineage.
+BLOOM_HASHES = 4
 
 
 def _check_params(n_bits: int, n_hashes: int) -> None:
@@ -69,7 +72,7 @@ def _bloom_positions(key: Column, n_bits: int, n_hashes: int) -> list[Column]:
 
 
 def bloom_build(
-    df: DataFrame, key_col: str, n_bits: int, n_hashes: int = 4
+    df: DataFrame, key_col: str, n_bits: int, n_hashes: int = BLOOM_HASHES
 ) -> DataFrame:
     """(word_idx, word) rows — the sparse 64-bit-word packing of the bit
     array over ``df``'s keys. One explode + one keyed agg whose output is
@@ -110,7 +113,7 @@ def bloom_probe(
     key_col: str,
     words: DataFrame,
     n_bits: int,
-    n_hashes: int = 4,
+    n_hashes: int = BLOOM_HASHES,
     out_col: str = "maybe_seen",
 ) -> DataFrame:
     """Add ``out_col``: true iff ALL of the key's positions are set.

@@ -1,6 +1,6 @@
 """Web-corpus curation expressions: line synthesis, repetition signals,
 deterministic stratified sampling, PII scrubbing, and the per-document
-screen job_curate runs first (``curate_docs``).
+screen the curation composition runs first (``curate_docs``).
 
 These extend the training-data toolkit (SURVEY §2.8 beyond-reference
 scope) with the CCNet/Gopher-style curation steps a 100 TB text pipeline
@@ -140,7 +140,7 @@ def curate_docs(docs: DataFrame, blocked_hosts: DataFrame) -> DataFrame:
     count and the host blocklist. Each signal is a row-local projection
     or a broadcast join, so the screen needs no global view of the
     corpus (line frequencies and dup ranking run after it in
-    job_curate).
+    curation_pipeline.py).
 
     ``blocked_hosts``: static DataFrame with a ``host`` column."""
     d = docs.withColumn("norm", normalize_col("text")).withColumn(
@@ -192,7 +192,7 @@ def curate_docs(docs: DataFrame, blocked_hosts: DataFrame) -> DataFrame:
 # table, integer-exact milli-unit sum (never a division: Spark's div
 # truncates toward zero, DuckDB's // floors, and score sums go
 # negative). Shared verbatim by queries_catalog.q_quality_classifier
-# (the oracle gate) and scripts/job_curate.py --quality-filter so the
+# (the oracle gate) and curation_pipeline.py's quality screen so the
 # two cannot drift.
 QC_BUCKETS = 256
 QC_WEIGHT_MULT = 2654435761

@@ -23,7 +23,7 @@ from ocr_parallel_spark.fanout import fan_out
 # pattern from operators/neardup.py): a dup-heavy hot cell pairs at most
 # MAX_CELL members (O(MAX_CELL^2) work) instead of growing quadratically
 # without bound. Shared by semdedup_marks' within-run pair join and
-# job_curate's cross-run combined (new + committed) cell cap.
+# curation_pipeline.py's cross-run combined (new + committed) cell cap.
 MAX_CELL = 4096
 
 

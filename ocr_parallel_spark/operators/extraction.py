@@ -100,17 +100,6 @@ def extract_pages(
     return in_df.mapInArrow(kernel, schema=full_ddl)
 
 
-def repartition_by_key(df: DataFrame, key_col: str = "url") -> DataFrame:
-    """Hash-distribute rows by key before the kernel stage.
-
-    The scale analog of the reference's group-by-file locality decision
-    (A3, /root/reference/app/services/ocr_service.py:368-379): all rows of
-    one document land in one partition, each payload crosses the Arrow
-    boundary exactly once (replaces the blob cache S5).
-    """
-    return df.repartition(F.col(key_col))
-
-
 def salted_key(
     group_col: str = "domain",
     fine_col: str = "url",

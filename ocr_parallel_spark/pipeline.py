@@ -21,11 +21,8 @@ Order rationale (vs the reference's dedup-before-work): the kernel runs
 BEFORE the url-dedup shuffle, so the multi-MB html payloads never cross an
 exchange — only the ~10x-smaller extracted rows shuffle. At a 10^12-row
 table the payload shuffle would dominate the job; re-extracting the ~10%
-duplicate-url rows is far cheaper. Results are identical because the
-kernel is deterministic and keep-first picks the same (url, min warc_ts)
-winner either way. Set ``dedup_before_extract=True`` to restore the
-reference's order (useful when dup rates are extreme), or ``"auto"`` to
-let the X8 chooser pick from a sampled dup-rate estimate.
+duplicate-url rows is far cheaper. Keep-first picks the same (url, min
+warc_ts) winner in either order, because the kernel is deterministic.
 """
 
 from __future__ import annotations
@@ -36,81 +33,23 @@ from pyspark.sql import functions as F
 from ocr_parallel_spark.config import MAX_PAYLOAD_BYTES
 from ocr_parallel_spark.operators.classify import classify_status, filter_oversized
 from ocr_parallel_spark.operators.dedup import keep_first, mark_exact_content_dups
-from ocr_parallel_spark.operators.extraction import extract_pages, repartition_by_key
+from ocr_parallel_spark.operators.extraction import extract_pages
 from ocr_parallel_spark.operators.neardup import simhash_near_reps
 
-# X8 chooser: above this estimated duplicate-url rate, dropping dups
-# BEFORE the kernel wins — re-extracting that many duplicate payloads
-# costs more than shuffling the (deduped) payload bytes once. The
-# reference's analog is its batch-size<200 model switch (config.py:36-43):
-# a cheap, observable statistic choosing between two execution paths.
-DEDUP_FIRST_THRESHOLD = 0.3
 
-
-def estimate_dup_rate(
-    pages: DataFrame,
-    id_col: str = "url",
-    key_mod: int = 20,
-) -> float:
-    """Cheap sampled duplicate-rate estimate over 1/key_mod of the KEY
-    SPACE: a deterministic hash-bucket filter keeps ALL copies of the
-    selected urls, so distinct/count is unbiased — a Bernoulli ROW sample
-    would rarely co-sample two copies of the same url and systematically
-    underestimate the rate. Column-pruned scan of the key only (payload
-    bytes never read), map-side HyperLogLog distinct, one small job —
-    the same shape as the 8-row centroid seed: a deliberate, bounded
-    driver step, not a hot-path collect."""
-    s = pages.select(id_col).filter(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(key_mod)) == 0
-    )
-    row = s.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(id_col).alias("d"),
-    ).first()
-    if not row or not row["n"]:
-        return 0.0
-    return max(0.0, 1.0 - row["d"] / row["n"])
-
-
-def choose_dedup_before_extract(
-    pages: DataFrame,
-    id_col: str = "url",
-    threshold: float = DEDUP_FIRST_THRESHOLD,
-) -> bool:
-    """X8 cost-based path selection (SURVEY §2.9): dedup-first when the
-    sampled dup rate crosses the threshold. Results are identical either
-    way (the kernel is deterministic and keep-first picks the same
-    winner); only the plan shape changes — pytest pins both facts."""
-    return estimate_dup_rate(pages, id_col) >= threshold
-
-
-def run_extraction_pipeline(
-    pages: DataFrame,
-    max_bytes: int = MAX_PAYLOAD_BYTES,
-    near_dups: bool = True,
-    repartition: bool = False,
-    dedup_before_extract: bool | str = False,
-) -> DataFrame:
+def run_extraction_pipeline(pages: DataFrame, near_dups: bool = True) -> DataFrame:
     """pages(url, warc_ts, html, text, lang, ...) -> extraction results.
 
     Output: url, warc_ts, lang, status, error_type, text, n_blocks_total,
     n_blocks_kept, n_chars_in, n_chars_out, simhash, content_sha256,
     is_exact_dup, rep_url [, is_near_dup, near_rep].
     """
-    capped = filter_oversized(pages, "html", max_bytes)
-    if dedup_before_extract == "auto":  # X8: stats-driven path choice
-        dedup_before_extract = choose_dedup_before_extract(capped)
+    capped = filter_oversized(pages, "html", MAX_PAYLOAD_BYTES)
+    # Kernel directly on the scan partitions: html bytes never shuffle.
+    extracted = extract_pages(capped, "html", ("url", "warc_ts", "lang"))
     # Keep-first by url: earliest crawl wins, deterministic at any
     # parallelism (D2 — NOT dropDuplicates).
-    if dedup_before_extract:
-        unique = keep_first(capped, ["url"], ["warc_ts"])
-        if repartition:
-            unique = repartition_by_key(unique, "url")
-        extracted = extract_pages(unique, "html", ("url", "warc_ts", "lang"))
-    else:
-        # Kernel directly on the scan partitions: html bytes never shuffle.
-        extracted = extract_pages(capped, "html", ("url", "warc_ts", "lang"))
-        extracted = keep_first(extracted, ["url"], ["warc_ts"])
+    extracted = keep_first(extracted, ["url"], ["warc_ts"])
     extracted = extracted.withColumn(
         "status",
         F.when(F.col("status") == "error", F.lit("error")).otherwise(
@@ -146,19 +85,3 @@ def run_extraction_pipeline(
         )
     return deduped
 
-
-def pipeline_stats(result: DataFrame) -> DataFrame:
-    """A1-style batch metrics over a pipeline result (ocr_service.py:442-519
-    semantics: success/error counts, by-error-type counts, size totals)."""
-    return result.agg(
-        F.count(F.lit(1)).alias("total_rows"),
-        F.count(F.when(F.col("status") == "found", 1)).alias("success_count"),
-        F.count(F.when(F.col("status") == "error", 1)).alias("error_count"),
-        F.count(F.when(F.col("status") == "not_found", 1)).alias("not_found_count"),
-        F.count(F.when(F.col("is_exact_dup"), 1)).alias("exact_dup_count"),
-        F.sum("n_chars_in").alias("total_bytes_in"),
-        F.sum("n_chars_out").alias("total_chars_out"),
-        F.avg("n_chars_out").alias("avg_chars_out"),
-        F.min("n_chars_out").alias("min_chars_out"),
-        F.max("n_chars_out").alias("max_chars_out"),
-    )

@@ -4,24 +4,15 @@ job with and without the sidecar."""
 
 from __future__ import annotations
 
-import importlib.util
-import pathlib
-
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_parallel_spark.curation_pipeline import run_curation_pipeline
 from ocr_parallel_spark.functions.bloom import (
     bloom_build,
     bloom_merge,
     bloom_probe,
 )
-
-_spec = importlib.util.spec_from_file_location(
-    "job_curate_bloom",
-    pathlib.Path(__file__).resolve().parent.parent / "scripts" / "job_curate.py",
-)
-job = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(job)
 
 BITS = 4096
 
@@ -116,16 +107,16 @@ def test_job_bloom_prefilter_verdicts_identical(spark, tmp_path):
     table = SnapshotTable(str(tmp_path / "verdicts"))
     run_resumable(
         run1, table, spark,
-        lambda todo: job.build_output(spark, todo, None, None),
+        lambda todo: run_curation_pipeline(todo, None, None),
         key_col="doc_id",
     )
     prior = table.read(spark).filter("kept").select("content_sha")
     words = bloom_build(prior, "content_sha", BITS, 4)
-    plain = job.build_output(
-        spark, run2, None, None, prior_kept_hashes=prior
+    plain = run_curation_pipeline(
+        run2, None, None, prior_kept_hashes=prior
     )
-    with_bloom = job.build_output(
-        spark, run2, None, None,
+    with_bloom = run_curation_pipeline(
+        run2, None, None,
         prior_kept_hashes=prior, prior_bloom=words, bloom_bits=BITS,
     )
     rows_p = sorted(map(tuple, plain.collect()))

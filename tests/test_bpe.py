@@ -110,7 +110,8 @@ def test_curate_bpe_to_pack_chain(spark, sf_dir, tmp_path):
         spec.loader.exec_module(mod)
         return mod
 
-    jc, jp = load("job_curate"), load("job_pack")
+    jp = load("job_pack")
+    from ocr_parallel_spark.curation_pipeline import run_curation_pipeline
     from ocr_parallel_spark.functions.tokenize import fit_bpe_merges
     from ocr_parallel_spark.operators.classify import normalize_col
 
@@ -126,7 +127,7 @@ def test_curate_bpe_to_pack_chain(spark, sf_dir, tmp_path):
     merges = fit_bpe_merges(
         docs.select(normalize_col("text").alias("norm")), "norm", 50
     )
-    verdicts = jc.build_output(spark, docs, None, None, bpe_merges=merges)
+    verdicts = run_curation_pipeline(docs, None, None, bpe_merges=merges)
     kept = verdicts.filter("kept").select(
         "doc_id", "source", F.col("kept_text").alias("text"), "n_bpe_tokens"
     )

@@ -9,6 +9,7 @@ import pathlib
 
 from pyspark.sql import functions as F
 
+from ocr_parallel_spark.curation_pipeline import run_curation_pipeline
 from ocr_parallel_spark.io.snapshot import SnapshotTable, run_resumable
 
 _spec = importlib.util.spec_from_file_location(
@@ -40,7 +41,7 @@ def test_curate_job_end_to_end_and_resume(spark, sf_dir, tmp_path):
     blocked = spark.createDataFrame([("site-3.example.com",)], "host string")
     bench = docs.filter(F.col("doc_id") % 50 == 7).select("text")
 
-    out = job.build_output(spark, docs, blocked, bench)
+    out = run_curation_pipeline(docs, blocked, bench)
     rows = {r["doc_id"]: r for r in out.collect()}
     assert len(rows) == docs.count()
     reasons = {r["drop_reason"] for r in rows.values()}
@@ -58,13 +59,13 @@ def test_curate_job_end_to_end_and_resume(spark, sf_dir, tmp_path):
     table = SnapshotTable(str(tmp_path / "verdicts"))
     snap1 = run_resumable(
         docs, table, spark,
-        lambda todo: job.build_output(spark, todo, blocked, bench),
+        lambda todo: run_curation_pipeline(todo, blocked, bench),
         key_col="doc_id",
     )
     assert snap1["lineage"]["rows_written"] == docs.count()
     snap2 = run_resumable(
         docs, table, spark,
-        lambda todo: job.build_output(spark, todo, blocked, bench),
+        lambda todo: run_curation_pipeline(todo, blocked, bench),
         key_col="doc_id",
     )
     assert snap2.get("noop") is True
@@ -84,7 +85,7 @@ def test_dup_canonical_slot_never_goes_to_screened_out_doc(spark):
         rows, "doc_id long, url string, text string, lang string, source string"
     )
     blocked = spark.createDataFrame([("blocked.org",)], "host string")
-    got = {r["doc_id"]: r for r in job.build_output(spark, docs, blocked, None).collect()}
+    got = {r["doc_id"]: r for r in run_curation_pipeline(docs, blocked, None).collect()}
     assert got[1]["drop_reason"] == "blocked"
     # doc 2 is the first ELIGIBLE copy -> kept; doc 3 is its true dup
     assert got[2]["kept"] and got[2]["drop_reason"] is None
@@ -104,7 +105,7 @@ def test_crlf_and_lf_line_endings_share_frequencies(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, url string, text string, lang string, source string"
     )
-    got = {r["doc_id"]: r for r in job.build_output(spark, docs, None, None).collect()}
+    got = {r["doc_id"]: r for r in run_curation_pipeline(docs, None, None).collect()}
     # 6 distinct docs carry the banner (3 CRLF + 3 LF) -> >= 5 -> dropped
     for i in range(6):
         assert got[i]["n_kept_lines"] == 1, got[i]
@@ -120,7 +121,7 @@ def test_curate_job_real_newline_docs_use_line_granularity(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, url string, text string, lang string, source string"
     )
-    out = job.build_output(spark, docs, None, None, min_line_count=5)
+    out = run_curation_pipeline(docs, None, None, min_line_count=5)
     got = {r["doc_id"]: r for r in out.collect()}
     for i in range(6):
         assert got[i]["n_kept_lines"] == 1
@@ -139,7 +140,7 @@ def test_null_text_doc_yields_exactly_one_verdict_row(spark, tmp_path):
     docs = spark.createDataFrame(
         rows, "doc_id long, url string, text string, lang string, source string"
     )
-    got = {r["doc_id"]: r for r in job.build_output(spark, docs, None, None).collect()}
+    got = {r["doc_id"]: r for r in run_curation_pipeline(docs, None, None).collect()}
     assert set(got) == {1, 2}
     assert got[1]["kept"]
     assert not got[2]["kept"]
@@ -148,13 +149,13 @@ def test_null_text_doc_yields_exactly_one_verdict_row(spark, tmp_path):
     table = SnapshotTable(str(tmp_path / "verdicts"))
     snap1 = run_resumable(
         docs, table, spark,
-        lambda todo: job.build_output(spark, todo, None, None),
+        lambda todo: run_curation_pipeline(todo, None, None),
         key_col="doc_id",
     )
     assert snap1["lineage"]["rows_written"] == 2
     snap2 = run_resumable(
         docs, table, spark,
-        lambda todo: job.build_output(spark, todo, None, None),
+        lambda todo: run_curation_pipeline(todo, None, None),
         key_col="doc_id",
     )
     assert snap2.get("noop") is True
@@ -185,11 +186,11 @@ def test_near_dup_stage_drops_non_canonical_cluster_members(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, url string, text string, lang string, source string"
     )
-    off = {r["doc_id"]: r for r in job.build_output(spark, docs, None, None).collect()}
+    off = {r["doc_id"]: r for r in run_curation_pipeline(docs, None, None).collect()}
     assert all(r["drop_reason"] != "near_dup" for r in off.values())
     got = {
         r["doc_id"]: r
-        for r in job.build_output(spark, docs, None, None, near_dup=True).collect()
+        for r in run_curation_pipeline(docs, None, None, near_dup=True).collect()
     }
     assert got[10]["kept"] and got[10]["drop_reason"] is None
     assert got[11]["drop_reason"] == "near_dup"
@@ -205,12 +206,12 @@ def test_quality_filter_screen(spark, sf_dir):
     from ocr_parallel_spark.queries_catalog import q_quality_classifier
 
     docs = _docs(spark, sf_dir)
-    off = {r.doc_id: r for r in job.build_output(spark, docs, None, None).collect()}
+    off = {r.doc_id: r for r in run_curation_pipeline(docs, None, None).collect()}
     assert all(r.drop_reason != "low_quality" for r in off.values())
     got = {
         r.doc_id: r
-        for r in job.build_output(
-            spark, docs, None, None, quality_filter=True
+        for r in run_curation_pipeline(
+            docs, None, None, quality_filter=True
         ).collect()
     }
     scores = {
@@ -254,8 +255,7 @@ def test_quality_filter_trained_weights(spark, sf_dir, tmp_path):
     w.write.parquet(wpath)
     got = {
         r.doc_id: r
-        for r in job.build_output(
-            spark,
+        for r in run_curation_pipeline(
             planted,
             None,
             None,
@@ -301,13 +301,13 @@ def test_graph_prior_breaks_dup_ties_by_host_rank(spark):
         "host string, host_rank_mi long",
     )
     base = {
-        r.doc_id: r for r in job.build_output(spark, docs, None, None).collect()
+        r.doc_id: r for r in run_curation_pipeline(docs, None, None).collect()
     }
     assert base[2].kept and base[16].drop_reason == "dup"
     got = {
         r.doc_id: r
-        for r in job.build_output(
-            spark, docs, None, None, graph_prior=prior
+        for r in run_curation_pipeline(
+            docs, None, None, graph_prior=prior
         ).collect()
     }
     # tiebreak flips: higher-rank site-5 doc wins despite larger id
@@ -333,7 +333,7 @@ def test_near_dup_resume_noop(spark, tmp_path):
     table = SnapshotTable(str(tmp_path / "verdicts"))
     snap1 = run_resumable(
         docs, table, spark,
-        lambda todo: job.build_output(spark, todo, None, None, near_dup=True),
+        lambda todo: run_curation_pipeline(todo, None, None, near_dup=True),
         key_col="doc_id",
     )
     assert snap1["lineage"]["rows_written"] == 3
@@ -343,7 +343,7 @@ def test_near_dup_resume_noop(spark, tmp_path):
     assert committed[12]["drop_reason"] == "near_dup"
     snap2 = run_resumable(
         docs, table, spark,
-        lambda todo: job.build_output(spark, todo, None, None, near_dup=True),
+        lambda todo: run_curation_pipeline(todo, None, None, near_dup=True),
         key_col="doc_id",
     )
     assert snap2.get("noop") is True
@@ -382,15 +382,15 @@ def test_cross_run_exact_dedup_against_committed_kept_hashes(spark, tmp_path):
     table = SnapshotTable(str(tmp_path / "verdicts"))
     run_resumable(
         run1, table, spark,
-        lambda todo: job.build_output(spark, todo, blocked, None),
+        lambda todo: run_curation_pipeline(todo, blocked, None),
         key_col="doc_id",
     )
     committed = table.read(spark)
     prior = committed.filter("kept").select("content_sha")
     run_resumable(
         all_docs, table, spark,
-        lambda todo: job.build_output(
-            spark, todo, blocked, None, prior_kept_hashes=prior
+        lambda todo: run_curation_pipeline(
+            todo, blocked, None, prior_kept_hashes=prior
         ),
         key_col="doc_id",
     )
@@ -441,8 +441,8 @@ def test_cross_run_near_dup_against_committed_signatures(spark, tmp_path):
             )
         return run_resumable(
             docs, table, spark,
-            lambda todo: job.build_output(
-                spark, todo, None, None, near_dup=True,
+            lambda todo: run_curation_pipeline(
+                todo, None, None, near_dup=True,
                 prior_kept_hashes=prior_h, prior_kept_neardup=prior_nd,
             ),
             key_col="doc_id",
@@ -485,13 +485,13 @@ def test_recompute_arbiter_applies_corpus_global_truth(spark, tmp_path):
     table = SnapshotTable(str(tmp_path / "verdicts"))
     run_resumable(
         mk(range(3)), table, spark,
-        lambda todo: job.build_output(spark, todo, None, None),
+        lambda todo: run_curation_pipeline(todo, None, None),
         key_col="doc_id",
     )
     all_docs = mk(range(6))
     run_resumable(
         all_docs, table, spark,
-        lambda todo: job.build_output(spark, todo, None, None),
+        lambda todo: run_curation_pipeline(todo, None, None),
         key_col="doc_id",
     )
     committed = {r["doc_id"]: r for r in table.read(spark).collect()}
@@ -501,7 +501,7 @@ def test_recompute_arbiter_applies_corpus_global_truth(spark, tmp_path):
 
     # arbiter: full-corpus recompute, one overwrite snapshot
     snap = table.overwrite(
-        job.build_output(spark, all_docs, None, None),
+        run_curation_pipeline(all_docs, None, None),
         lineage={"mode": "recompute"},
     )
     after = {r["doc_id"]: r for r in table.read(spark).collect()}
@@ -570,7 +570,7 @@ def test_warc_input_feeds_curation(spark, sf_dir, tmp_path):
     b = sorted(r.doc_id for r in warc_docs(spark, fixture).select("doc_id").collect())
     assert a == b and len(set(a)) == n_docs
     # the job's composition accepts the shape end-to-end
-    out = job.build_output(spark, docs, None, None)
+    out = run_curation_pipeline(docs, None, None)
     assert out.count() == n_docs
     assert out.filter(F.col("kept")).count() > 0
 
@@ -584,7 +584,7 @@ def test_robots_screen_in_curation_job(spark, sf_dir):
         [("site-2.example.com", "User-agent: *\nDisallow: /p/\n")],
         "host string, robots_txt string",
     )
-    out = job.build_output(spark, docs, None, None, robots_df=robots)
+    out = run_curation_pipeline(docs, None, None, robots_df=robots)
     got = {r.doc_id: r for r in out.collect()}
     assert len(got) == docs.count()
     for doc_id, r in got.items():
@@ -624,14 +624,14 @@ def test_lm_ref_screen(spark, sf_dir):
     )
     ref = base.filter(F.col("doc_id") % 3 != 0)
 
-    off = {r.doc_id: r for r in job.build_output(spark, crawl, None, None).collect()}
+    off = {r.doc_id: r for r in run_curation_pipeline(crawl, None, None).collect()}
     assert all(r.drop_reason != "high_surprise" for r in off.values())
     assert "surprise_x16" not in next(iter(off.values())).asDict()
 
     on = {
         r.doc_id: r
-        for r in job.build_output(
-            spark, crawl, None, None, lm_ref=ref, lm_max_x16=300
+        for r in run_curation_pipeline(
+            crawl, None, None, lm_ref=ref, lm_max_x16=300
         ).collect()
     }
     assert len(on) == len(off)
@@ -652,6 +652,63 @@ def test_lm_ref_screen(spark, sf_dir):
         if r.kept:
             assert r.surprise_x16 is None or r.surprise_x16 <= 300
     assert n_high > 0
+
+
+def test_first_failing_screen_wins_with_all_screens_on(spark, sf_dir):
+    """Blocklist, robots, quality and LM screens on together: each doc's
+    drop_reason is the first screen that drops it when run alone, in
+    the order base screen (blocked/lang/too_short/pii), robots,
+    low_quality, high_surprise."""
+    from ocr_parallel_spark.functions.curation import QT_TAINTS
+
+    base = _docs(spark, sf_dir)
+    taint = (
+        F.when(F.col("doc_id") % 9 == 0, F.lit(" " + QT_TAINTS["mojibake"]))
+        .when(F.col("doc_id") % 9 == 3, F.lit(" " + QT_TAINTS["lorem"]))
+        .otherwise(F.lit(""))
+    )
+    docs = base.select(
+        "doc_id",
+        "url",
+        F.concat(F.coalesce(F.col("text"), F.lit("")), taint).alias("text"),
+        "lang",
+        "source",
+    )
+    blocked = spark.createDataFrame([("site-3.example.com",)], "host string")
+    # site-3 overlaps the blocklist; site-2 is disallowed outright
+    robots = spark.createDataFrame(
+        [
+            ("site-2.example.com", "User-agent: *\nDisallow: /p/\n"),
+            ("site-3.example.com", "User-agent: *\nDisallow: /p/1\n"),
+        ],
+        "host string, robots_txt string",
+    )
+    lm = {"lm_ref": base.filter(F.col("doc_id") % 3 != 0), "lm_max_x16": 300}
+
+    def reasons(**kw):
+        out = run_curation_pipeline(docs, **kw).select("doc_id", "drop_reason")
+        return {r.doc_id: r.drop_reason for r in out.collect()}
+
+    screen = {
+        "base": ({"blocked", "lang", "too_short", "pii"},
+                 reasons(blocked_hosts=blocked)),
+        "robots": ({"robots"}, reasons(robots_df=robots)),
+        "quality": ({"low_quality"}, reasons(quality_filter=True)),
+        "lm": ({"high_surprise"}, reasons(**lm)),
+    }
+    every = set().union(*(names for names, _ in screen.values()))
+    on = reasons(
+        blocked_hosts=blocked, robots_df=robots, quality_filter=True, **lm
+    )
+    assert len(on) == docs.count()
+    for doc_id, got in on.items():
+        first = next(
+            (run[doc_id] for names, run in screen.values() if run[doc_id] in names),
+            None,
+        )
+        assert (got if got in every else None) == first, (doc_id, got, first)
+    fired = set(on.values())
+    assert {"blocked", "robots", "low_quality", "high_surprise"} <= fired
 
 
 def test_sem_dedup_screen_drops_embedding_twins(spark):
@@ -686,15 +743,15 @@ def test_sem_dedup_screen_drops_embedding_twins(spark):
         ],
         "doc_id long, embedding array<double>",
     )
-    out = {r.doc_id: r for r in job.build_output(
-        spark, docs, None, None, embeddings=emb, sem_cells=1
+    out = {r.doc_id: r for r in run_curation_pipeline(
+        docs, None, None, embeddings=emb, sem_cells=1
     ).collect()}
     assert out[1].kept
     assert out[2].drop_reason == "sem_dup" and not out[2].kept
     assert out[3].kept
     # and without embeddings the same corpus keeps everything
-    out2 = {r.doc_id: r for r in job.build_output(
-        spark, docs, None, None
+    out2 = {r.doc_id: r for r in run_curation_pipeline(
+        docs, None, None
     ).collect()}
     assert out2[2].kept
 
@@ -722,8 +779,8 @@ def test_lm_drop_tail_derives_cutoff_from_distribution(spark, sf_dir):
         "source",
     )
     ref = base.filter(F.col("doc_id") % 3 != 0)
-    rows = job.build_output(
-        spark, crawl, None, None, lm_ref=ref, lm_tail_drop=True
+    rows = run_curation_pipeline(
+        crawl, None, None, lm_ref=ref, lm_max_x16=None
     ).collect()
 
     scores = sorted(r.surprise_x16 for r in rows if r.surprise_x16 is not None)
@@ -776,9 +833,9 @@ def test_excise_spans_surgery_on_kept_text(spark):
         ],
         "doc_id long, url string, text string, lang string, source string",
     )
-    off = {r.doc_id: r for r in job.build_output(spark, docs, None, None).collect()}
-    on = {r.doc_id: r for r in job.build_output(
-        spark, docs, None, None, excise_spans=True
+    off = {r.doc_id: r for r in run_curation_pipeline(docs, None, None).collect()}
+    on = {r.doc_id: r for r in run_curation_pipeline(
+        docs, None, None, excise_spans=True
     ).collect()}
     assert all(r.kept for r in off.values()) and all(r.kept for r in on.values())
     # the owner's curated TOKENS are untouched (text reflows to spaces)
@@ -818,11 +875,11 @@ def test_excise_spans_runs_before_bpe_counts(spark):
     merges = fit_bpe_merges(
         docs.select(normalize_col(F.col("text")).alias("norm")), "norm", 50
     )
-    off = {r.doc_id: r for r in job.build_output(
-        spark, docs, None, None, bpe_merges=merges
+    off = {r.doc_id: r for r in run_curation_pipeline(
+        docs, None, None, bpe_merges=merges
     ).collect()}
-    on = {r.doc_id: r for r in job.build_output(
-        spark, docs, None, None, bpe_merges=merges, excise_spans=True
+    on = {r.doc_id: r for r in run_curation_pipeline(
+        docs, None, None, bpe_merges=merges, excise_spans=True
     ).collect()}
     assert on[1].n_bpe_tokens == off[1].n_bpe_tokens
     assert on[2].n_bpe_tokens < off[2].n_bpe_tokens
@@ -859,8 +916,8 @@ def test_sem_dedup_pinned_centroids(spark):
         "doc_id long, embedding array<double>",
     )
     cents = kmeans_centroids(emb, n_cells=1, id_col="doc_id")
-    out = {r.doc_id: r for r in job.build_output(
-        spark, docs, None, None, embeddings=emb, sem_centroids=cents
+    out = {r.doc_id: r for r in run_curation_pipeline(
+        docs, None, None, embeddings=emb, sem_centroids=cents
     ).collect()}
     direct = {
         r.vec_id: r.is_sem_dup
@@ -932,8 +989,8 @@ def test_cross_run_sem_dedup_against_committed_embeddings(spark, tmp_path):
             )
         return run_resumable(
             docs, table, spark,
-            lambda todo: job.build_output(
-                spark, todo, None, None, embeddings=emb,
+            lambda todo: run_curation_pipeline(
+                todo, None, None, embeddings=emb,
                 sem_centroids=cents, prior_sem=prior_sem,
                 prior_kept_hashes=prior_h,
             ),
@@ -992,8 +1049,8 @@ def test_cross_run_sem_dedup_skipped_without_prior(spark, tmp_path):
             prior_h = committed.filter("kept").select("content_sha")
         return run_resumable(
             docs, table, spark,
-            lambda todo: job.build_output(
-                spark, todo, None, None, embeddings=emb, sem_cells=1,
+            lambda todo: run_curation_pipeline(
+                todo, None, None, embeddings=emb, sem_cells=1,
                 prior_kept_hashes=prior_h,
             ),
             key_col="doc_id",

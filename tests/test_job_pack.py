@@ -92,15 +92,7 @@ def test_pack_from_curated_corpus_chain(spark, tmp_path):
     --from-verdicts mode packs exactly those docs with token counts
     computed from the CLEANED text (boilerplate lines gone), no second
     read of the raw corpus."""
-    import importlib.util
-    import pathlib
-
-    spec = importlib.util.spec_from_file_location(
-        "job_curate_for_pack",
-        pathlib.Path(__file__).resolve().parent.parent / "scripts" / "job_curate.py",
-    )
-    curate = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(curate)
+    from ocr_parallel_spark.curation_pipeline import run_curation_pipeline
 
     body = "plenty of unique content words here for the screen " * 4
     docs = spark.createDataFrame(
@@ -114,7 +106,7 @@ def test_pack_from_curated_corpus_chain(spark, tmp_path):
     vtable = SnapshotTable(str(tmp_path / "verdicts"))
     run_resumable(
         docs, vtable, spark,
-        lambda todo: curate.build_output(spark, todo, None, None),
+        lambda todo: run_curation_pipeline(todo, None, None),
         key_col="doc_id",
     )
     verdicts = vtable.read(spark)

@@ -11,7 +11,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ocr_parallel_spark.pages import synthesize_pages
-from ocr_parallel_spark.pipeline import pipeline_stats, run_extraction_pipeline
+from ocr_parallel_spark.pipeline import run_extraction_pipeline
 
 
 def _result(spark, sf_dir):
@@ -93,14 +93,6 @@ def test_error_rows_never_fail_job(spark, sf_dir):
     assert types <= {"EMPTY", "DECODE", "PARSE", "PDF", "UNKNOWN"}
 
 
-def test_stats_rollup(spark, sf_dir):
-    _, _, result = _result(spark, sf_dir)
-    stats = pipeline_stats(result).collect()[0]
-    assert stats["total_rows"] == stats["success_count"] + stats["error_count"] + stats["not_found_count"]
-    assert stats["success_count"] > 0
-    assert stats["total_bytes_in"] > 0
-
-
 def test_determinism_across_parallelism(spark, sf_dir):
     """Same input, different partitioning => byte-identical result set."""
     pages = synthesize_pages(spark, sf_dir).drop("doc_id")
@@ -110,34 +102,6 @@ def test_determinism_across_parallelism(spark, sf_dir):
     a = sorted(map(tuple, r1.select(*cols).collect()))
     b = sorted(map(tuple, r2.select(*cols).collect()))
     assert a == b
-
-
-def test_x8_chooser_flips_on_dup_rate_and_results_identical(spark, sf_dir):
-    """X8 stats-driven path choice: a high-dup input flips the chooser to
-    dedup-first (the reference's cheap-statistic model switch,
-    config.py:36-43 analog); pipeline results are identical either way."""
-    from ocr_parallel_spark.pipeline import choose_dedup_before_extract
-
-    pages = synthesize_pages(spark, sf_dir).drop("doc_id")
-    # synthesized pages: ~10% url dups -> extract-first wins
-    assert choose_dedup_before_extract(pages, threshold=0.3) is False
-
-    # replicate every row 3x -> dup rate ~2/3 -> dedup-first wins
-    reps = spark.range(3).select(F.col("id").alias("_r"))
-    high_dup = pages.crossJoin(reps).drop("_r")
-    assert choose_dedup_before_extract(high_dup, threshold=0.3) is True
-
-    # results identical under either plan (deterministic kernel +
-    # keep-first): compare full output sets on a small slice
-    small = pages.limit(120)
-    cols = ["url", "status", "text", "content_sha256", "is_exact_dup"]
-    a = run_extraction_pipeline(small, near_dups=False,
-                                dedup_before_extract=True)
-    b = run_extraction_pipeline(small, near_dups=False,
-                                dedup_before_extract="auto")
-    assert sorted(map(tuple, a.select(cols).collect())) == sorted(
-        map(tuple, b.select(cols).collect())
-    )
 
 
 def test_hostile_charset_roundtrip(spark, tmp_path):

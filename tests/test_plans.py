@@ -282,17 +282,7 @@ def test_cross_run_semdedup_plan_hash_joins_no_python(spark, sf_dir):
     cap as semi-joins — never a nested-loop/cartesian against the
     committed corpus — and pure codegen: the curation composition keeps
     zero Python stages even with the cross-run branch active."""
-    import importlib.util
-    import pathlib
-
-    spec = importlib.util.spec_from_file_location(
-        "job_curate_plan",
-        pathlib.Path(__file__).resolve().parent.parent
-        / "scripts"
-        / "job_curate.py",
-    )
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
+    from ocr_parallel_spark.curation_pipeline import run_curation_pipeline
 
     docs = spark.createDataFrame(
         [(1, "https://ok.org/a", "plenty of unique content words here "
@@ -306,8 +296,8 @@ def test_cross_run_semdedup_plan_hash_joins_no_python(spark, sf_dir):
         [(99, 0, [0.9, 0.1, 0.0, 0.0])],
         "doc_id long, sem_cell long, sem_emb array<double>",
     )
-    out = job.build_output(
-        spark, docs, None, None,
+    out = run_curation_pipeline(
+        docs, None, None,
         embeddings=emb,
         sem_centroids=[[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]],
         prior_sem=prior,

@@ -1,8 +1,8 @@
 """Property-based invariants (hypothesis) for the kernel + operators.
 
 These pin algebraic properties the example-based tests can't sweep:
-normalization idempotence, chunk coverage/overlap laws, fingerprint
-stability, and plan-order equivalence of the pipeline's two dedup orders.
+normalization idempotence, chunk coverage/overlap laws and fingerprint
+stability.
 """
 
 from __future__ import annotations
@@ -95,24 +95,6 @@ def test_chunk_count_law(n_rows, chunk_size):
             a = set(range(c * step, min(c * step + chunk_size, n_rows)))
             b = set(range((c + 1) * step, min((c + 1) * step + chunk_size, n_rows)))
             assert len(a & b) >= 1  # consecutive chunks overlap
-
-
-def test_pipeline_dedup_order_equivalence(spark, sf_dir):
-    """extract-then-dedup (scale default) and dedup-then-extract (the
-    reference's order) produce identical result sets — the correctness
-    claim behind the shuffle-volume optimization in pipeline.py."""
-    from pyspark.sql import functions as F
-
-    from ocr_parallel_spark.pages import synthesize_pages
-    from ocr_parallel_spark.pipeline import run_extraction_pipeline
-
-    pages = synthesize_pages(spark, sf_dir).drop("doc_id")
-    cols = ["url", "status", "error_type", "text", "content_sha256", "is_exact_dup"]
-    a = run_extraction_pipeline(pages, dedup_before_extract=False).select(cols)
-    b = run_extraction_pipeline(pages, dedup_before_extract=True).select(cols)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
 
 
 # ------------------------------------------------------------- WARC kernel
