@@ -47,7 +47,7 @@ from ocr_parallel_spark.operators.linededup import dedup_lines
 from ocr_parallel_spark.operators.neardup import (
     MAX_BAND_BUCKET,
     pairs_from_banded,
-    with_minhash_bands,
+    with_minhash_sigs,
 )
 
 
@@ -424,18 +424,12 @@ def run_curation_pipeline(
         # Runs over kept_text so boilerplate stripping cannot hide
         # near-dups behind differing chrome.
         survivors = j.filter(alive).select("doc_id", "kept_text")
-        # the banding kernel's Arrow schema types the id as string; cast
-        # through it and back so labels stay NUMERIC (canonical member =
-        # min doc_id, not min string). Bands are computed ONCE and reused
-        # three ways: within-run pairs, the cross-run join against
-        # committed signatures, and persistence into the verdict row.
+        # Bands are computed ONCE and reused three ways: within-run pairs,
+        # the cross-run join against committed signatures, and persistence
+        # into the verdict row.
         banded = (
-            with_minhash_bands(
-                survivors.withColumn("doc_id", F.col("doc_id").cast("string")),
-                "kept_text",
-                "doc_id",
-            )
-            .select(F.col("doc_id").cast("long").alias("doc_id"), "bands")
+            with_minhash_sigs(survivors, "kept_text", "doc_id")
+            .select("doc_id", "bands")
             .localCheckpoint(eager=False)
         )
         toks = survivors.select(

@@ -1,24 +1,31 @@
 """Near-duplicate marking: SimHash banding and MinHash LSH.
 
-D4's near-dup half (SURVEY §2.4): the kernel already emits a 64-bit SimHash
-per document (one Python crossing, shared with extraction); everything after
-that is built-in expressions — band splitting via bit ops, bucket sizing
-with a count window on (band_idx, band_val), bucket-local Hamming
-verification via ``filter(members, bit_count(xor) <= t)`` over each
-bucket's collected (id, simhash) list, representative election via the
-minimum id among verified neighbours.
+D4's near-dup half (SURVEY §2.4). Both hashes generate candidates with one
+bucket-local band pass (``_band_pairs``): band rows are sized with a count
+window on (band_idx, band value), buckets wider than ``MAX_BAND_BUCKET``
+are dropped, each bucket's members are collected with ``collect_list`` on
+the same keys (reusing the window's exchange), and each member filters its
+bucket for partners. No join.
 
-Plan shape (``simhash_near_reps``): one exchange on (band_idx, band_val)
-serves both the bucket-size window and the member collection; one more on
-the doc id elects the representative. No join — and only (id, simhash)
-rows shuffle; callers join the small reps back onto their full rows.
+- SimHash: the kernel already emits a 64-bit SimHash per document (one
+  Python crossing, shared with extraction). Bands come from bit ops, a
+  partner is a different id within Hamming ``hamming_threshold``
+  (``bit_count(xor)``), and each doc's representative is the minimum id
+  among its verified neighbours — one more exchange, on the doc id. Only
+  (id, simhash) rows shuffle; callers join the small reps back onto their
+  full rows.
+- MinHash: ``with_minhash_sigs`` computes the 64-slot signature and its 16
+  LSH band hashes in one Arrow-batched pass; ``pairs_from_banded`` returns
+  the distinct (id_a < id_b) pairs sharing a band bucket for the caller to
+  verify (exact Jaccard, or signature agreement in
+  ``signature_near_dup_marks``).
 
 Scale notes: run AFTER exact dedup so identical texts (the worst band skew)
-are already collapsed; buckets wider than ``MAX_BAND_BUCKET`` are dropped,
-so per-bucket verify work is bounded by its square, and a hot bucket spills
-in the window buffer rather than skewing a join. One-iteration
-min-representative labeling is the standard LSH approximation of connected
-components — documented, deterministic.
+are already collapsed; the bucket cap bounds per-bucket pair work by its
+square, and a hot bucket spills in the window buffer rather than skewing a
+join. SimHash's min-representative labeling is one hop — the standard LSH
+approximation; cluster closure is ``connected_components``' job (see
+``minhash_clusters``).
 """
 
 from __future__ import annotations
@@ -37,10 +44,44 @@ HAMMING_THRESHOLD = 3
 
 # A band bucket holding more than this many docs is degenerate (boilerplate
 # or adversarial near-constant content): pairing its members is quadratic
-# for no recall gain — every member already has 3 other band chances.
+# for no recall gain — every member still has its other bands' chances.
 # Production LSH dedup caps bucket width for exactly this reason; the cap
 # keeps candidate generation linear in practice and is deterministic.
 MAX_BAND_BUCKET = 256
+
+
+def _band_pairs(
+    bands: DataFrame, band_col: str, max_bucket: int, partner
+) -> DataFrame:
+    """The one bucket-local band pass: (``_nd_me``, ``_nd_o``) for every
+    ordered pair of ``_nd_doc`` values of band rows (``_nd_doc``,
+    ``band_idx``, ``band_col``) that share a bucket of at most
+    ``max_bucket`` rows (0 = uncapped) and satisfy ``partner(me, o)``.
+
+    One exchange on (band_idx, ``band_col``) serves both the bucket-size
+    window and the member collection; the pairs are the same multiset a
+    capped band self-join yields, with no join."""
+    keys = ["band_idx", band_col]
+    if max_bucket:
+        bucket = Window.partitionBy(*keys)
+        bands = (
+            bands.withColumn("_nd_bucket_n", F.count(F.lit(1)).over(bucket))
+            .filter(F.col("_nd_bucket_n") <= max_bucket)
+            .drop("_nd_bucket_n")
+        )
+    # Same keys as the bucket window: the aggregate reuses its exchange.
+    members = bands.groupBy(*keys).agg(
+        F.collect_list("_nd_doc").alias("_nd_members")
+    )
+    me = F.col("_nd_me")
+    return members.select(
+        F.explode("_nd_members").alias("_nd_me"), "_nd_members"
+    ).select(
+        me,
+        F.explode(F.filter("_nd_members", lambda o: partner(me, o))).alias(
+            "_nd_o"
+        ),
+    )
 
 
 def mark_simhash_near_dups(
@@ -49,7 +90,6 @@ def mark_simhash_near_dups(
     id_col: str = "url",
     hamming_threshold: int = HAMMING_THRESHOLD,
     max_bucket: int = MAX_BAND_BUCKET,
-    closure_rounds: int = 0,
 ) -> DataFrame:
     """Add ``is_near_dup`` + ``near_rep`` columns.
 
@@ -58,21 +98,11 @@ def mark_simhash_near_dups(
     ``bit_count(a^b) <= threshold``; each verified doc maps to the minimum
     id in its candidate neighborhood, and ``is_near_dup`` is true when that
     representative is a different, earlier doc. Docs without a verified
-    neighbour get a NULL ``near_rep``.
-
-    ``closure_rounds=0`` (default) is one-iteration min-representative
-    labeling — the standard LSH approximation of connected components: a
-    chain A~B~C labels C with B while A keeps itself. Pass
-    ``closure_rounds=r`` to run ``r`` bounded label-propagation rounds
-    over the verified-pair graph (each round: every doc takes the min of
-    its own and its neighbors' labels — one keyed shuffle per round);
-    each round extends the collapsed radius one hop (round r labels
-    reach r+1 hops), so 2-3 rounds close any realistic near-dup cluster
-    — drift chains longer than that are vanishingly rare — while staying
-    a FIXED number of stages (no driver-side convergence loop at 100 TB).
+    neighbour get a NULL ``near_rep``. Labels are one hop: a chain A~B~C
+    labels C with B while A keeps itself.
     """
     reps = simhash_near_reps(
-        df, simhash_col, id_col, hamming_threshold, max_bucket, closure_rounds
+        df, simhash_col, id_col, hamming_threshold, max_bucket
     )
     out = df.join(reps, df[id_col] == reps["_nd_id"], "left").drop("_nd_id")
     return out.withColumn(
@@ -87,18 +117,14 @@ def simhash_near_reps(
     id_col: str = "url",
     hamming_threshold: int = HAMMING_THRESHOLD,
     max_bucket: int = MAX_BAND_BUCKET,
-    closure_rounds: int = 0,
 ) -> DataFrame:
     """(``_nd_id``, ``near_rep``) for every doc of ``df`` that has a
     verified neighbour; semantics as in :func:`mark_simhash_near_dups`.
 
     Reads only (id, simhash) — callers join the result back onto their
     full rows, so wide rows never shuffle for near-dup work. Verification
-    is bucket-local: one exchange on (band_idx, band_val) sizes each
-    bucket and collects its members, and each member filters the bucket
-    for partners within ``hamming_threshold`` — the same pair multiset a
-    band self-join yields, at the same ``max_bucket``² bound per bucket,
-    with no join.
+    is the bucket-local band pass: each member filters its bucket for
+    partners within ``hamming_threshold``.
     """
     ids = df.select(id_col, simhash_col).filter(F.col(simhash_col) != 0)
     # One pass over the input: posexplode the band array (a 4-way union
@@ -114,94 +140,51 @@ def simhash_near_reps(
         ).alias("_nd_doc"),
         F.posexplode(F.array(*band_exprs)).alias("band_idx", "band_val"),
     )
-    if max_bucket:
-        bucket = Window.partitionBy("band_idx", "band_val")
-        bands = (
-            bands.withColumn("_nd_bucket_n", F.count(F.lit(1)).over(bucket))
-            .filter(F.col("_nd_bucket_n") <= max_bucket)
-            .drop("_nd_bucket_n")
-        )
-    # Same keys as the bucket window: the aggregate reuses its exchange.
-    members = bands.groupBy("band_idx", "band_val").agg(
-        F.collect_list("_nd_doc").alias("_nd_members")
+    pairs = _band_pairs(
+        bands,
+        "band_val",
+        max_bucket,
+        lambda me, o: (o["id"] != me["id"])
+        & (F.bit_count(o["h"].bitwiseXOR(me["h"])) <= hamming_threshold),
+    ).select(
+        F.col("_nd_me.id").alias("_nd_id"), F.col("_nd_o.id").alias("_nd_other")
     )
-    me = F.col("_nd_me")
-    pairs = (
-        members.select(F.explode("_nd_members").alias("_nd_me"), "_nd_members")
-        .select(
-            me["id"].alias("_nd_id"),
-            F.explode(
-                F.filter(
-                    "_nd_members",
-                    lambda o: (o["id"] != me["id"])
-                    & (
-                        F.bit_count(o["h"].bitwiseXOR(me["h"]))
-                        <= hamming_threshold
-                    ),
-                )
-            ).alias("_nd_o"),
-        )
-        .select("_nd_id", F.col("_nd_o.id").alias("_nd_other"))
-    )
-    if closure_rounds > 0:
-        # pairs is re-consumed every propagation round; without this the
-        # bucket lineage re-executes per round. localCheckpoint
-        # (not persist): persist pins blocks in the cache manager for the
-        # SESSION lifetime with no handle for the caller to unpersist;
-        # checkpoint blocks are freed by the ContextCleaner as soon as
-        # the returned DataFrame is dropped.
-        pairs = pairs.localCheckpoint(eager=False)
     reps = pairs.groupBy("_nd_id").agg(F.min("_nd_other").alias("_nd_min_other"))
-    reps = reps.select(
+    return reps.select(
         F.col("_nd_id"),
         F.least(F.col("_nd_id"), F.col("_nd_min_other")).alias("near_rep"),
     )
-    for _ in range(closure_rounds):
-        nbr = (
-            pairs.join(
-                reps.select(
-                    F.col("_nd_id").alias("_nd_other"),
-                    F.col("near_rep").alias("_nbr_rep"),
-                ),
-                "_nd_other",
-            )
-            .groupBy("_nd_id")
-            .agg(F.min("_nbr_rep").alias("_min_nbr_rep"))
-        )
-        reps = reps.join(nbr, "_nd_id", "left").select(
-            "_nd_id",
-            F.least(
-                F.col("near_rep"),
-                F.coalesce(F.col("_min_nbr_rep"), F.col("near_rep")),
-            ).alias("near_rep"),
-        )
-    return reps
 
 
 # ---- MinHash LSH (shingle Jaccard) ------------------------------------------
 
-N_PERM = 64
 LSH_BANDS = 16
 
 
-def with_minhash_bands(
-    df: DataFrame, text_col: str = "text", id_col: str = "url"
-) -> DataFrame:
-    """Arrow-batched MinHash signatures -> LSH band bucket ids (long[16]).
+def _signed(vals: list[int]) -> list[int]:
+    """Unsigned 64-bit values as Spark bigints (two's complement)."""
+    return [v - (1 << 64) if v >= (1 << 63) else v for v in vals]
 
-    The signature is the only Python step (vectorized per batch); banding,
-    explode and bucket joins are built-ins downstream.
-    """
-    schema = f"{id_col} string, bands array<bigint>"
+
+def with_minhash_sigs(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(id, sig array<bigint>[64], bands array<bigint>[16]) in ONE
+    Arrow-batched pass — the signature is computed once and reused for
+    banding and estimate-verification. The id keeps its input type."""
+    id_type = df.schema[id_col].dataType.simpleString()
+    schema = f"{id_col} {id_type}, sig array<bigint>, bands array<bigint>"
 
     def compute(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            bands = [
-                [b - (1 << 64) if b >= (1 << 63) else b for b in
-                 minhash_bands(minhash_signature(t or ""), LSH_BANDS)]
-                for t in pdf[text_col]
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "bands": bands})
+            sigs, bands = [], []
+            for t in pdf[text_col]:
+                s = minhash_signature(t or "")
+                sigs.append(_signed(s))
+                bands.append(_signed(minhash_bands(s, LSH_BANDS)))
+            yield pd.DataFrame(
+                {id_col: pdf[id_col], "sig": sigs, "bands": bands}
+            )
 
     return df.select(id_col, text_col).mapInPandas(compute, schema=schema)
 
@@ -211,34 +194,18 @@ def pairs_from_banded(
     id_col: str = "url",
     max_bucket: int = MAX_BAND_BUCKET,
 ) -> DataFrame:
-    """Candidate pairs from a precomputed ``with_minhash_bands`` frame
-    (``id_col``, ``bands``): explode band buckets, self-join on (band
-    position, bucket hash). Split out of :func:`minhash_candidate_pairs`
-    so a caller that persisted band signatures (the curation job's
-    verdicts table) reuses the identical bucket-cap + join logic."""
-    exploded = banded.select(
-        F.col(id_col), F.posexplode("bands").alias("band_idx", "band_hash")
+    """Distinct candidate pairs (``id_a`` < ``id_b``) of an (``id_col``,
+    ``bands``) frame — :func:`with_minhash_sigs` output, or band
+    signatures a caller persisted: ids sharing a (band position, bucket
+    hash) bucket of at most ``max_bucket`` rows, by the bucket-local band
+    pass."""
+    bands = banded.select(
+        F.col(id_col).alias("_nd_doc"),
+        F.posexplode("bands").alias("band_idx", "band_hash"),
     )
-    if max_bucket:
-        sizes = exploded.groupBy("band_idx", "band_hash").agg(
-            F.count(F.lit(1)).alias("_mh_bucket_n")
-        )
-        exploded = (
-            exploded.join(sizes, ["band_idx", "band_hash"])
-            .filter(F.col("_mh_bucket_n") <= max_bucket)
-            .drop("_mh_bucket_n")
-        )
-    l, r = exploded.alias("l"), exploded.alias("r")
     return (
-        l.join(
-            r,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
+        _band_pairs(bands, "band_hash", max_bucket, lambda me, o: me < o)
+        .select(F.col("_nd_me").alias("id_a"), F.col("_nd_o").alias("id_b"))
         .distinct()
     )
 
@@ -249,12 +216,12 @@ def minhash_candidate_pairs(
     id_col: str = "url",
     max_bucket: int = MAX_BAND_BUCKET,
 ) -> DataFrame:
-    """Candidate near-dup pairs via MinHash LSH: explode band buckets,
-    self-join on (band position, bucket hash). Returns distinct id pairs
-    (a < b) for downstream exact-Jaccard verification. Buckets wider than
-    ``max_bucket`` are skipped (degenerate content; see MAX_BAND_BUCKET)."""
+    """Candidate near-dup pairs via MinHash LSH: distinct id pairs
+    (a < b) sharing a band bucket, for downstream exact-Jaccard
+    verification. Buckets wider than ``max_bucket`` are skipped
+    (degenerate content; see MAX_BAND_BUCKET)."""
     return pairs_from_banded(
-        with_minhash_bands(df, text_col, id_col), id_col, max_bucket
+        with_minhash_sigs(df, text_col, id_col), id_col, max_bucket
     )
 
 
@@ -273,33 +240,6 @@ def minhash_candidate_pairs(
 MINHASH_PERMS = 64
 
 
-def with_minhash_sigs(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, sig array<bigint>[64], bands array<bigint>[16]) in ONE
-    Arrow-batched pass — the signature is computed once and reused for
-    banding and estimate-verification."""
-    schema = f"{id_col} long, sig array<bigint>, bands array<bigint>"
-
-    def compute(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sigs, bands = [], []
-            for t in pdf[text_col]:
-                s = minhash_signature(t or "")
-                sigs.append([v - (1 << 64) if v >= (1 << 63) else v for v in s])
-                bands.append(
-                    [
-                        b - (1 << 64) if b >= (1 << 63) else b
-                        for b in minhash_bands(s, LSH_BANDS)
-                    ]
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "sig": sigs, "bands": bands}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(compute, schema=schema)
-
-
 def signature_near_dup_marks(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -310,12 +250,10 @@ def signature_near_dup_marks(
     """Arrival-order near-dup marks from (id, sig, bands) rows: a doc is
     a near-dup of the MINIMUM earlier id that shares >= 1 LSH band with
     signature agreement >= est_num/est_den. Returns (id, near_rep,
-    is_near_dup). Candidate generation is the capped band self-join;
-    verification compares the two 64-slot signatures with zip_with
-    (JVM-side, no Python)."""
-    # candidate generation IS pairs_from_banded — one definition of the
-    # bucket-cap + banded self-join, so a cap/predicate fix cannot drift
-    # between this and the other callers
+    is_near_dup). Candidates come from :func:`pairs_from_banded`'s
+    bucket-local band pass (one definition of the bucket cap for every
+    caller); verification compares the two 64-slot signatures with
+    zip_with (JVM-side, no Python)."""
     cands = pairs_from_banded(sigs, id_col, max_bucket)
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("_sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("_sig_b"))

@@ -6,7 +6,6 @@ url), error-as-data, dedup marking, and determinism across parallelism.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -137,10 +136,10 @@ def test_hostile_charset_roundtrip(spark, tmp_path):
 
 
 def test_simhash_closure_collapses_chains(spark):
-    """closure_rounds: a drift chain A~B~C (each link Hamming 2, ends
-    Hamming 4 — NOT a verified pair) collapses to one representative
-    under bounded label propagation; the one-iteration default labels C
-    with B (the documented approximation)."""
+    """A drift chain A~B~C (each link Hamming 2, ends Hamming 4 — NOT a
+    verified pair) keeps one-hop labels: C takes B while A keeps itself
+    (the documented approximation; closing the chain is
+    ``connected_components``' job)."""
     from ocr_parallel_spark.operators.neardup import mark_simhash_near_dups
 
     base = 0x0123456789ABCDEF
@@ -160,30 +159,8 @@ def test_simhash_closure_collapses_chains(spark):
     assert one_iter["c"] == ("b", True)  # the documented 1-hop label
     assert one_iter["d"] == (None, False)
 
-    closed = {
-        r.url: (r.near_rep, r.is_near_dup)
-        for r in mark_simhash_near_dups(df, closure_rounds=2).collect()
-    }
-    assert closed["a"] == ("a", False)
-    assert closed["b"] == ("a", True)
-    assert closed["c"] == ("a", True)  # chain collapsed to one rep
-    assert closed["d"] == (None, False)
 
-    # longer chain a~b~c~e~f: 2 rounds reach 3 hops (r+1)
-    e = c ^ (0b11 << 32)
-    f = e ^ (0b11 << 48)
-    df2 = spark.createDataFrame(
-        [("a", a), ("b", b), ("c", c), ("e", e), ("f", f)],
-        "url string, simhash long",
-    )
-    closed2 = {
-        r.url: r.near_rep
-        for r in mark_simhash_near_dups(df2, closure_rounds=3).collect()
-    }
-    assert set(closed2.values()) == {"a"}, closed2
-
-
-def _near_dups_reference(rows, threshold, max_bucket, closure_rounds):
+def _near_dups_reference(rows, threshold, max_bucket):
     """Brute-force ``mark_simhash_near_dups``: (id, simhash) rows ->
     {(id, simhash): (near_rep, is_near_dup)}, from the documented
     semantics. Rows with simhash 0 take no part; a band bucket with more
@@ -215,19 +192,13 @@ def _near_dups_reference(rows, threshold, max_bucket, closure_rounds):
     reps = {}
     for a, b in pairs:
         reps[a] = min(reps.get(a, a), b)
-    for _ in range(closure_rounds):
-        nbr = {}
-        for a, b in pairs:
-            nbr[a] = min(nbr.get(a, reps[b]), reps[b])
-        reps = {a: min(r, nbr[a]) for a, r in reps.items()}
     return {
         (doc_id, h): (reps.get(doc_id), doc_id in reps and reps[doc_id] != doc_id)
         for doc_id, h in rows
     }
 
 
-@pytest.mark.parametrize("closure_rounds", [0, 2])
-def test_simhash_near_dups_match_reference(spark, closure_rounds):
+def test_simhash_near_dups_match_reference(spark):
     """``mark_simhash_near_dups`` equals the brute-force reference on a
     seeded input with: clusters of docs within Hamming 3 of a base (so
     pairs and chains), one band bucket of ``max_bucket + 1`` docs holding
@@ -259,25 +230,83 @@ def test_simhash_near_dups_match_reference(spark, closure_rounds):
     hot.append(hot[0] ^ (1 << 16 | 1 << 32 | 1 << 48))
     hashes += hot
     null_h = signed(hashes[0])  # a NULL id on a cluster base's simhash
-    # ids in random order, so a cluster's minimum id is often not its
-    # base and one-iteration labels differ from the closure's
+    # ids in random order, so a cluster's minimum id is often not its base
     rng.shuffle(hashes)
     rows = [(f"u{i:03d}", signed(h)) for i, h in enumerate(hashes)]
     rows += [("zero-a", 0), ("zero-b", 0), (None, null_h)]
 
-    want = _near_dups_reference(rows, threshold, max_bucket, closure_rounds)
+    want = _near_dups_reference(rows, threshold, max_bucket)
     df = spark.createDataFrame(rows, "url string, simhash long")
     out = mark_simhash_near_dups(
-        df, hamming_threshold=threshold, max_bucket=max_bucket,
-        closure_rounds=closure_rounds,
+        df, hamming_threshold=threshold, max_bucket=max_bucket
     ).collect()
     assert len(out) == len(rows)
     assert {(r.url, r.simhash): (r.near_rep, r.is_near_dup) for r in out} == want
-    # the input exercises what it should: near-dups exist, the capped
-    # bucket and the NULL id yield none, and closure changes labels
+    # the input exercises what it should: near-dups exist, and the
+    # capped bucket and the NULL id yield none
     assert sum(d for _, d in want.values()) > 5
     hot_hashes = {signed(h) for h in hot}
     assert all(v == (None, False) for (_, h), v in want.items() if h in hot_hashes)
     assert want[None, null_h] == (None, False)
-    if closure_rounds:
-        assert want != _near_dups_reference(rows, threshold, max_bucket, 0)
+
+
+def _minhash_pairs_reference(rows, max_bucket):
+    """Brute-force ``pairs_from_banded``: (id, bands) rows -> the set of
+    (a, b), a < b, sharing a (band position, band hash) bucket of at most
+    ``max_bucket`` rows."""
+    from collections import defaultdict
+
+    buckets = defaultdict(list)
+    for doc_id, bands in rows:
+        for i, h in enumerate(bands):
+            buckets[i, h].append(doc_id)
+    return {
+        (a, b)
+        for ids in buckets.values()
+        if len(ids) <= max_bucket
+        for a in ids
+        for b in ids
+        if a < b
+    }
+
+
+def test_minhash_pairs_match_reference(spark):
+    """``pairs_from_banded`` equals the brute-force reference on synthetic
+    band rows with: a bucket of ``max_bucket + 1`` rows holding a pair
+    that shares no other band, a pair sharing two bands (one row), an id
+    alone in all its buckets, and seeded random rows over few band values.
+    Ids 9 and 10 pin numeric, not string, order."""
+    import random
+
+    from ocr_parallel_spark.operators.neardup import pairs_from_banded
+
+    rng = random.Random(20261019)
+    max_bucket = 3
+    rows = [
+        # band 0 bucket 7 holds max_bucket + 1 rows; 1 and 2 share only it
+        (1, [7, 100, 200, 300]),
+        (2, [7, 101, 201, 301]),
+        (3, [7, 102, 202, 302]),
+        (4, [7, 103, 203, 303]),
+        # 9 and 10 share bands 1 and 2
+        (9, [11, 110, 210, 310]),
+        (10, [12, 110, 210, 311]),
+        # alone everywhere
+        (5, [13, 120, 220, 320]),
+    ]
+    rows += [
+        (100 + i, [1000 * (k + 1) + rng.randrange(6) for k in range(4)])
+        for i in range(20)
+    ]
+    want = _minhash_pairs_reference(rows, max_bucket)
+    df = spark.createDataFrame(rows, "doc_id long, bands array<bigint>")
+    got = [
+        (r.id_a, r.id_b)
+        for r in pairs_from_banded(df, "doc_id", max_bucket).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    # the input exercises what it should
+    assert (1, 2) not in want and (9, 10) in want
+    assert not any(5 in p for p in want)
+    assert sum(p[0] >= 100 for p in want) > 10

@@ -10,6 +10,7 @@ at scale that no row-count test would catch.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -65,21 +66,34 @@ def test_exact_content_dups_shuffle_once(spark, sf_dir):
     assert p.count("Exchange hashpartitioning") == 1
 
 
-def test_simhash_near_reps_verify_is_bucket_local(spark, sf_dir):
-    """Near-dup reps: one exchange by band bucket (shared by the size
-    window and the member collection), one by doc id, and no join."""
+@pytest.mark.parametrize(
+    "op, args, band_col, above",
+    [
+        ("simhash_near_reps", ("simhash", "url"), "band_val", "_nd_id"),
+        ("pairs_from_banded", ("url",), "band_hash", "id_a"),
+    ],
+    ids=["simhash_near_reps", "pairs_from_banded"],
+)
+def test_simhash_near_reps_verify_is_bucket_local(
+    spark, sf_dir, op, args, band_col, above
+):
+    """Band pass: one exchange by band bucket (shared by the size window
+    and the member collection), one above it (SimHash: by doc id to elect
+    the representative; MinHash: the pairs' ``distinct``), and no join."""
     import re
 
-    from ocr_parallel_spark.operators.neardup import simhash_near_reps
+    from ocr_parallel_spark.operators import neardup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("url"),
         F.xxhash64("text").alias("simhash"),
+        F.array(F.xxhash64("text"), F.xxhash64("lang")).alias("bands"),
     )
-    p = plan_of(simhash_near_reps(docs, "simhash", "url"), "simple")
+    p = plan_of(getattr(neardup, op)(docs, *args), "simple")
     assert p.count("Exchange hashpartitioning") == 2
-    assert re.search(r"Exchange hashpartitioning\(band_idx#\d+, band_val#\d+L?,", p)
-    assert re.search(r"Exchange hashpartitioning\(_nd_id#\d+,", p)
+    band = rf"Exchange hashpartitioning\(band_idx#\d+, {band_col}#\d+L?,"
+    assert len(re.findall(band, p)) == 1
+    assert re.search(rf"Exchange hashpartitioning\({above}#\d+,", p)
     assert "Join" not in p
 
 
