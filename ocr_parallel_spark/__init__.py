@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ocr_parallel_spark.config import SESSION_CONFS
 
@@ -36,3 +36,25 @@ def get_spark(
         .config(map=dict(SESSION_CONFS))
         .getOrCreate()
     )
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A constant frame of driver-side ``rows`` (tuples in the order of the
+    DDL ``schema``), planned as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(<list>)`` parallelizes the rows as a Python
+    RDD, so every scan of the frame (each broadcast of it, say) runs Python
+    tasks, and each pays a Python task's start-up. The rows go to the JVM
+    once as an Arrow table instead and become a ``LocalRelation``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

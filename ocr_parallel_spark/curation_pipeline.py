@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ocr_parallel_spark import local_frame
 from ocr_parallel_spark.functions.bloom import bloom_probe
 from ocr_parallel_spark.functions.curation import (
     curate_docs,
@@ -218,7 +219,7 @@ def run_curation_pipeline(
     and overwrites the committed verdicts. The per-document screens
     (curate_docs) need no global view, so they are exact under resume."""
     if blocked_hosts is None:
-        blocked_hosts = docs.sparkSession.createDataFrame([], "host string")
+        blocked_hosts = local_frame(docs.sparkSession, [], "host string")
     # The composition scans `docs` several times (screens, lines x2 via
     # dedup_lines' documented double read, grams); under run_resumable
     # that lineage is source-scan + committed-table anti-join, so pin it

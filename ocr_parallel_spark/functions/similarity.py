@@ -17,6 +17,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ocr_parallel_spark import local_frame
 from ocr_parallel_spark.fanout import fan_out
 
 # Hard per-cell occupancy bound for SemDedup pairing (the MAX_BAND_BUCKET
@@ -316,7 +317,8 @@ def centroids_to_df(spark, centroids: list[list[float]]) -> DataFrame:
     index survives the session — the build-once/query-many deployment
     shape (snapshot-append the result next to ``build_ivf_index``'s
     assignment rows)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, centroid array<double>",
     )

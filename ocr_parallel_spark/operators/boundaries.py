@@ -69,26 +69,34 @@ Deliberate divergences:
   reference switches to "\\n" in boundaries mode — a formatting nicety
   we normalize away).
 
-Spark-first shape: everything below is column expressions — higher-order
-functions over arrays (transform/filter/aggregate), substring arithmetic,
-one groupBy per document — ZERO Python on the path. The window scan costs
-O(len/stride x window) per (target, document) group, exactly the work the
-reference does per document in a Python loop, now one row per group
-distributed across executors; group size is bounded by the reference's own
-caps and document envelope (30-1500 pages), so no group outgrows an
-executor at 100 TB.
+Spark-first shape: stage 0 (the per-page re-match) and the one groupBy per
+(target, document) are Column expressions; everything after the aggregate
+is SQL expression text, one ``selectExpr`` per dependency level, with
+higher-order functions over arrays (transform/filter/aggregate) — ZERO
+Python on the path. The scans are guarded so a group does no more work
+than the reference's per-document Python loop: the 300-char scan runs only
+when some page matched, token coverage is counted only for windows that
+hold a start marker, and the 200-char fallback regex and its scan run only
+under ``CASE WHEN`` the main scan found nothing. Group size is bounded by
+the reference's own caps and document envelope (30-1500 pages), so no
+group outgrows an executor at 100 TB.
 
-Engineering note: every heavy subexpression (window scan, search slice,
-offsets array, densest run) is materialized ONCE as an intermediate
-column and referenced by attribute afterwards. Building them inline would
-duplicate the scan tree dozens of times inside a single projection —
-Catalyst analysis/codegen blows up super-linearly in expression size (we
-measured minutes of driver-side planning before this restructure).
+Engineering notes: every heavy value (window scan result, search slice,
+densest run, page-span bounds) is a column of its own level, read by
+attribute afterwards — inlined, the tree would be duplicated inside one
+projection, and a value referenced from a lambda body would be re-built
+per array element (lambda bodies get no common-subexpression
+elimination). Building the levels as SQL text costs one py4j call per
+level instead of one per ``F.*`` call, each of which records its Python
+call site. The marker lists are bound as ``array<string>`` literal
+columns, never spliced into the SQL text, so no quoting is needed and
+parser confs such as ``escapedStringLiterals`` cannot change a match; the
+SQL text itself holds no backslash escapes (newlines are ``char(10)``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Reference constants (text_localization.py:361,365,370,381,386,425,465,
@@ -116,31 +124,13 @@ EXPAND_AFTER_IDX = 5
 NUMERIC_BEFORE = 2
 NUMERIC_AFTER = 12
 PAGE_SEP_LEN = 2  # the "\n\n" joiner
+NL2 = "repeat(char(10), 2)"  # the joiner in SQL text, spelled without escapes
 
 
-def _first_marker_pos(window: Column, markers: list[str]) -> Column:
-    """0-based position of the first occurrence of the highest-priority
-    marker present in the window; NULL if none (F5 pattern loop with
-    break, :372-377). ``nullif(locate, 0)`` evaluates each locate ONCE —
-    a when(locate>0, locate-1) form would scan the window twice per
-    marker, and HOF lambda bodies get no common-subexpression
-    elimination."""
-    if not markers:
-        return F.lit(None).cast("long")
-    return (
-        F.coalesce(
-            *[
-                F.nullif(F.locate(m, window).cast("long"), F.lit(0).cast("long"))
-                for m in markers
-            ]
-        )
-        - 1
-    )
-
-
-def _windows(full_upper: Column, window_size: int) -> Column:
-    """Array of (i, w) sliding-window structs with Python
-    ``range(0, len - window, stride)`` semantics, built in ONE regex pass.
+def _windows(text: str, window_size: int) -> str:
+    """SQL: the ``window_size``-char sliding windows of ``text`` with
+    Python ``range(0, len - window, stride)`` semantics, built in ONE regex
+    pass; window k starts at char ``k * START_STRIDE``.
 
     Spark's ``UTF8String.substring`` resolves a CHAR offset by walking the
     UTF-8 bytes from position 0 (no ASCII fast path), so slicing each
@@ -151,54 +141,48 @@ def _windows(full_upper: Column, window_size: int) -> Column:
     len <= window). Java's ``.`` under ``(?s)`` matches one whole code
     point, line terminators included, so offsets stay in Spark's char
     units."""
-    wins = F.regexp_extract_all(
-        full_upper,
-        F.lit(f"(?s)(?=(.{{{window_size}}}).).{{{START_STRIDE}}}"),
-        1,
-    )
-    return F.transform(
-        wins,
-        lambda w, k: F.struct(
-            (k.cast("long") * START_STRIDE).alias("i"), w.alias("w")
-        ),
+    return (
+        f"regexp_extract_all({text}, "
+        f"'(?s)(?=(.{{{window_size}}}).).{{{START_STRIDE}}}', 1)"
     )
 
 
-def _densest_run(matching: Column) -> Column:
-    """A8 inside F9 (:646-680): (lo, hi) of the densest run of a sorted
-    page array (gaps <= 3); ties keep the EARLIEST maximal group (the
-    reference replaces only on strictly-greater count). Array aggregate."""
-    init = F.struct(
-        F.lit(None).cast("long").alias("bs"),
-        F.lit(None).cast("long").alias("be"),
-        F.lit(0).cast("long").alias("bc"),
-        F.lit(None).cast("long").alias("cs"),
-        F.lit(0).cast("long").alias("cc"),
-        F.lit(None).cast("long").alias("prev"),
+def _first_marker_pos(window: str, markers: str) -> str:
+    """SQL: 0-based position of the first occurrence of the highest-priority
+    marker present in ``window``, -1 if none (F5 pattern loop with break,
+    :372-377). ``markers`` names an array<string> column; once a marker is
+    found the fold locates no further marker."""
+    return (
+        f"aggregate({markers}, -1, "
+        f"(p, m) -> IF(p < 0, locate(m, {window}) - 1, p))"
     )
 
-    def merge(acc, p):
-        new_group = acc["prev"].isNull() | (p - acc["prev"] > DENSE_GAP)
-        better = acc["cc"] > acc["bc"]
-        return F.struct(
-            F.when(new_group & better, acc["cs"]).otherwise(acc["bs"]).alias("bs"),
-            F.when(new_group & better, acc["prev"]).otherwise(acc["be"]).alias("be"),
-            F.when(new_group & better, acc["cc"]).otherwise(acc["bc"]).alias("bc"),
-            F.when(new_group, p).otherwise(acc["cs"]).alias("cs"),
-            F.when(new_group, F.lit(1).cast("long"))
-            .otherwise(acc["cc"] + 1)
-            .alias("cc"),
-            p.alias("prev"),
+
+def _densest_run(matching: str) -> str:
+    """SQL: A8 inside F9 (:646-680): (lo, hi) of the densest run of a
+    sorted page array (gaps <= 3); ties keep the EARLIEST maximal group (the
+    reference replaces only on strictly-greater count). Array aggregate
+    over (best start/end/count, current start/count, previous page); the
+    first page (no previous) opens a group."""
+    nul = "CAST(NULL AS BIGINT)"
+
+    def state(bs, be, bc, cs, cc):
+        return (
+            f"named_struct('bs', {bs}, 'be', {be}, 'bc', {bc}, "
+            f"'cs', {cs}, 'cc', {cc}, 'prev', CAST(p AS BIGINT))"
         )
 
-    def finish(acc):
-        better = acc["cc"] > acc["bc"]
-        return F.struct(
-            F.when(better, acc["cs"]).otherwise(acc["bs"]).alias("lo"),
-            F.when(better, acc["prev"]).otherwise(acc["be"]).alias("hi"),
-        )
-
-    return F.aggregate(matching, init, merge, finish)
+    return f"""aggregate({matching},
+        named_struct('bs', {nul}, 'be', {nul}, 'bc', 0L,
+                     'cs', {nul}, 'cc', 0L, 'prev', {nul}),
+        (a, p) -> CASE
+          WHEN p - a.prev <= {DENSE_GAP}
+            THEN {state('a.bs', 'a.be', 'a.bc', 'a.cs', 'a.cc + 1')}
+          WHEN a.cc > a.bc
+            THEN {state('a.cs', 'a.prev', 'a.cc', 'CAST(p AS BIGINT)', '1L')}
+          ELSE {state('a.bs', 'a.be', 'a.bc', 'CAST(p AS BIGINT)', '1L')} END,
+        a -> IF(a.cc > a.bc, named_struct('lo', a.cs, 'hi', a.prev),
+                named_struct('lo', a.bs, 'hi', a.be)))"""
 
 
 def refine_pages_with_boundaries(
@@ -258,8 +242,8 @@ def refine_pages_with_boundaries(
     # "\n\n"-joined text, cumulative offsets) are produced as AGGREGATE
     # RESULT EXPRESSIONS, not as downstream projections: an Aggregate
     # output is an attribute, which later lambda bodies can only READ.
-    # Built as withColumn projections instead, Catalyst may inline the
-    # defining expression into a higher-order-function lambda, where it is
+    # Built as projections instead, Catalyst may inline the defining
+    # expression into a higher-order-function lambda, where it is
     # re-evaluated PER ARRAY ELEMENT — the 17 KB concat+upper rebuilt for
     # every one of ~700 scan windows turned this operator quadratic
     # (measured: 2.3 s/group before, ~ms after).
@@ -283,254 +267,137 @@ def refine_pages_with_boundaries(
         ).alias("matching"),
         F.first("tokens").alias("tokens"),
         F.first("anchor").alias("anchor"),
+        # the marker lists, bound as literals: never part of the SQL text
+        *[
+            F.array(*[F.lit(m) for m in ms]).cast("array<string>").alias(name)
+            for name, ms in (
+                ("_sm", start_markers),
+                ("_eam", end_after_markers),
+                ("_ebm", end_before_markers),
+            )
+        ],
     )
 
-    c = F.col
-    t_count = F.size(c("tokens"))
-
-    # --- stage 1: window scans over the aggregate-produced text, one
-    # regex pass per window size (see _windows).
-    g = g.withColumn("_wins", _windows(c("_upper"), START_WINDOW)).withColumn(
-        "_fwins", _windows(c("_upper"), FALLBACK_WINDOW)
-    )
-
-    # --- stage 2: F5 main scan — earliest qualifying window w/ max hits.
     num, den = START_MIN_COVERAGE
-    scored = F.transform(
-        c("_wins"),
-        lambda s: F.struct(
-            s["i"].alias("i"),
-            F.size(F.filter(c("tokens"), lambda t: s["w"].contains(t))).alias(
-                "hits"
-            ),
-            _first_marker_pos(s["w"], start_markers).alias("mpos"),
-        ),
-    )
-    g = g.withColumn(
-        "_qual",
-        F.filter(
-            scored,
-            lambda s: (s["hits"] * den >= t_count * num)
-            & (s["hits"] > 0)
-            & s["mpos"].isNotNull(),
-        ),
-    )
-    g = g.withColumn(
-        "_max_hits", F.array_max(F.transform(c("_qual"), lambda s: s["hits"]))
-    )
-    g = g.withColumn(
-        "_best",
-        F.get(F.filter(c("_qual"), lambda s: s["hits"] == c("_max_hits")), 0),
-    )
-
-    # F5 fallback: first >= 7/10-coverage window containing the anchor;
-    # the window OFFSET is the start (:390).
     fnum, fden = FALLBACK_MIN_COVERAGE
-    g = g.withColumn(
-        "_fb",
-        F.get(
-            F.filter(
-                c("_fwins"),
-                lambda s: (
-                    F.size(F.filter(c("tokens"), lambda t: s["w"].contains(t)))
-                    * fden
-                    >= t_count * fnum
-                )
-                & (t_count > 0)
-                & s["w"].contains(c("anchor")),
-            ),
-            0,
+    levels = [
+        # F5 main scan, only where some page matched: windows holding a
+        # start marker are scored; of those with >= 1/2 coverage the
+        # earliest with the most hits wins — the max of (hits, -offset).
+        # The densest run (stage 5) is needed only past 10 matched pages.
+        (
+            f"""CASE WHEN size(matching) > 0 THEN array_max(filter(transform(
+                  filter(transform({_windows("_upper", START_WINDOW)},
+                    (w, k) -> named_struct('w', w, 'i', k * {START_STRIDE},
+                                           'mpos', {_first_marker_pos("w", "_sm")})),
+                    s -> s.mpos >= 0),
+                  s -> named_struct('hits', size(filter(tokens, t -> contains(s.w, t))),
+                                    'ni', -s.i, 'mpos', s.mpos)),
+                s -> s.hits > 0 AND s.hits * {den} >= size(tokens) * {num}))
+                END AS _best""",
+            f"""CASE WHEN size(matching) > {DENSE_MIN_MATCHES}
+                THEN {_densest_run("matching")} END AS _dense""",
         ),
-    )
-    # fallback_first5 short-circuits BEFORE boundary detection (:578-586)
-    g = g.withColumn(
-        "start_char",
-        F.when(
-            F.size(c("matching")) > 0,
-            F.coalesce(c("_best")["i"] + c("_best")["mpos"], c("_fb")["i"]),
+        # F5 fallback, only when the main scan found nothing: the first
+        # >= 7/10-coverage 200-char window containing the anchor; its
+        # OFFSET is the start (:380-391).
+        (
+            f"""CASE WHEN size(matching) > 0 AND _best IS NULL THEN get(filter(
+                  transform({_windows("_upper", FALLBACK_WINDOW)}, (w, k) -> IF(
+                    contains(w, anchor) AND size(tokens) > 0 AND size(filter(
+                      tokens, t -> contains(w, t))) * {fden} >= size(tokens) * {fnum},
+                    k * {START_STRIDE}, NULL)),
+                  i -> i IS NOT NULL), 0) END AS _fb""",
+            f"""IF(size(matching) > {DENSE_MIN_MATCHES},
+                filter(matching, p -> p BETWEEN _dense.lo AND _dense.hi),
+                matching) AS _meff""",
         ),
-    )
-
-    # --- stage 3: F6 end scan over at most 3000 chars from the start.
-    g = g.withColumn(
-        "_stext",
-        F.when(
-            c("start_char").isNotNull(),
-            F.substring(
-                c("_upper"), (c("start_char") + 1).cast("int"), MAX_SEARCH_LENGTH
-            ),
+        # NULL without a matching page: fallback_first5 short-circuits
+        # BEFORE boundary detection (:578-586)
+        (
+            "CAST(coalesce(_best.mpos - _best.ni, _fb) AS BIGINT) AS start_char",
+            "array_min(_meff) AS _mn",
+            "array_max(_meff) AS _mx",
         ),
-    ).withColumn("_slen", F.length(c("_stext")).cast("long"))
-    cands = []
-    for m in end_after_markers:
-        fm = F.locate(m, c("_stext"))  # 1-based, 0 if absent
-        pos = fm - 1 + len(m)  # 0-based match end
-        rel = F.locate(
-            ".\n\n",
-            F.substring(c("_stext"), (pos + 1).cast("int"), MAX_SEARCH_LENGTH),
-        )
-        section_end = F.when(rel > 0, pos + rel - 1 + 3).otherwise(
-            F.least(pos + SECTION_FALLBACK_CHARS, c("_slen"))
-        )
-        cands.append(F.when(fm > 0, section_end))
-    for m in end_before_markers:
-        fm = F.locate(m, c("_stext"))
-        cands.append(F.when(fm > 0, (fm - 1).cast("long")))
-    # Empty-marker guard (mirrors _first_marker_pos): with no end markers
-    # at all the scan finds nothing and only the 2000-char hard cap below
-    # can set end_char — without this, cands[0] raised IndexError at
-    # plan-build time with an opaque traceback.
-    if not cands:
-        earliest = F.lit(None).cast("long")
-    else:
-        earliest = F.least(*cands) if len(cands) > 1 else cands[0]
-    g = g.withColumn("_earliest", earliest)
-    g = g.withColumn(
-        "end_char",
-        F.when(
-            c("_earliest").isNotNull() & (c("_earliest") < c("_slen")),
-            c("start_char") + c("_earliest"),
-        ).when(c("_slen") > HARD_END_CAP, c("start_char") + HARD_END_CAP),
-    )
-
-    # --- stage 4: char span -> page span via the aggregate-produced
-    # cumulative offsets.
-    idxs = F.sequence(F.lit(1), F.size(c("pages")))
-
-    def page_containing(pos: Column) -> Column:
-        k = F.get(
-            F.filter(
-                idxs,
-                lambda k: (pos >= F.element_at(c("_offsets"), k))
-                & (pos < F.element_at(c("_offsets"), (k + 1).cast("int"))),
-            ),
-            0,
-        )
-        return F.element_at(c("_page_ids"), k.cast("int"))
-
-    g = g.withColumn(
-        "_start_page",
-        F.when(c("start_char").isNotNull(), page_containing(c("start_char"))),
-    ).withColumn(
-        "_end_page",
-        F.when(c("end_char").isNotNull(), page_containing(c("end_char"))),
-    )
-
-    # --- stage 5: the three result paths + W6 caps.
-    g = (
-        g.withColumn("_dense", _densest_run(c("matching")))
-        .withColumn(
-            "_meff",
-            F.when(
-                F.size(c("matching")) > DENSE_MIN_MATCHES,
-                F.filter(
-                    c("matching"),
-                    lambda p: (p >= c("_dense")["lo"]) & (p <= c("_dense")["hi"]),
-                ),
-            ).otherwise(c("matching")),
-        )
-        .withColumn("_mn", F.array_min(c("_meff")))
-        .withColumn("_mx", F.array_max(c("_meff")))
-        .withColumn("_imin", F.array_position(c("_page_ids"), c("_mn")))
-        .withColumn("_imax", F.array_position(c("_page_ids"), c("_mx")))
-    )
-    start_idx0 = F.greatest(c("_imin") - 1 - EXPAND_BEFORE_IDX, F.lit(0))
-    end_idx0 = F.least(
-        F.size(c("_page_ids")).cast("long"), c("_imax") - 1 + EXPAND_AFTER_IDX + 1
-    )
-    g = g.withColumn(
-        "_expanded",
-        F.slice(
-            c("_page_ids"),
-            (start_idx0 + 1).cast("int"),
-            F.greatest(end_idx0 - start_idx0, F.lit(0)).cast("int"),
+        # F6 end scan over at most 3000 chars from the start; the
+        # expanded path's candidate-index window (:504-537)
+        (
+            f"""CASE WHEN start_char IS NOT NULL
+                THEN substring(_upper, CAST(start_char + 1 AS INT), {MAX_SEARCH_LENGTH})
+                END AS _stext""",
+            f"""CAST(greatest(array_position(_page_ids, _mn) - 1 - {EXPAND_BEFORE_IDX},
+                0) AS INT) AS _xlo""",
+            f"""CAST(least(size(_page_ids),
+                array_position(_page_ids, _mx) + {EXPAND_AFTER_IDX}) AS INT) AS _xhi""",
         ),
-    )
-    numeric_limited = F.slice(
-        F.filter(
-            c("_page_ids"),
-            lambda p: (p >= c("_mn") - NUMERIC_BEFORE)
-            & (p <= c("_mx") + NUMERIC_AFTER),
+        (
+            "length(_stext) AS _slen",
+            "slice(_page_ids, _xlo + 1, greatest(_xhi - _xlo, 0)) AS _expanded",
         ),
-        1,
-        MAX_PAGES_WITHOUT_BOUNDARIES,
-    )
-    bounded_pages = F.slice(
-        F.filter(
-            c("_page_ids"),
-            lambda p: (p >= c("_start_page")) & (p <= c("_end_page")),
+        # "after" markers end at F7 find_section_end(match end): the next
+        # ".\n\n" + 3, else + 500; "before" markers at the match start. No
+        # marker at all leaves only the hard cap below.
+        (
+            f"""array_min(concat(
+                  transform(
+                    transform(_eam, m -> nullif(locate(m, _stext), 0) + length(m) - 1),
+                    e -> IF(e IS NULL, NULL, coalesce(
+                      nullif(locate(concat('.', {NL2}), _stext, e + 1), 0) + 2,
+                      least(e + {SECTION_FALLBACK_CHARS}, _slen)))),
+                  transform(_ebm, m -> nullif(locate(m, _stext), 0) - 1)))
+                AS _earliest""",
         ),
-        1,
-        MAX_PAGES_WITH_BOUNDARIES,
-    )
-
-    no_match = F.size(c("matching")) == 0
-    has_bounds = (
-        c("start_char").isNotNull()
-        & c("end_char").isNotNull()
-        & c("_start_page").isNotNull()
-        & c("_end_page").isNotNull()
-    )
-    method = (
-        F.when(no_match, F.lit("fallback_first5"))
-        .when(has_bounds, F.lit("boundaries"))
-        .otherwise(F.lit("expanded"))
-    )
-    final_pages = (
-        F.when(no_match, F.slice(c("_page_ids"), 1, MAX_FALLBACK_PAGES))
-        .when(has_bounds, bounded_pages)
-        .otherwise(
-            F.when(
-                F.size(c("_expanded")) > MAX_PAGES_WITHOUT_BOUNDARIES,
-                numeric_limited,
-            ).otherwise(c("_expanded"))
-        )
-    )
-    g = g.withColumn("_final_pages", final_pages)
+        (
+            f"""CASE WHEN _earliest < _slen THEN start_char + _earliest
+                WHEN _slen > {HARD_END_CAP} THEN start_char + {HARD_END_CAP}
+                END AS end_char""",
+        ),
+        # stage 4: 1-based index of the page holding a char position —
+        # the count of cumulative offsets at or before it (:606-627)
+        (
+            """CASE WHEN start_char IS NOT NULL
+                THEN size(filter(_offsets, o -> o <= start_char)) END AS _sk""",
+            """CASE WHEN end_char IS NOT NULL
+                THEN size(filter(_offsets, o -> o <= end_char)) END AS _ek""",
+        ),
+        # stage 5: the three result paths + W6 caps. An end implies a
+        # start, so _ek IS NOT NULL means boundaries were detected; the
+        # bounded pages are the sorted ids from the start to the end page.
+        (
+            """CASE WHEN size(matching) = 0 THEN 'fallback_first5'
+                WHEN _ek IS NOT NULL THEN 'boundaries' ELSE 'expanded' END AS method""",
+            f"""CASE
+                WHEN size(matching) = 0 THEN slice(_page_ids, 1, {MAX_FALLBACK_PAGES})
+                WHEN _ek IS NOT NULL THEN slice(_page_ids, _sk,
+                  least(_ek - _sk + 1, {MAX_PAGES_WITH_BOUNDARIES}))
+                WHEN size(_expanded) > {MAX_PAGES_WITHOUT_BOUNDARIES} THEN slice(
+                  filter(_page_ids, p -> p BETWEEN _mn - {NUMERIC_BEFORE}
+                                           AND _mx + {NUMERIC_AFTER}),
+                  1, {MAX_PAGES_WITHOUT_BOUNDARIES})
+                ELSE _expanded END AS _final_pages""",
+        ),
+    ]
+    for level in levels:
+        g = g.selectExpr("*", *level)
 
     # Refined text (W3-with-boundaries, :715-796 sane-frame form): concat
     # the FINAL pages, and when boundaries were detected slice at the
-    # positions re-mapped into the final-pages frame (start_page opens
+    # positions re-mapped into the final-pages frame (the start page opens
     # that frame, so subtract its candidate offset).
-    g = g.withColumn(
-        "_final_concat",
-        F.concat_ws(
-            "\n\n",
-            F.transform(
-                F.filter(
-                    c("pages"),
-                    lambda s: F.array_contains(c("_final_pages"), s["doc_id"]),
-                ),
-                lambda s: s["norm"],
-            ),
-        ),
+    final_concat = (
+        f"concat_ws({NL2}, transform(filter(pages, "
+        "s -> array_contains(_final_pages, s.doc_id)), s -> s.norm))"
     )
-    start_page_off = F.element_at(
-        c("_offsets"),
-        F.array_position(c("_page_ids"), c("_start_page")).cast("int"),
-    )
-    g = g.withColumn(
-        "refined_text",
-        F.when(
-            has_bounds,
-            F.substring(
-                c("_final_concat"),
-                (c("start_char") - start_page_off + 1).cast("int"),
-                (c("end_char") - c("start_char")).cast("int"),
-            ),
-        ).otherwise(c("_final_concat")),
-    )
-
-    return g.select(
+    return g.selectExpr(
         "target_id",
         "source",
-        method.alias("method"),
-        F.array_join(
-            F.transform(c("_final_pages"), lambda p: p.cast("string")), ","
-        ).alias("pages_csv"),
-        F.size(c("_final_pages")).cast("long").alias("n_pages"),
-        # fallback_first5 returns before boundary detection (:578-586)
-        F.when(~no_match, c("start_char")).alias("start_char"),
-        F.when(~no_match, c("end_char")).alias("end_char"),
-        "refined_text",
+        "method",
+        "array_join(transform(_final_pages, p -> CAST(p AS STRING)), ',') AS pages_csv",
+        "CAST(size(_final_pages) AS BIGINT) AS n_pages",
+        "start_char",
+        "end_char",
+        f"""CASE WHEN _ek IS NOT NULL THEN substring({final_concat},
+              CAST(start_char - element_at(_offsets, _sk) + 1 AS INT),
+              CAST(end_char - start_char AS INT))
+             ELSE {final_concat} END AS refined_text""",
     )

@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ocr_parallel_spark import local_frame
 from ocr_parallel_spark.config import MATCH_THRESHOLD
 from ocr_parallel_spark.fanout import fan_out
 from ocr_parallel_spark.functions.similarity import brute_force_topk
@@ -168,7 +169,7 @@ def q_theta_join_localization(spark, sf_dir):
     """J2 broadcast theta-join targets x docs on token score >= 0.6
     (text_localization.py:202-268; scorer :168-199)."""
     d = _docs(spark, sf_dir).select("doc_id", F.col("norm").alias("chunk_text"))
-    targets = spark.createDataFrame(TARGETS, "target_id int, tokens array<string>")
+    targets = local_frame(spark, TARGETS, "target_id int, tokens array<string>")
     hits = localize(targets, d, "tokens", "chunk_text")
     return hits.select(
         "target_id", "doc_id", F.round(F.col("score"), 4).alias("score")
@@ -431,9 +432,7 @@ def q_full_process(spark, sf_dir):
     single logical plan."""
     docs = _docs(spark, sf_dir)
     chunks = overlap_chunks(docs, "source", "doc_id", "norm", TCHUNK, TOVERLAP)
-    targets = spark.createDataFrame(
-        TARGETS, "target_id int, tokens array<string>"
-    )
+    targets = local_frame(spark, TARGETS, "target_id int, tokens array<string>")
     loc = localize(targets, chunks, "tokens", "chunk_text")
     pages = loc.select(
         "target_id",
@@ -462,9 +461,7 @@ def q_full_process_capped(spark, sf_dir):
     reference's deterministic truncation — before the ordered concat."""
     docs = _docs(spark, sf_dir)
     chunks = overlap_chunks(docs, "source", "doc_id", "norm", TCHUNK, TOVERLAP)
-    targets = spark.createDataFrame(
-        TARGETS, "target_id int, tokens array<string>"
-    )
+    targets = local_frame(spark, TARGETS, "target_id int, tokens array<string>")
     loc = localize(targets, chunks, "tokens", "chunk_text")
     pages = loc.select(
         "target_id",
@@ -1070,7 +1067,7 @@ def q_bm25_search(spark, sf_dir):
     stats = d.groupBy().agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    terms = spark.createDataFrame(BM25_QUERIES, "query_id string, term string")
+    terms = local_frame(spark, BM25_QUERIES, "query_id string, term string")
     hit = (
         d.crossJoin(F.broadcast(terms))
         .select(
@@ -1199,7 +1196,8 @@ def q_robots_filter(spark, sf_dir):
         ).alias("host"),
         F.concat(F.lit("/p/"), F.col("doc_id").cast("string")).alias("path"),
     )
-    robots = spark.createDataFrame(
+    robots = local_frame(
+        spark,
         [(f"site-{k}.example.com", txt) for k, txt in ROBOTS_FIXTURE],
         "host string, robots_txt string",
     )
@@ -2555,8 +2553,8 @@ def q_domain_stats(spark, sf_dir):
     )
     d = docs.select("doc_id", host_col(url).alias("host"))
     w = Window.partitionBy("host")
-    blocked = spark.createDataFrame(
-        [(h,) for h in BLOCKED_HOSTS], "host string"
+    blocked = local_frame(
+        spark, [(h,) for h in BLOCKED_HOSTS], "host string"
     ).select(F.lower(F.col("host")).alias("host"), F.lit(True).alias("_blocked"))
     return (
         d.withColumn("host_docs", F.count(F.lit(1)).over(w).cast("long"))
@@ -3060,8 +3058,8 @@ def q_localization_variants(spark, sf_dir):
         .withColumn("_upper", F.upper(F.col("norm")))
         .withColumn("_wordified", wordify(F.col("_upper")))
     )
-    targets = spark.createDataFrame(
-        VARIANT_TARGETS, "target_id int, name string"
+    targets = local_frame(
+        spark, VARIANT_TARGETS, "target_id int, name string"
     ).select(
         "target_id",
         tokenize("name").alias("raw_tokens"),
@@ -3103,7 +3101,7 @@ def q_full_process_boundaries(spark, sf_dir):
     """F9 with char-level boundary refinement (F5-F7) and the W6 caps
     5/15/20 (text_localization.py:540-708): chunk (W1) -> localize (J2)
     -> chunk->pages (W2) -> per-page re-match -> start/end char-window
-    detection -> char span mapped back to a page span. Pure column
+    detection -> char span mapped back to a page span. Column and SQL
     expressions over one groupBy — zero Python."""
     from ocr_parallel_spark.operators.boundaries import (
         refine_pages_with_boundaries,
@@ -3111,7 +3109,8 @@ def q_full_process_boundaries(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     chunks = overlap_chunks(docs, "source", "doc_id", "norm", TCHUNK, TOVERLAP)
-    targets = spark.createDataFrame(
+    targets = local_frame(
+        spark,
         [(tid, toks, toks[0]) for tid, toks in TARGETS],
         "target_id int, tokens array<string>, anchor string",
     )
@@ -3215,7 +3214,7 @@ def q_two_pass_localization(spark, sf_dir):
     match get the expensive relaxed pass 2 (threshold 1/3) — an anti-join
     gates the costly work, the plan-shape analog of predicate pushdown."""
     d = _docs(spark, sf_dir).select("doc_id", F.col("norm").alias("chunk_text"))
-    targets = spark.createDataFrame(TARGETS, "target_id int, tokens array<string>")
+    targets = local_frame(spark, TARGETS, "target_id int, tokens array<string>")
     p1 = localize(targets, d, "tokens", "chunk_text").select(
         "target_id", "doc_id", F.round(F.col("score"), 4).alias("score")
     )

@@ -189,6 +189,7 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("ocr-parallel-spark-curate").getOrCreate()
 
+    from ocr_parallel_spark import local_frame
     from ocr_parallel_spark.curation_pipeline import run_curation_pipeline
     from ocr_parallel_spark.functions.bloom import (
         BLOOM_HASHES,
@@ -237,7 +238,7 @@ def main() -> None:
     if args.blocklist:
         with open(args.blocklist, encoding="utf-8") as fh:
             hosts = [(ln.strip(),) for ln in fh if ln.strip()]
-        blocked = spark.createDataFrame(hosts, "host string")
+        blocked = local_frame(spark, hosts, "host string")
 
     def read_opt(path):
         return spark.read.parquet(path) if path else None

@@ -20,6 +20,14 @@ from ocr_parallel_spark.operators import boundaries as B
 START_MARKERS = ["QQSTART ALPHA", "QQALT"]
 AFTER_MARKERS = ["QQEND BETA", "QQEND GAMMA"]
 BEFORE_MARKERS = ["QQNEXT ITEM"]
+MARKERS = (START_MARKERS, AFTER_MARKERS, BEFORE_MARKERS)
+# Quote, backslash, LIKE wildcard, regex metacharacters and a newline: the
+# operator must match markers as plain substrings whatever they hold.
+SPECIAL_MARKERS = (
+    ["QQ'S\\TART%(", "QQ.ALT\nX"],
+    ["QQ'END\\.%", "QQ(END)\nB"],
+    ["QQ\\NEXT('%'"],
+)
 
 
 # ------------------------------------------------------------------ mirror --
@@ -37,13 +45,15 @@ def _match_page(tokens: list[str], text: str) -> bool:
     return len(tokens) > 0 and 5 * hits >= 3 * len(tokens)
 
 
-def _detect_start(U: str, tokens: list[str], anchor: str) -> int | None:
+def _detect_start(
+    U: str, tokens: list[str], anchor: str, start_markers: list[str]
+) -> int | None:
     best_pos, best_hits = None, 0
     for i in range(0, len(U) - B.START_WINDOW, B.START_STRIDE):
         w = U[i : i + B.START_WINDOW]
         hits = sum(1 for t in tokens if t in w)
         if hits > best_hits and 2 * hits >= len(tokens) and hits > 0:
-            for m in START_MARKERS:
+            for m in start_markers:
                 p = w.find(m)
                 if p >= 0:
                     best_pos, best_hits = i + p, hits
@@ -65,14 +75,16 @@ def _section_end(stext: str, pos: int) -> int:
     return min(pos + B.SECTION_FALLBACK_CHARS, len(stext))
 
 
-def _detect_end(U: str, start: int) -> int | None:
+def _detect_end(
+    U: str, start: int, after: list[str], before: list[str]
+) -> int | None:
     stext = U[start : start + B.MAX_SEARCH_LENGTH]
     cands = []
-    for m in AFTER_MARKERS:
+    for m in after:
         fm = stext.find(m)
         if fm >= 0:
             cands.append(_section_end(stext, fm + len(m)))
-    for m in BEFORE_MARKERS:
+    for m in before:
         fm = stext.find(m)
         if fm >= 0:
             cands.append(fm)
@@ -106,7 +118,10 @@ def _concat(page_texts: dict[int, str], pages: list[int]) -> str:
     return "\n\n".join(page_texts[p] for p in pages)
 
 
-def _mirror_refine(page_texts: dict[int, str], tokens: list[str], anchor: str):
+def _mirror_refine(
+    page_texts: dict[int, str], tokens: list[str], anchor: str, markers=MARKERS
+):
+    start_markers, after, before = markers
     page_ids = sorted(page_texts)
     matching = [p for p in page_ids if _match_page(tokens, page_texts[p])]
     if not matching:
@@ -114,8 +129,8 @@ def _mirror_refine(page_texts: dict[int, str], tokens: list[str], anchor: str):
         return ("fallback_first5", final, None, None, _concat(page_texts, final))
     full = "\n\n".join(page_texts[p] for p in page_ids)
     U = full.upper()
-    start = _detect_start(U, tokens, anchor)
-    end = _detect_end(U, start) if start is not None else None
+    start = _detect_start(U, tokens, anchor, start_markers)
+    end = _detect_end(U, start, after, before) if start is not None else None
     start_page = end_page = None
     off = 0
     offsets = {}
@@ -158,7 +173,7 @@ def _mirror_refine(page_texts: dict[int, str], tokens: list[str], anchor: str):
 
 
 # ------------------------------------------------------------------ driver --
-def _run_spark(spark, cases):
+def _run_spark(spark, cases, markers=MARKERS):
     """cases: list of (case_id, page_texts, tokens, anchor). Runs every
     case in ONE refine call (source = case id)."""
     cand_rows, page_rows, target_rows = [], [], []
@@ -175,18 +190,20 @@ def _run_spark(spark, cases):
     targets = spark.createDataFrame(
         target_rows, "target_id int, tokens array<string>, anchor string"
     )
-    out = B.refine_pages_with_boundaries(
-        cand, pages, targets, START_MARKERS, AFTER_MARKERS, BEFORE_MARKERS
-    )
+    out = B.refine_pages_with_boundaries(cand, pages, targets, *markers)
     return {r.target_id: r for r in out.collect()}
 
 
-def _check(spark, cases):
-    got = _run_spark(spark, cases)
+def _check(spark, cases, markers=MARKERS):
+    """Spark against the mirror on every case; returns the mirror's
+    methods."""
+    got = _run_spark(spark, cases, markers)
+    methods = []
     for cid, (page_texts, tokens, anchor) in enumerate(cases):
         method, pages_, start, end, text = _mirror_refine(
-            page_texts, tokens, anchor
+            page_texts, tokens, anchor, markers
         )
+        methods.append(method)
         exp_csv = ",".join(str(cid * 1000 + p) for p in pages_)
         r = got[cid]
         assert r.method == method, (cid, r.method, method)
@@ -195,6 +212,7 @@ def _check(spark, cases):
         assert r.start_char == start, (cid, r.start_char, start)
         assert r.end_char == end, (cid, r.end_char, end)
         assert r.refined_text == text, (cid, r.refined_text[:80], text[:80])
+    return methods
 
 
 FILLER = "lorem word text page content filler body line item value "
@@ -448,8 +466,9 @@ def test_multibyte_chars_keep_char_offsets(spark):
     assert len(cases[1][0][0].encode("utf-16-le")) > 2 * len(cases[1][0][0])
 
 
-@pytest.mark.parametrize("seed", [7, 42])
-def test_randomized_agreement(spark, seed):
+def _random_cases(seed: int, markers=MARKERS) -> list:
+    """12 random cases; pages carry the first marker of each list."""
+    (start, *_), (after, *_), (before, *_) = markers
     rng = random.Random(seed)
     vocab = ["papa", "quebec", "romeo", "sierra", "tango", "uniform", "victor"]
     cases = []
@@ -465,16 +484,62 @@ def test_randomized_agreement(spark, seed):
             if rng.random() < 0.5:  # seed token hits
                 words += [t.lower() for t in rng.sample(toks, k=rng.randint(1, 3))]
             if rng.random() < 0.25:
-                words.append("qqstart alpha")
+                words.append(start.lower())
             if rng.random() < 0.2:
-                words.append("qqend beta")
+                words.append(after.lower())
             if rng.random() < 0.15:
-                words.append("qqnext item")
+                words.append(before.lower())
             if rng.random() < 0.2:
                 words.append("end.")
             pages[p] = " ".join(words)
         cases.append((pages, toks, toks[0]))
-    _check(spark, cases)
+    return cases
+
+
+@pytest.mark.parametrize("seed", [7, 42])
+def test_randomized_agreement(spark, seed):
+    _check(spark, _random_cases(seed))
+
+
+@pytest.mark.parametrize("seed", [7, 42])
+def test_special_char_markers(spark, seed):
+    """Markers are data, never SQL text: ones holding a quote, a
+    backslash, ``%``, ``(``, ``.`` and a newline match as plain substrings
+    in both engines, on crafted cases for every marker and on random
+    ones."""
+    (s1, s2), (a1, a2), (b1,) = SPECIAL_MARKERS
+    crafted = [
+        (
+            {
+                0: _page("intro"),
+                1: _page(f"ALPHA BRAVO {s1.lower()} ALPHA BRAVO details"),
+                2: _page(f"body {a1.lower()} closing words") + " end.",
+                3: _page("tail"),
+            },
+            ["ALPHA", "BRAVO"],
+            "ALPHA",
+        ),
+        (
+            {
+                0: _page(f"CHARLIE DELTA {s2.lower()} CHARLIE DELTA"),
+                1: _page(f"more {a2.lower()} words") + " end.",
+                2: _page("tail"),
+            },
+            ["CHARLIE", "DELTA"],
+            "CHARLIE",
+        ),
+        (
+            {
+                0: _page(f"ECHO GOLF {s1.lower()} ECHO GOLF"),
+                1: _page(f"body {b1.lower()} next entity"),
+            },
+            ["ECHO", "GOLF"],
+            "ECHO",
+        ),
+    ]
+    cases = crafted + _random_cases(seed, SPECIAL_MARKERS)
+    methods = _check(spark, cases, SPECIAL_MARKERS)
+    assert methods[:3] == ["boundaries"] * 3
 
 
 def test_large_document_scan_is_not_quadratic(spark):
@@ -504,10 +569,42 @@ def test_large_document_scan_is_not_quadratic(spark):
     assert wall < 60, f"boundary scan took {wall:.0f}s — quadratic regression?"
 
 
+def _window_regex_guards(plan, window_size: int) -> list[tuple[str, str]]:
+    """For every ``window_size``-char window regex in an optimized plan's
+    expressions: the alias it is projected under and the conditions of the
+    CASE WHENs around it."""
+    found = []
+
+    def walk(e, alias, conds):
+        cls = e.getClass().getSimpleName()
+        if cls == "Alias":
+            alias = e.name()
+        elif cls == "CaseWhen":
+            conds = conds + (e.toString().split(" THEN ")[0],)
+        elif cls == "RegExpExtractAll" and f".{{{window_size}}}" in e.toString():
+            found.append((alias, " ".join(conds)))
+        kids = e.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), alias, conds)
+
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        exprs = node.expressions()
+        for i in range(exprs.size()):
+            walk(exprs.apply(i), None, ())
+        kids = node.children()
+        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
 def test_refine_plan_shape(spark):
     """Plan guard: one broadcast join for targets, no row-at-a-time
     Python, no SortMergeJoin on the candidates path, and the window
-    scans are expression work above a single aggregate."""
+    scans are expression work above a single aggregate. The 300-char scan
+    runs only where some page matched; the 200-char fallback regex sits
+    only inside the ``_fb`` CASE WHEN on the main scan finding nothing,
+    never in a column evaluated for every group."""
     cand = spark.createDataFrame(
         [(1, "s", 0), (1, "s", 1)], "target_id int, source string, doc_id bigint"
     )
@@ -524,3 +621,10 @@ def test_refine_plan_shape(spark):
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "MapInPandas" not in p  # zero Python on this operator
+    opt = out._jdf.queryExecution().optimizedPlan()
+    main = _window_regex_guards(opt, B.START_WINDOW)
+    assert main and all("size(matching" in c for _, c in main), main
+    fallback = _window_regex_guards(opt, B.FALLBACK_WINDOW)
+    assert fallback, "no fallback scan in the plan"
+    for alias, conds in fallback:
+        assert alias == "_fb" and "isnull(_best" in conds, (alias, conds)

@@ -105,6 +105,28 @@ def test_theta_join_broadcasts_target_side(spark, sf_dir):
     assert "SortMergeJoin" not in p  # never shuffles the big side for J2
 
 
+def test_local_frame_is_a_local_table_scan(spark, sf_dir):
+    """Constant frames ship to the JVM once and plan as a LocalTableScan,
+    never as a Python RDD (``ExistingRDD``), each scan of which would run
+    Python tasks. ``createDataFrame(<list>)`` builds the latter, so a
+    silent fall back to it shows here."""
+    from ocr_parallel_spark import local_frame
+    from ocr_parallel_spark.queries_catalog import q_full_process_boundaries
+
+    rows = [(1, ["A", "B"], "A"), (2, [], None)]
+    frame = local_frame(
+        spark, rows, "target_id int, tokens array<string>, anchor string"
+    )
+    empty = local_frame(spark, [], "host string")
+    for df in (frame, empty):
+        p = plan_of(df, "simple")
+        assert "LocalTableScan" in p and "ExistingRDD" not in p
+    assert [tuple(r) for r in frame.collect()] == rows
+    assert empty.collect() == []
+    query = q_full_process_boundaries(spark, sf_dir)
+    assert "ExistingRDD" not in plan_of(query, "simple")
+
+
 def test_cosine_topk_broadcasts_query_side(spark, sf_dir):
     from ocr_parallel_spark.queries_catalog import q_cosine_topk
 
