@@ -17,17 +17,20 @@ constant tuned to either environment (the round-6 rule). Round-robin
 ``repartition(n)`` is retry-safe (Spark sorts before repartition,
 SPARK-23207) and every catalog consumer is order-insensitive.
 
-The partition probe (``df.rdd.getNumPartitions()``) is free for a bare
-scan chain (plan compilation only), but under AQE it EXECUTES query
-stages when the plan already contains an exchange or a broadcast build
-— a thrown-away job inside the timed region (round-6 review finding,
-confirmed experimentally). ``fan_out`` therefore probes only plans whose
-every analyzed node is a scan, filter, projection or alias; anything
-else (join, window, aggregate, distinct, sort, sample, existing
-repartition, ...) is returned unchanged — such frames either already
-carry shuffle parallelism or were fanned upstream. The check walks the
-node classes, not the rendered plan, so a column named ``Union`` or
-``Window`` does not change the decision.
+``fan_out`` probes only plans whose every analyzed node is a scan,
+filter, projection or alias; anything else (join, window, aggregate,
+distinct, sort, sample, existing repartition, ...) is returned unchanged
+— such frames either already carry shuffle parallelism or were fanned
+upstream, and under AQE a partition probe of a plan with an exchange or
+a broadcast build EXECUTES query stages (round-6 review finding). The
+check walks the node classes, not the rendered plan, so a column named
+``Union`` or ``Window`` does not change the decision.
+
+The probe counts the partitions of the physical plan's scan leaf: its
+RDD is built (the file splits are planned) but nothing runs and no code
+is generated. ``df.rdd.getNumPartitions()`` gives the same number, but
+first converts the plan into a Python RDD (``javaToPython``), which cost
+about a second in a fresh session.
 """
 
 from __future__ import annotations
@@ -52,6 +55,14 @@ def _is_scan_chain(df: DataFrame) -> bool:
     return True
 
 
+def scan_partitions(df: DataFrame) -> int:
+    """Planned partition count of a scan chain (see module doc)."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    return sum(
+        leaves.apply(i).execute().getNumPartitions() for i in range(leaves.size())
+    )
+
+
 def fan_out(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to the session's core count iff it is a simple
     scan whose planned partitioning would leave cores idle. No-op (and
@@ -60,6 +71,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     if not _is_scan_chain(df):
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if scan_partitions(df) < target:
         return df.repartition(target)
     return df

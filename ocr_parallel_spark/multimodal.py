@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_parallel_spark.sources.readers import DOCUMENTS_SCHEMA
+
 # Deterministic fake-decode constants (size-derived pseudo-metadata).
 _W_MOD, _W_BASE = 577, 64
 _H_MOD, _H_BASE = 331, 48
@@ -47,7 +49,7 @@ KINDS = ["image", "audio", "video"]
 def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic media table from the driver's documents parquet:
     (media_id, kind, payload binary). Pure built-in expressions."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = spark.read.schema(DOCUMENTS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
     return docs.select(
         F.col("doc_id").alias("media_id"),
         F.element_at(

@@ -53,11 +53,11 @@ Deliberate divergences:
   IS NOT NULL.
 - candidate page numbers MISSING from the pages table: the reference
   keeps the bare numbers in its fallback and index-expansion lists
-  (they count as index positions during expand_page_range), while this
-  implementation's pages join drops them — a gap page (OCR-failed)
-  shifts expansion windows by one position relative to the reference.
-  Both gate engines replay the join-drop rule, so the pair stays
-  exact; flagged here rather than silently absorbed.
+  (they count as index positions during expand_page_range), while here
+  every candidate is an existing page — a gap page (OCR-failed) shifts
+  expansion windows by one position relative to the reference. Both
+  gate engines replay the drop rule, so the pair stays exact; flagged
+  here rather than silently absorbed.
 - ``clean_text_between_pages`` (:715-796) applies the boundary positions
   (computed over the CANDIDATE-pages concat) to offsets recomputed over
   the FINAL pages after header-regex cleaning — a latent frame
@@ -70,16 +70,18 @@ Deliberate divergences:
   we normalize away).
 
 Spark-first shape: stage 0 (the per-page re-match) and the one groupBy per
-(target, document) are Column expressions; everything after the aggregate
-is SQL expression text, one ``selectExpr`` per dependency level, with
-higher-order functions over arrays (transform/filter/aggregate) — ZERO
-Python on the path. The scans are guarded so a group does no more work
-than the reference's per-document Python loop: the 300-char scan runs only
-when some page matched, token coverage is counted only for windows that
-hold a start marker, and the 200-char fallback regex and its scan run only
-under ``CASE WHEN`` the main scan found nothing. Group size is bounded by
-the reference's own caps and document envelope (30-1500 pages), so no
-group outgrows an executor at 100 TB.
+(target, document) are Column expressions (stage 0 reads page texts made
+below a join or in the chunk members, never rebuilt per token inside
+``match_hits``' lambda); everything after the aggregate is SQL text, one
+``selectExpr`` per dependency level, with higher-order functions over
+arrays (transform/filter/aggregate) — ZERO Python on the path. The scans
+are guarded so a group does no more work than the reference's per-document
+Python loop: the 300-char scan runs only when some page matched, token
+coverage is counted only for windows that hold a start marker, and the
+200-char fallback regex and its scan run only under ``CASE WHEN`` the main
+scan found nothing. Group size is bounded by the reference's own caps and
+document envelope (30-1500 pages), so no group outgrows an executor at
+100 TB.
 
 Engineering notes: every heavy value (window scan result, search slice,
 densest run, page-span bounds) is a column of its own level, read by
@@ -187,7 +189,7 @@ def _densest_run(matching: str) -> str:
 
 def refine_pages_with_boundaries(
     candidates: DataFrame,
-    pages: DataFrame,
+    pages: DataFrame | None,
     targets: DataFrame,
     start_markers: list[str],
     end_after_markers: list[str],
@@ -198,36 +200,32 @@ def refine_pages_with_boundaries(
     """F9 end-to-end over (target_id, source, doc_id) candidate pages.
 
     ``candidates``: (target_id, source, doc_id) — the W2 chunk->pages
-    expansion. PRECONDITION: (target_id, source, doc_id) rows must be
-    UNIQUE — the reference dedups via sorted(set(candidate_pages))
-    (full_extractor_service.py:253); a duplicate pair here would repeat
-    that page in the concatenated scan text and corrupt every offset.
-    Callers ``.distinct()`` first (a distinct is NOT applied internally:
-    both in-repo callers already pay that shuffle and doubling it would
-    be pure cost at scale). ``pages``: (doc_id[, source], norm). ``targets``:
-    (target_id, tokens array<string>, anchor string) — anchor is the
-    folio analog. Pass ``page_join_cols=["doc_id", "source"]`` when page
-    ids are only unique within a source (the reference's candidate pages
-    always live inside ONE document, full_extractor_service.py:253-277 —
-    joining on the bare id would pull other documents' pages into the
-    scan text and inflate it unboundedly).
+    expansion; a repeated row counts once (the reference's
+    sorted(set(candidate_pages)), full_extractor_service.py:253: the
+    aggregate collects sets). PRECONDITION: doc_id is unique within a
+    source. ``pages``: (doc_id[, source], norm), joined to the candidates;
+    or None when the candidates already carry ``norm`` and its
+    ``match_texts("norm", "_pg_")`` (``full_process`` takes them from the
+    chunk members). ``targets``: (target_id, tokens array<string>, anchor
+    string) — anchor is the folio analog. Pass
+    ``page_join_cols=["doc_id", "source"]`` when page ids are only unique
+    within a source (the reference's candidate pages always live inside
+    ONE document, full_extractor_service.py:253-277 — joining on the bare
+    id would pull other documents' pages into the scan text).
 
     Returns one row per (target_id, source): method, pages_csv, n_pages,
-    start_char, end_char. One broadcast join + one keyed shuffle.
+    start_char, end_char, refined_text. One broadcast join of the targets
+    and one aggregate by (target_id, source).
     """
-    from ocr_parallel_spark.operators.localization import match_hits, wordify
+    from ocr_parallel_spark.operators.localization import match_hits, match_texts
 
-    j = candidates.join(pages, page_join_cols or ["doc_id"]).join(
-        F.broadcast(targets), "target_id"
-    )
+    if pages is not None:
+        pages = pages.withColumns(match_texts("norm", "_pg_"))
+        candidates = candidates.join(pages, page_join_cols or ["doc_id"])
+    j = candidates.join(F.broadcast(targets), "target_id")
 
     # Per-page re-match: FULL F4 semantics via the single shared
-    # match_hits definition, exact integer threshold comparison. The
-    # derived texts are materialized as columns first — referenced inside
-    # the aggregate lambda they would re-evaluate per token.
-    j = j.withColumn("_pg_upper", F.upper(F.col("norm"))).withColumn(
-        "_pg_wordified", wordify(F.col("_pg_upper"))
-    )
+    # match_hits definition, exact integer threshold comparison.
     hits = match_hits(
         F.col("tokens"), F.col("_pg_upper"), F.col("_pg_wordified")
     )
@@ -247,7 +245,7 @@ def refine_pages_with_boundaries(
     # re-evaluated PER ARRAY ELEMENT — the 17 KB concat+upper rebuilt for
     # every one of ~700 scan windows turned this operator quadratic
     # (measured: 2.3 s/group before, ~ms after).
-    sorted_pages = F.array_sort(F.collect_list(F.struct("doc_id", "norm")))
+    sorted_pages = F.array_sort(F.collect_set(F.struct("doc_id", "norm")))
     g = j.groupBy("target_id", "source").agg(
         sorted_pages.alias("pages"),
         F.transform(sorted_pages, lambda s: s["doc_id"]).alias("_page_ids"),
@@ -263,7 +261,7 @@ def refine_pages_with_boundaries(
             ),
         ).alias("_offsets"),
         F.array_sort(
-            F.collect_list(F.when(F.col("matched"), F.col("doc_id")))
+            F.collect_set(F.when(F.col("matched"), F.col("doc_id")))
         ).alias("matching"),
         F.first("tokens").alias("tokens"),
         F.first("anchor").alias("anchor"),

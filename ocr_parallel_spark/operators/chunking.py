@@ -7,10 +7,9 @@ of member texts; the loop stops once a chunk reaches the end.
 
 Spark-first shape: no per-group Python. Chunk ids are synthesized with
 ``sequence`` + ``explode`` from per-group counts, members attach via a
-range condition on the row index, and text assembles with
-``string_agg``-style ordered aggregation. Two shuffles total (rank, then
-group-by-chunk) — both on (group, chunk) keys that scale with data, never
-with the driver.
+range condition on the row index, and each chunk keeps its sorted member
+rows, text included (F9's chunk -> pages step reads them there). One
+shuffle: the chunk aggregate's keys hold the rank window's group key.
 """
 
 from __future__ import annotations
@@ -28,22 +27,29 @@ def overlap_chunks(
     text_col: str,
     chunk_size: int = CHUNK_SIZE,
     overlap: int = CHUNK_OVERLAP,
+    member_cols: dict[str, Column] | None = None,
 ) -> DataFrame:
     """W1: overlapping chunks per partition group.
 
     Returns (part_col, chunk_index, start_<order>, end_<order>, n_rows,
-    chunk_text). chunk_index is 0-based; last chunk may be short; a group
-    with <= chunk_size rows yields exactly one chunk — matching the
-    reference's loop-with-break (chunking.py:40-69).
+    members, chunk_text). chunk_index is 0-based; last chunk may be short;
+    a group with <= chunk_size rows yields exactly one chunk — matching the
+    reference's loop-with-break (chunking.py:40-69). ``members``: the
+    chunk's rows as (order_col, text_col, *member_cols) structs sorted by
+    ``order_col``; ``chunk_text`` joins their texts with ``"\\n\\n"``.
+    ``member_cols`` (name -> Column over ``df``) are computed once per row,
+    after the rank shuffle, and carried in each member.
     """
     if chunk_size <= overlap:
         raise ValueError(f"chunk_size ({chunk_size}) must be > overlap ({overlap})")
     step = chunk_size - overlap
+    member_cols = member_cols or {}
 
     w = Window.partitionBy(part_col).orderBy(order_col)
-    ranked = df.select(part_col, order_col, text_col).withColumn(
-        "_rn", F.row_number().over(w) - 1
-    ).withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(part_col)))
+    ranked = df.select(part_col, order_col, text_col).withColumns({
+        "_rn": F.row_number().over(w) - 1,
+        "_n": F.count(F.lit(1)).over(Window.partitionBy(part_col)),
+    }).withColumns(member_cols)
 
     # number of chunks: 1 for n <= chunk_size, else ceil((n-size)/step)+1
     n_chunks = F.when(F.col("_n") <= chunk_size, F.lit(1)).otherwise(
@@ -57,21 +63,18 @@ def overlap_chunks(
         & (F.col("_rn") < F.col("chunk_index") * step + chunk_size)
     )
 
+    members = F.array_sort(F.collect_list(F.struct(order_col, text_col, *member_cols)))
     return (
         with_chunks.groupBy(part_col, "chunk_index")
         .agg(
             F.min(order_col).alias(f"start_{order_col}"),
             F.max(order_col).alias(f"end_{order_col}"),
             F.count(F.lit(1)).alias("n_rows"),
-            F.concat_ws(
-                "\n\n",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("_rn"), F.col(text_col)))
-                    ),
-                    lambda s: s[text_col],
-                ),
-            ).alias("chunk_text"),
+            members.alias("members"),
+        )
+        .withColumn(
+            "chunk_text",
+            F.concat_ws("\n\n", F.transform("members", lambda s: s[text_col])),
         )
     )
 

@@ -50,13 +50,22 @@ def normalize_col(col: Column | str) -> Column:
 
 def classify_status(text_col: Column | str) -> Column:
     """P2: empty or an explicit not-found marker => not_found; NULL =>
-    error; else found. Mirrors extractor_service.py:145-157 semantics."""
+    error; else found. Mirrors extractor_service.py:145-157 semantics.
+
+    A text is lowercased only when it is short enough to be a marker:
+    lowercasing never shortens a string (``İ`` even grows), so a trimmed
+    text longer than the longest marker cannot equal one. Whole extracted
+    pages are never lowercased."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    lowered = F.lower(F.trim(c))
+    trimmed = F.trim(c)
     return (
         F.when(c.isNull(), F.lit("error"))
-        .when(lowered == "", F.lit("not_found"))
-        .when(lowered.isin(*NOT_FOUND_MARKERS), F.lit("not_found"))
+        .when(trimmed == "", F.lit("not_found"))
+        .when(
+            (F.char_length(trimmed) <= max(map(len, NOT_FOUND_MARKERS)))
+            & F.lower(trimmed).isin(*NOT_FOUND_MARKERS),
+            F.lit("not_found"),
+        )
         .otherwise(F.lit("found"))
     )
 

@@ -125,6 +125,14 @@ def wordify(upper_text: Column) -> Column:
     )
 
 
+def match_texts(text_col: str, prefix: str) -> dict[str, Column]:
+    """``match_hits``' per-row inputs: ``<prefix>upper`` and
+    ``<prefix>wordified`` of ``text_col``, to be made as columns below a
+    join, shuffle or generator (see :func:`match_hits`)."""
+    upper = F.upper(F.col(text_col))
+    return {f"{prefix}upper": upper, f"{prefix}wordified": wordify(upper)}
+
+
 def match_hits(
     tokens_col: Column, upper_col: Column, wordified_col: Column
 ) -> Column:
@@ -188,9 +196,7 @@ def localize(
     # Materialize the per-row derived texts BEFORE the cross join so they
     # are computed once per chunk row (inside the aggregate lambda Catalyst
     # would re-evaluate them per token) and never per (chunk, target) pair.
-    prepped = chunks.withColumn("_upper", F.upper(F.col(text_col))).withColumn(
-        "_wordified", wordify(F.col("_upper"))
-    )
+    prepped = chunks.withColumns(match_texts(text_col, "_"))
     joined = prepped.crossJoin(F.broadcast(targets))
     hits = match_hits(F.col(tokens_col), F.col("_upper"), F.col("_wordified"))
     scored = joined.withColumn(

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ocr_parallel_spark.fanout import fan_out
 from ocr_parallel_spark.operators.classify import normalize_col
+from ocr_parallel_spark.sources.readers import DOCUMENTS_SCHEMA
 
 HOT_DOMAIN = "hot.example.com"
 
@@ -70,7 +71,9 @@ def synthesize_pages(
     # link-extraction consumers pipeline onto these partitions, and the
     # probe is free on a bare scan (round 6; fan_out skips non-scan
     # plans, so callers can no longer fan the synthesized frame itself).
-    docs = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = fan_out(
+        spark.read.schema(DOCUMENTS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
+    )
     if copies > 1:
         reps = spark.range(copies).select(F.col("id").alias("copy_id"))
         docs = (

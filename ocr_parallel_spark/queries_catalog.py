@@ -39,6 +39,7 @@ from ocr_parallel_spark.operators.dedup import dedup_savings, keep_first
 from ocr_parallel_spark.operators.localization import localize
 from ocr_parallel_spark.operators.neardup import minhash_candidate_pairs
 from ocr_parallel_spark.operators.sessionize import densest_range, sessionize
+from ocr_parallel_spark.sources.readers import DOCUMENTS_SCHEMA, EMBEDDINGS_SCHEMA
 
 # Chunking parameters for the documents-as-pages oracle tests: small enough
 # that every ~25-row source yields multiple overlapping chunks (the
@@ -68,11 +69,19 @@ TARGETS = [
 ]
 
 
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.schema(DOCUMENTS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.schema(EMBEDDINGS_SCHEMA).parquet(f"{sf_dir}/embeddings.parquet")
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_out BELOW the normalize projection: the whole catalog's per-row
     # expression work pipelines onto the scan, and a sub-split parquet
     # file would otherwise run it all on ONE core (guide §2.2/§6).
-    return fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet")).withColumn(
+    return fan_out(_documents(spark, sf_dir)).withColumn(
         "norm", normalize_col("text")
     )
 
@@ -153,7 +162,9 @@ def q_ordered_concat(spark, sf_dir):
 def q_overlap_chunks(spark, sf_dir):
     """W1 overlap chunking (chunking.py:11-72), docs-as-pages per source."""
     d = _docs(spark, sf_dir)
-    return overlap_chunks(d, "source", "doc_id", "norm", TCHUNK, TOVERLAP)
+    return overlap_chunks(d, "source", "doc_id", "norm", TCHUNK, TOVERLAP).drop(
+        "members"
+    )
 
 
 def q_pages_from_chunks(spark, sf_dir):
@@ -225,7 +236,7 @@ def q_topk_per_group(spark, sf_dir):
     """W6 caps/limits: first 3 docs per source (slice/limit semantics).
     Reads the raw table (no norm, no fan_out): the window re-shuffles by
     source anyway and the map side carries no expression work."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     w = Window.partitionBy("source").orderBy("doc_id")
     return (
         d.withColumn("rk", F.row_number().over(w))
@@ -341,7 +352,7 @@ def q_ngram_jaccard(spark, sf_dir):
 def q_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-5 for queries vec_id < 5 (similarity search
     baseline)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _embeddings(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -398,7 +409,7 @@ def q_embedding_neardup(spark, sf_dir):
         + ((F.expr("vec_id div 100") + j) % 5).cast("double"),
     )
     emb = (
-        fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+        fan_out(_embeddings(spark, sf_dir))
         .filter(F.col("vec_id") < 1000)
         .select(
             "vec_id",
@@ -568,7 +579,7 @@ def q_ann_recall(spark, sf_dir):
         lsh_topk,
     )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _embeddings(spark, sf_dir)
     queries_df = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -601,7 +612,7 @@ def q_url_canonicalize(spark, sf_dir):
     marking. Pure expressions; the oracle re-derives every rule."""
     from ocr_parallel_spark.functions.urls import canonical_url
 
-    docs = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = fan_out(_documents(spark, sf_dir))
     base = F.concat(
         F.lit("HTTPS://Site-"),
         (F.col("doc_id") % 7).cast("string"),
@@ -792,7 +803,7 @@ def q_stratified_sample(spark, sf_dir):
     DuckDB oracle agree bit-for-bit."""
     from ocr_parallel_spark.functions.curation import stratified_keep
 
-    d = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    d = fan_out(_documents(spark, sf_dir))
     bucket, kept = stratified_keep(
         F.col("lang"), F.col("doc_id"), {"en": 0x40}, 0x80, "seed42"
     )
@@ -853,7 +864,7 @@ def q_weighted_sample(spark, sf_dir):
     # plain read: A/B measured the fan-out exchange slower than the
     # single-split scan here (0.27s vs 0.42s) — the map side is one
     # sha2 + log per row and WindowGroupLimit already cuts pre-shuffle.
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _documents(spark, sf_dir)
     u = (
         F.conv(
             F.substring(
@@ -938,7 +949,7 @@ def q_dup_components(spark, sf_dir):
     goes red if doubling breaks."""
     from ocr_parallel_spark.operators.graph import connected_components
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    d = _documents(spark, sf_dir).select("doc_id")
     mx = d.agg(F.max("doc_id").alias("_mx"))
     chain = (
         d.crossJoin(F.broadcast(mx))
@@ -1188,7 +1199,7 @@ def q_robots_filter(spark, sf_dir):
     convention host = site-(doc_id%7), path = /p/doc_id."""
     from ocr_parallel_spark.functions.robots import apply_robots, parse_robots
 
-    d = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet")).select(
+    d = fan_out(_documents(spark, sf_dir)).select(
         "doc_id",
         F.concat(
             F.lit("site-"), (F.col("doc_id") % 7).cast("string"),
@@ -1227,7 +1238,7 @@ def _pagerank_edges(spark, sf_dir):
     """The planted link digraph shared by every pagerank query: doc ->
     (3*doc+1) mod N and doc -> (7*doc+3) mod N, self-loops dropped by
     pagerank_int."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    d = _documents(spark, sf_dir).select("doc_id")
     n = d.count()
     edges = d.select(
         F.col("doc_id").alias("src"),
@@ -1309,7 +1320,7 @@ def q_graph_prior(spark, sf_dir):
         F.sum("host_rank_mi").cast("long").alias("_tot_rank"),
         F.sum("n_docs").cast("long").alias("_tot_docs"),
     )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = _documents(spark, sf_dir).select(
         "doc_id",
         F.concat(
             F.lit("site-"),
@@ -1462,7 +1473,7 @@ def q_anchor_text_salted(spark, sf_dir):
     pinned by tests/test_plans.py::test_anchor_salted_two_stage."""
     links = _anchor_links(spark, sf_dir)
     hot = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        _documents(spark, sf_dir)
         .select("doc_id")
         .filter(
             (F.col("doc_id") % 50 != 7)
@@ -2073,7 +2084,7 @@ def q_lm_terciles(spark, sf_dir):
     language's docs (ties land whole score-values per bucket — CCNet
     cuts by perplexity VALUE, exact thirds are not the contract)."""
     s = q_lm_surprise(spark, sf_dir).filter(F.col("n_grams") > 0)
-    lang = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    lang = _documents(spark, sf_dir).select(
         "doc_id", "lang"
     )
     sl = s.join(lang, "doc_id").select("doc_id", "lang", "surprise_x16")
@@ -2319,7 +2330,7 @@ def _planted_embeddings(spark, sf_dir, cap: int = 1000):
         + ((F.expr("vec_id div 100") + j) % 5).cast("double"),
     )
     return (
-        fan_out(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+        fan_out(_embeddings(spark, sf_dir))
         .filter(F.col("vec_id") < cap)
         .select(
             "vec_id",
@@ -2544,7 +2555,7 @@ def q_domain_stats(spark, sf_dir):
     blocked domains can't evade via 'HTTPS://' or ':443'."""
     from ocr_parallel_spark.functions.urls import host_col
 
-    docs = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = fan_out(_documents(spark, sf_dir))
     url = F.concat(
         F.lit("https://site-"),
         (F.col("doc_id") % 7).cast("string"),
@@ -2960,7 +2971,7 @@ def q_capped_details(spark, sf_dir):
     determinism, sliced, serialized to one string (hashable for the
     driver's canonical compare; a consumer wanting the array keeps the
     slice output)."""
-    docs = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = fan_out(_documents(spark, sf_dir))
     details = F.array_join(
         F.transform(
             F.slice(
@@ -3099,41 +3110,25 @@ BOUNDARY_END_BEFORE = ["SLOW FILTER"]
 
 def q_full_process_boundaries(spark, sf_dir):
     """F9 with char-level boundary refinement (F5-F7) and the W6 caps
-    5/15/20 (text_localization.py:540-708): chunk (W1) -> localize (J2)
-    -> chunk->pages (W2) -> per-page re-match -> start/end char-window
-    detection -> char span mapped back to a page span. Column and SQL
-    expressions over one groupBy — zero Python."""
-    from ocr_parallel_spark.operators.boundaries import (
-        refine_pages_with_boundaries,
-    )
+    5/15/20 (text_localization.py:540-708): ``run_full_process`` over the
+    normalized documents, one document per source. One scan and one
+    shuffle (by source); the candidate pages ride in the matching chunks'
+    member lists, and the targets are a broadcast constant — zero Python."""
+    from ocr_parallel_spark.full_process import run_full_process
 
-    docs = _docs(spark, sf_dir)
-    chunks = overlap_chunks(docs, "source", "doc_id", "norm", TCHUNK, TOVERLAP)
     targets = local_frame(
         spark,
         [(tid, toks, toks[0]) for tid, toks in TARGETS],
         "target_id int, tokens array<string>, anchor string",
     )
-    loc = localize(
-        targets.select("target_id", "tokens"), chunks, "tokens", "chunk_text"
-    )
-    cand = loc.select(
-        "target_id",
-        "source",
-        F.explode(F.sequence("start_doc_id", "end_doc_id")).alias("doc_id"),
-    ).distinct()
-    # Pages join is source-scoped: doc_ids are interleaved across sources
-    # in the synthetic corpus, and a chunk's [start, end] id range must
-    # only pull pages of ITS OWN document — the reference's candidate
-    # pages always live inside one escritura.
-    return refine_pages_with_boundaries(
-        cand,
-        docs.select("doc_id", "source", "norm"),
+    return run_full_process(
+        _docs(spark, sf_dir).select("source", "doc_id", "norm"),
         targets,
         BOUNDARY_START_MARKERS,
         BOUNDARY_END_AFTER,
         BOUNDARY_END_BEFORE,
-        page_join_cols=["doc_id", "source"],
+        TCHUNK,
+        TOVERLAP,
     )
 
 
@@ -3201,7 +3196,7 @@ def q_ann_lsh_topk(spark, sf_dir):
     tests."""
     from ocr_parallel_spark.functions.similarity import lsh_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _embeddings(spark, sf_dir)
     queries_df = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -3235,7 +3230,7 @@ def q_salted_rollup(spark, sf_dir):
     over 16 reducers at stage 1."""
     from ocr_parallel_spark.operators.extraction import salted_key
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _documents(spark, sf_dir)
     salted = docs.withColumn("_sk", salted_key("lang", "doc_id"))
     partial = salted.groupBy("lang", "_sk").agg(
         F.count(F.lit(1)).alias("_n"), F.sum("n_chars").alias("_chars")
@@ -3249,7 +3244,7 @@ def q_json_extract(spark, sf_dir):
     """F13 JSON extraction (full_extractor_service.py:188-212): find the
     JSON array in a text blob, parse, pluck fields. Built-ins only:
     regexp_extract + from_json + explode."""
-    docs = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = fan_out(_documents(spark, sf_dir))
     blob = F.concat(
         F.lit('noise [{"encontrado": '),
         F.when(F.col("doc_id") % 2 == 0, F.lit("true")).otherwise(F.lit("false")),
@@ -3282,7 +3277,7 @@ def q_ann_ivf_topk(spark, sf_dir):
         kmeans_centroids,
     )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _embeddings(spark, sf_dir)
     cents = kmeans_centroids(emb, n_cells=8)
     queries_df = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -3355,7 +3350,7 @@ def q_simhash_near_dups(spark, sf_dir):
     # banding join consistently ~25% SLOWER than the plain single-split
     # scan at this corpus size (1.5s vs 1.9s) — the downstream band
     # self-join re-shuffles on its own keys regardless (round 6).
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = _documents(spark, sf_dir).select(
         "doc_id", normalize_col("text").alias("norm")
     )
 

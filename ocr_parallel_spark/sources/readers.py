@@ -19,6 +19,7 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     FloatType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -36,10 +37,23 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
+# The catalog's two sf tables, read with their known schemas: inferring a
+# parquet schema reads file footers in a Spark job at DataFrame build time.
+DOCUMENTS_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("text", StringType()),
+        StructField("lang", StringType()),
+        StructField("source", StringType()),
+        StructField("n_chars", LongType()),
+    ]
+)
+
 EMBEDDINGS_SCHEMA = StructType(
     [
         StructField("vec_id", LongType()),
         StructField("embedding", ArrayType(FloatType())),
+        StructField("label", IntegerType()),
     ]
 )
 

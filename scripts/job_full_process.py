@@ -10,9 +10,9 @@ analog as ONE logical plan per run:
   pages table -> extraction pipeline (Arrow kernel, dedup)
     -> document framing: source = url domain, page_no = row_number
        within domain by (warc_ts, url)  [W5: partitioned, never global]
-    -> overlap chunking (W1) -> tokenize + synonym variants (F2/F3)
-    -> localization theta-join (J2) -> chunk->pages (W2)
-    -> char-level boundary refinement with caps (F5-F9, W6)
+    -> tokenize + synonym variants (F2/F3) -> run_full_process: overlap
+       chunking (W1), localization theta-join (J2), chunk members as the
+       candidate pages (W2), boundary refinement with caps (F5-F9, W6)
     -> snapshot-committed output; completion = committed snapshot (X9),
        resume = anti-join against already-committed (target, source)
        pairs instead of the reference's file-existence poll.
@@ -37,15 +37,8 @@ def build_output(spark, pages_df, targets_csv: str, chunk_size: int,
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ocr_parallel_spark.operators.boundaries import (
-        refine_pages_with_boundaries,
-    )
-    from ocr_parallel_spark.operators.chunking import overlap_chunks
-    from ocr_parallel_spark.operators.localization import (
-        expand_variants,
-        localize,
-        tokenize,
-    )
+    from ocr_parallel_spark.full_process import run_full_process
+    from ocr_parallel_spark.operators.localization import expand_variants, tokenize
     from ocr_parallel_spark.pipeline import run_extraction_pipeline
     from ocr_parallel_spark.sources.readers import read_targets_csv
 
@@ -73,30 +66,9 @@ def build_output(spark, pages_df, targets_csv: str, chunk_size: int,
         expand_variants(tokenize("name")).alias("tokens"),
         F.upper(F.trim(F.col("ref"))).alias("anchor"),
     )
-    chunks = overlap_chunks(docs, "source", "doc_id", "norm", chunk_size, overlap)
-    loc = localize(
-        targets.select("target_id", "tokens"), chunks, "tokens", "chunk_text"
-    )
-    # Resume happens HERE, before the expensive boundary refinement: a
-    # (target, source) pair already in the committed snapshot is dropped
-    # from the localization hits, so chunk->pages expansion and the F5-F9
-    # char scans never run for it (not merely discarded at write time).
-    if committed is not None:
-        done = committed.select("target_id", "source").distinct()
-        loc = loc.join(done, ["target_id", "source"], "left_anti")
-    cand = loc.select(
-        "target_id",
-        "source",
-        F.explode(F.sequence("start_doc_id", "end_doc_id")).alias("doc_id"),
-    ).distinct()
-    refined = refine_pages_with_boundaries(
-        cand,
-        docs.select("doc_id", "source", "norm"),
-        targets,
-        start_markers,
-        end_after,
-        end_before,
-        page_join_cols=["doc_id", "source"],
+    refined = run_full_process(
+        docs, targets, start_markers, end_after, end_before, chunk_size,
+        overlap, committed,
     )
     return refined.withColumn(
         "job_key",
@@ -145,10 +117,9 @@ def main(argv=None) -> dict:
     pages = spark.read.parquet(args.input)
     table = SnapshotTable(args.output)
     # Resume at result granularity: (target, source) pairs already in the
-    # committed snapshot are anti-joined out INSIDE build_output, before
-    # chunk->pages expansion and boundary refinement, so committed pairs
-    # are genuinely not recomputed (X9 without the file-existence poll
-    # race).
+    # committed snapshot are anti-joined out INSIDE run_full_process,
+    # before boundary refinement, so committed pairs are genuinely not
+    # recomputed (X9 without the file-existence poll race).
     out = build_output(
         spark,
         pages,

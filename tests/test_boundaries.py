@@ -336,6 +336,55 @@ def test_branch_targeted_cases(spark):
     _check(spark, cases)
 
 
+def test_digit_token_cases(spark):
+    """Digit tokens match a page only between word boundaries (F4), in the
+    Unicode word class: not inside 'A12B', after '_' or after a letter
+    such as 'Ó'; a hyphen or a page edge is a boundary. The per-page
+    re-match decides which pages count, so each case's matched set (and
+    with it the method and span) turns on those rules."""
+    cases = [
+        # 0: '12' only inside words on page 0, bounded on page 2
+        (
+            {
+                0: _page("ALPHA A12B X_12 qqstart alpha"),
+                1: _page("filler"),
+                2: _page("ALPHA LOT 12 qqstart alpha ALPHA 12"),
+                3: _page("body qqend beta closing") + " end.",
+                4: _page("tail page"),
+            },
+            ["12", "ALPHA"],
+            "ALPHA",
+        ),
+        # 1: Unicode letter before the digits is no boundary: no page
+        # matches -> fallback_first5
+        (
+            {p: _page(f"BRAVO CESIÓN123 ÉTAPE{p}45") for p in range(6)},
+            ["123", "BRAVO", "45"],
+            "BRAVO",
+        ),
+        # 2: two digit tokens split by a hyphen, one at the page edge
+        (
+            {
+                0: _page("plain"),
+                1: "34 CHARLIE 12-34 qqstart alpha CHARLIE " + FILLER,
+                2: _page("CHARLIE 1234 only"),
+                3: _page("more 12 34 CHARLIE"),
+            },
+            ["12", "34", "CHARLIE"],
+            "CHARLIE",
+        ),
+        # 3: digits only, matched on scattered pages -> expanded path
+        (
+            {p: _page(f"item {7 if p % 3 == 0 else 70 + p} 2024") for p in range(12)},
+            ["7", "2024"],
+            "ZZNOANCHOR",
+        ),
+    ]
+    methods = _check(spark, cases)
+    assert methods[1] == "fallback_first5"
+    assert "expanded" in methods and "boundaries" in methods
+
+
 def test_hard_cap_2000_and_page_caps(spark):
     # start marker fires, NO end marker anywhere, >2000 chars remain
     # -> end = start + 2000; with-boundaries span wider than 15 pages

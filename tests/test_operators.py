@@ -190,6 +190,42 @@ def test_classify_status_markers(spark):
     assert got == {"x": "found", "y": "not_found", "z": "not_found", "w": "error"}
 
 
+def test_classify_status_lowercases_only_marker_sized_texts(spark):
+    """The length guard never changes a status: a text longer than the
+    longest marker cannot lowercase to one (lowercasing never shortens,
+    and 'İ' grows), so the statuses equal lowercasing every text."""
+    from ocr_parallel_spark.operators.classify import NOT_FOUND_MARKERS
+
+    longest = max(NOT_FOUND_MARKERS, key=len)
+    cases = {
+        "exact": ("  " + longest.title() + "  ", "not_found"),
+        "longer": (longest.upper() + "S", "found"),
+        "dotted": ("İ" + longest[1:].upper(), "found"),
+        "blank": ("   ", "not_found"),
+        "tab": ("\t", "found"),
+        "null": (None, "error"),
+    }
+    df = spark.createDataFrame(
+        [(k, t) for k, (t, _) in cases.items()], "k string, t string"
+    )
+    lowered = F.lower(F.trim(F.col("t")))
+    every_text_lowered = (
+        F.when(F.col("t").isNull(), "error")
+        .when(lowered == "", "not_found")
+        .when(lowered.isin(*NOT_FOUND_MARKERS), "not_found")
+        .otherwise("found")
+    )
+    got = {
+        r["k"]: (r["s"], r["ref"])
+        for r in df.select(
+            "k",
+            classify_status("t").alias("s"),
+            every_text_lowered.alias("ref"),
+        ).collect()
+    }
+    assert got == {k: (want, want) for k, (_, want) in cases.items()}
+
+
 def test_normalize_col_matches_kernel(spark):
     """JVM normalize chain byte-equals the Python kernel chain."""
     samples = [

@@ -184,6 +184,112 @@ def test_fan_out_probes_only_scan_chains(spark, sf_dir):
         assert fan_out(df) is df
 
 
+def _jobs_run_by(spark, fn, group: str):
+    """(result of ``fn()``, number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("n_files", [1, 16])
+def test_fan_out_probe_counts_scan_partitions_without_a_job(
+    spark, sf_dir, tmp_path, n_files
+):
+    """The probe reads the scan leaf of the physical plan: the same count
+    as the Python RDD's partitions, and no job runs."""
+    from ocr_parallel_spark.fanout import scan_partitions
+
+    path = str(tmp_path / "docs")
+    spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
+        n_files
+    ).write.parquet(path)
+    df = spark.read.parquet(path).filter(F.col("doc_id") >= 0).select("text")
+    got, jobs = _jobs_run_by(spark, lambda: scan_partitions(df), f"probe{n_files}")
+    assert jobs == 0
+    assert got == df.rdd.getNumPartitions()
+
+
+# Entries over the documents whose build runs jobs for a reason of its
+# own — a localCheckpoint or a count() probe inside the operator.
+_BUILD_RUNS_JOBS = frozenset({
+    "bpe_counts", "curation_pipeline", "dsir_weights", "pack_tokenized",
+    "pack_windows", "quality_trained", "repeated_spans", "sequence_pack",
+    "token_budget_mix", "winnowed_spans",
+})
+
+
+def test_building_document_queries_runs_no_job(spark, sf_dir):
+    """Documents are read with their known schema and the fan-out probe
+    runs nothing, so building an entry over ``_docs`` (DataFrame plus
+    schema, no action) starts no Spark job; a schema-less parquet read
+    runs one to read the file footers."""
+    import inspect
+
+    from ocr_parallel_spark.queries_catalog import queries
+
+    jobs = {}
+    for name, build in queries().items():
+        if name in _BUILD_RUNS_JOBS or "_docs(" not in inspect.getsource(build):
+            continue
+        build(spark, sf_dir)  # warm: a session's first build may compile
+        _, jobs[name] = _jobs_run_by(
+            spark, lambda: build(spark, sf_dir).schema, f"build_{name}"
+        )
+    assert "full_process_boundaries" in jobs and len(jobs) > 30
+    assert {name: n for name, n in jobs.items() if n} == {}
+
+
+def _lambda_regexp_replaces(plan) -> list[str]:
+    """``regexp_replace`` expressions that sit inside a lambda function in
+    a logical plan's expressions."""
+    found = []
+
+    def walk(e, in_lambda):
+        cls = e.getClass().getSimpleName()
+        in_lambda = in_lambda or cls == "LambdaFunction"
+        if in_lambda and cls == "RegExpReplace":
+            found.append(e.toString())
+        kids = e.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), in_lambda)
+
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        exprs = node.expressions()
+        for i in range(exprs.size()):
+            walk(exprs.apply(i), False)
+        kids = node.children()
+        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def test_full_process_scans_documents_once(spark, sf_dir):
+    """The candidate pages come from the matching chunks' members: one
+    scan of documents.parquet, no pages join keyed by (doc_id, source),
+    and no page-wide regexp_replace re-run per token inside a lambda."""
+    from ocr_parallel_spark.queries_catalog import q_full_process_boundaries
+
+    query = q_full_process_boundaries(spark, sf_dir)
+    p = plan_of(query, "simple")
+    assert p.count("FileScan parquet") == 1
+    assert "documents.parquet" in p
+    opt = query._jdf.queryExecution().optimizedPlan()
+    joins, nodes = [], [opt]
+    while nodes:
+        node = nodes.pop()
+        if node.getClass().getSimpleName() == "Join":
+            joins.append(node.condition().toString())
+        kids = node.children()
+        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    assert joins and not [c for c in joins if "doc_id" in c], joins
+    assert _lambda_regexp_replaces(opt) == []
+
+
 def test_salted_rollup_two_stage(spark, sf_dir):
     from ocr_parallel_spark.queries_catalog import q_salted_rollup
 
