@@ -11,9 +11,11 @@ within a source (refinement's own precondition).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ocr_parallel_spark.operators.boundaries import refine_pages_with_boundaries
+from ocr_parallel_spark.operators.boundaries import (
+    page_matched,
+    refine_pages_with_boundaries,
+)
 from ocr_parallel_spark.operators.chunking import overlap_chunks
 from ocr_parallel_spark.operators.localization import localize, match_texts
 
@@ -25,18 +27,26 @@ def run_full_process(docs: DataFrame, targets: DataFrame, start_markers,
     anchor) in, ``refine_pages_with_boundaries``' rows out: one per
     (target_id, source) with a matching chunk. (target_id, source) pairs in
     ``committed`` are dropped right after localization, before refinement.
-    A NULL source is no document (the pages join never matched it)."""
+    A NULL source is no document (the pages join never matched it).
+
+    The targets are joined once, in localization: each matching (chunk,
+    target) row re-matches its member pages (refinement's stage 0) while
+    it holds them and the target's tokens, so the exploded candidates are
+    (doc_id, norm, matched) with the target's tokens and anchor."""
     chunks = overlap_chunks(
-        docs.filter(F.col("source").isNotNull()), "source", "doc_id", "norm",
+        docs.filter("source IS NOT NULL"), "source", "doc_id", "norm",
         chunk_size, overlap, member_cols=match_texts("norm", "_pg_"),
     )
-    loc = localize(targets.select("target_id", "tokens"), chunks)
+    loc = localize(targets.select("target_id", "tokens", "anchor"), chunks)
     if committed is not None:
         done = committed.select("target_id", "source").distinct()
         loc = loc.join(done, ["target_id", "source"], "left_anti")
-    cand = loc.select(
-        "target_id", "source", F.explode("members").alias("page")
-    ).select("target_id", "source", "page.*")
+    matched = page_matched("tokens", "m._pg_upper", "m._pg_wordified")
+    cand = loc.selectExpr(
+        "target_id", "source", "tokens", "anchor",
+        "inline(transform(members, m -> named_struct("
+        f"'doc_id', m.doc_id, 'norm', m.norm, 'matched', {matched})))",
+    )
     return refine_pages_with_boundaries(
-        cand, None, targets, start_markers, end_after, end_before
+        cand, None, None, start_markers, end_after, end_before
     )

@@ -69,19 +69,21 @@ Deliberate divergences:
   reference switches to "\\n" in boundaries mode — a formatting nicety
   we normalize away).
 
-Spark-first shape: stage 0 (the per-page re-match) and the one groupBy per
-(target, document) are Column expressions (stage 0 reads page texts made
-below a join or in the chunk members, never rebuilt per token inside
-``match_hits``' lambda); everything after the aggregate is SQL text, one
-``selectExpr`` per dependency level, with higher-order functions over
-arrays (transform/filter/aggregate) — ZERO Python on the path. The scans
-are guarded so a group does no more work than the reference's per-document
-Python loop: the 300-char scan runs only when some page matched, token
-coverage is counted only for windows that hold a start marker, and the
-200-char fallback regex and its scan run only under ``CASE WHEN`` the main
-scan found nothing. Group size is bounded by the reference's own caps and
-document envelope (30-1500 pages), so no group outgrows an executor at
-100 TB.
+Spark-first shape: SQL text from end to end, one ``selectExpr`` (or one
+``agg``) per dependency level, with higher-order functions over arrays
+(transform/filter/aggregate) — ZERO Python on the path. Stage 0 (the
+per-page re-match) reads page texts made below a join or in the chunk
+members, never rebuilt per token inside ``match_hits``' lambda;
+``full_process`` computes it before refinement, while each (chunk,
+target) row still holds its members, so its candidates need no second
+targets join. The scans are guarded so a group does no more work than
+the reference's per-document Python loop: the 300-char scan runs only
+when some page matched, token coverage is counted only for windows that
+hold a start marker, each marker is ``locate``d only in a window that
+``contains`` it, and the 200-char fallback regex and its scan run only
+under ``CASE WHEN`` the main scan found nothing. Group size is bounded
+by the reference's own caps and document envelope (30-1500 pages), so no
+group outgrows an executor at 100 TB.
 
 Engineering notes: every heavy value (window scan result, search slice,
 densest run, page-span bounds) is a column of its own level, read by
@@ -90,16 +92,19 @@ projection, and a value referenced from a lambda body would be re-built
 per array element (lambda bodies get no common-subexpression
 elimination). Building the levels as SQL text costs one py4j call per
 level instead of one per ``F.*`` call, each of which records its Python
-call site. The marker lists are bound as ``array<string>`` literal
-columns, never spliced into the SQL text, so no quoting is needed and
-parser confs such as ``escapedStringLiterals`` cannot change a match; the
-SQL text itself holds no backslash escapes (newlines are ``char(10)``).
+call site. Each marker list is one ``array<string>`` literal spelled by
+``localization.sql_str``: quotes, backslashes and ``$`` become
+``char(n)``, so parser confs such as ``escapedStringLiterals`` and
+variable substitution cannot change a match; the SQL text itself holds
+no backslash escapes (newlines are ``char(10)``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ocr_parallel_spark.operators.localization import match_hits, match_texts, sql_str
 
 # Reference constants (text_localization.py:361,365,370,381,386,425,465,
 # 501,580,634,646,659,682,685,695). The caps that other modules also
@@ -152,11 +157,35 @@ def _windows(text: str, window_size: int) -> str:
 def _first_marker_pos(window: str, markers: str) -> str:
     """SQL: 0-based position of the first occurrence of the highest-priority
     marker present in ``window``, -1 if none (F5 pattern loop with break,
-    :372-377). ``markers`` names an array<string> column; once a marker is
-    found the fold locates no further marker."""
+    :372-377). ``markers`` is array<string> SQL; once a marker is found
+    the fold tests no further marker.
+
+    ``contains`` guards ``locate``: Spark's ``UTF8String.indexOf`` compares
+    the whole marker at every char offset, while ``contains`` first scans
+    for the marker's first byte, and nearly every window holds no marker.
+    Both answer the same, so the result does not change."""
     return (
-        f"aggregate({markers}, -1, "
-        f"(p, m) -> IF(p < 0, locate(m, {window}) - 1, p))"
+        f"aggregate({markers}, -1, (p, m) -> "
+        f"IF(p < 0 AND contains({window}, m), locate(m, {window}) - 1, p))"
+    )
+
+
+def _markers(markers: list[str]) -> str:
+    """SQL: one array<string> literal of ``markers``, spelled by
+    ``sql_str`` so quotes, backslashes or ``${`` in a marker stay data."""
+    return f"CAST(array({', '.join(map(sql_str, markers))}) AS array<string>)"
+
+
+def page_matched(
+    tokens: str, upper: str, wordified: str, threshold_ratio: tuple[int, int] = (3, 5)
+) -> str:
+    """SQL: F9's per-page re-match (stage 0) — full F4 semantics via the
+    single shared ``match_hits`` definition, compared with the threshold
+    as an exact integer ratio."""
+    num, den = threshold_ratio
+    return (
+        f"size({tokens}) > 0 AND "
+        f"{match_hits(tokens, upper, wordified)} * {den} >= size({tokens}) * {num}"
     )
 
 
@@ -205,36 +234,29 @@ def refine_pages_with_boundaries(
     aggregate collects sets). PRECONDITION: doc_id is unique within a
     source. ``pages``: (doc_id[, source], norm), joined to the candidates;
     or None when the candidates already carry ``norm`` and its
-    ``match_texts("norm", "_pg_")`` (``full_process`` takes them from the
-    chunk members). ``targets``: (target_id, tokens array<string>, anchor
-    string) — anchor is the folio analog. Pass
+    ``match_texts("norm", "_pg_")``. ``targets``: (target_id, tokens
+    array<string>, anchor string) — anchor is the folio analog — joined
+    to the candidates for the per-page re-match; or None when the
+    candidates already carry ``tokens``, ``anchor`` and ``matched``
+    (:func:`page_matched`), as ``full_process`` makes them. Pass
     ``page_join_cols=["doc_id", "source"]`` when page ids are only unique
     within a source (the reference's candidate pages always live inside
     ONE document, full_extractor_service.py:253-277 — joining on the bare
     id would pull other documents' pages into the scan text).
 
     Returns one row per (target_id, source): method, pages_csv, n_pages,
-    start_char, end_char, refined_text. One broadcast join of the targets
-    and one aggregate by (target_id, source).
+    start_char, end_char, refined_text. At most one broadcast join of the
+    targets and one aggregate by (target_id, source).
     """
-    from ocr_parallel_spark.operators.localization import match_hits, match_texts
-
     if pages is not None:
-        pages = pages.withColumns(match_texts("norm", "_pg_"))
+        texts = match_texts("norm", "_pg_")
+        pages = pages.selectExpr("*", *(f"{e} AS {n}" for n, e in texts.items()))
         candidates = candidates.join(pages, page_join_cols or ["doc_id"])
-    j = candidates.join(F.broadcast(targets), "target_id")
-
-    # Per-page re-match: FULL F4 semantics via the single shared
-    # match_hits definition, exact integer threshold comparison.
-    hits = match_hits(
-        F.col("tokens"), F.col("_pg_upper"), F.col("_pg_wordified")
-    )
-    tnum, tden = threshold_ratio
-    j = j.withColumn(
-        "matched",
-        (F.size(F.col("tokens")) > 0)
-        & (hits * tden >= F.size(F.col("tokens")) * tnum),
-    )
+    if targets is not None:
+        matched = page_matched("tokens", "_pg_upper", "_pg_wordified", threshold_ratio)
+        candidates = candidates.join(F.broadcast(targets), "target_id").selectExpr(
+            "*", f"{matched} AS matched"
+        )
 
     # The heavy per-group values (sorted pages, page ids, the uppercased
     # "\n\n"-joined text, cumulative offsets) are produced as AGGREGATE
@@ -245,36 +267,20 @@ def refine_pages_with_boundaries(
     # re-evaluated PER ARRAY ELEMENT — the 17 KB concat+upper rebuilt for
     # every one of ~700 scan windows turned this operator quadratic
     # (measured: 2.3 s/group before, ~ms after).
-    sorted_pages = F.array_sort(F.collect_set(F.struct("doc_id", "norm")))
-    g = j.groupBy("target_id", "source").agg(
-        sorted_pages.alias("pages"),
-        F.transform(sorted_pages, lambda s: s["doc_id"]).alias("_page_ids"),
-        F.upper(
-            F.concat_ws("\n\n", F.transform(sorted_pages, lambda s: s["norm"]))
-        ).alias("_upper"),
+    sorted_pages = "array_sort(collect_set(struct(doc_id, norm)))"
+    g = candidates.groupBy("target_id", "source").agg(*(F.expr(e) for e in (
+        f"{sorted_pages} AS pages",
+        f"transform({sorted_pages}, s -> s.doc_id) AS _page_ids",
+        f"upper(concat_ws({NL2}, transform({sorted_pages}, s -> s.norm))) AS _upper",
         # page k spans [offsets[k], offsets[k] + len + 2) (:606-627)
-        F.aggregate(
-            F.transform(sorted_pages, lambda s: F.length(s["norm"]).cast("long")),
-            F.array(F.lit(0).cast("long")),
-            lambda acc, l: F.array_append(
-                acc, F.element_at(acc, -1) + l + PAGE_SEP_LEN
-            ),
-        ).alias("_offsets"),
-        F.array_sort(
-            F.collect_set(F.when(F.col("matched"), F.col("doc_id")))
-        ).alias("matching"),
-        F.first("tokens").alias("tokens"),
-        F.first("anchor").alias("anchor"),
-        # the marker lists, bound as literals: never part of the SQL text
-        *[
-            F.array(*[F.lit(m) for m in ms]).cast("array<string>").alias(name)
-            for name, ms in (
-                ("_sm", start_markers),
-                ("_eam", end_after_markers),
-                ("_ebm", end_before_markers),
-            )
-        ],
-    )
+        f"""aggregate(transform({sorted_pages}, s -> CAST(length(s.norm) AS BIGINT)),
+              array(0L), (acc, l) -> array_append(acc, element_at(acc, -1) + l + {PAGE_SEP_LEN}))
+              AS _offsets""",
+        "array_sort(collect_set(IF(matched, doc_id, NULL))) AS matching",
+        "first(tokens) AS tokens",
+        "first(anchor) AS anchor",
+    )))
+    sm, eam, ebm = map(_markers, (start_markers, end_after_markers, end_before_markers))
 
     num, den = START_MIN_COVERAGE
     fnum, fden = FALLBACK_MIN_COVERAGE
@@ -287,7 +293,7 @@ def refine_pages_with_boundaries(
             f"""CASE WHEN size(matching) > 0 THEN array_max(filter(transform(
                   filter(transform({_windows("_upper", START_WINDOW)},
                     (w, k) -> named_struct('w', w, 'i', k * {START_STRIDE},
-                                           'mpos', {_first_marker_pos("w", "_sm")})),
+                                           'mpos', {_first_marker_pos("w", sm)})),
                     s -> s.mpos >= 0),
                   s -> named_struct('hits', size(filter(tokens, t -> contains(s.w, t))),
                                     'ni', -s.i, 'mpos', s.mpos)),
@@ -338,11 +344,11 @@ def refine_pages_with_boundaries(
         (
             f"""array_min(concat(
                   transform(
-                    transform(_eam, m -> nullif(locate(m, _stext), 0) + length(m) - 1),
+                    transform({eam}, m -> nullif(locate(m, _stext), 0) + length(m) - 1),
                     e -> IF(e IS NULL, NULL, coalesce(
                       nullif(locate(concat('.', {NL2}), _stext, e + 1), 0) + 2,
                       least(e + {SECTION_FALLBACK_CHARS}, _slen)))),
-                  transform(_ebm, m -> nullif(locate(m, _stext), 0) - 1)))
+                  transform({ebm}, m -> nullif(locate(m, _stext), 0) - 1)))
                 AS _earliest""",
         ),
         (

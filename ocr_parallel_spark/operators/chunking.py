@@ -5,11 +5,12 @@ window of ``chunk_size`` rows advancing ``chunk_size - overlap`` per step
 over the ordered rows of one document; chunk text is the ``"\\n\\n"`` join
 of member texts; the loop stops once a chunk reaches the end.
 
-Spark-first shape: no per-group Python. Chunk ids are synthesized with
-``sequence`` + ``explode`` from per-group counts, members attach via a
-range condition on the row index, and each chunk keeps its sorted member
-rows, text included (F9's chunk -> pages step reads them there). One
-shuffle: the chunk aggregate's keys hold the rank window's group key.
+Spark-first shape: no per-group Python. Each row explodes into the ids of
+the (at most ceil(size / step)) chunks that hold it, computed from its rank
+and its group's count, and each chunk keeps its sorted member rows, text
+included (F9's chunk -> pages step reads them there). One shuffle: the
+chunk aggregate's keys hold the rank window's group key. Built as SQL text,
+one call per dependency level (see ``operators/localization.py``).
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ def overlap_chunks(
     text_col: str,
     chunk_size: int = CHUNK_SIZE,
     overlap: int = CHUNK_OVERLAP,
-    member_cols: dict[str, Column] | None = None,
+    member_cols: dict[str, str] | None = None,
 ) -> DataFrame:
     """W1: overlapping chunks per partition group.
 
@@ -37,45 +38,42 @@ def overlap_chunks(
     reference's loop-with-break (chunking.py:40-69). ``members``: the
     chunk's rows as (order_col, text_col, *member_cols) structs sorted by
     ``order_col``; ``chunk_text`` joins their texts with ``"\\n\\n"``.
-    ``member_cols`` (name -> Column over ``df``) are computed once per row,
-    after the rank shuffle, and carried in each member.
+    ``member_cols`` (name -> SQL over ``df``'s columns) are computed once
+    per row, after the rank shuffle, and carried in each member.
     """
     if chunk_size <= overlap:
         raise ValueError(f"chunk_size ({chunk_size}) must be > overlap ({overlap})")
     step = chunk_size - overlap
     member_cols = member_cols or {}
 
-    w = Window.partitionBy(part_col).orderBy(order_col)
-    ranked = df.select(part_col, order_col, text_col).withColumns({
-        "_rn": F.row_number().over(w) - 1,
-        "_n": F.count(F.lit(1)).over(Window.partitionBy(part_col)),
-    }).withColumns(member_cols)
-
-    # number of chunks: 1 for n <= chunk_size, else ceil((n-size)/step)+1
-    n_chunks = F.when(F.col("_n") <= chunk_size, F.lit(1)).otherwise(
-        F.ceil((F.col("_n") - chunk_size) / F.lit(step)) + 1
+    ranked = df.selectExpr(
+        part_col, order_col, text_col,
+        f"row_number() OVER (PARTITION BY {part_col} ORDER BY {order_col}) - 1 AS _rn",
+        f"count(1) OVER (PARTITION BY {part_col}) AS _n",
     )
-    with_chunks = ranked.withColumn(
-        "chunk_index",
-        F.explode(F.sequence(F.lit(0), n_chunks.cast("int") - 1)),
-    ).filter(
-        (F.col("_rn") >= F.col("chunk_index") * step)
-        & (F.col("_rn") < F.col("chunk_index") * step + chunk_size)
+    # Below the generator, so once per row, not once per (row, chunk).
+    if member_cols:
+        ranked = ranked.selectExpr("*", *(f"{e} AS {n}" for n, e in member_cols.items()))
+
+    # Chunk k holds rows [k * step, k * step + size); a group of n rows has
+    # 1 chunk for n <= size, else ceil((n - size) / step) + 1. Since
+    # step < size, each row lies in a non-empty run of chunks: from the
+    # first that reaches it to the last that starts at or before it.
+    n_chunks = f"IF(_n <= {chunk_size}, 1, ceil((_n - {chunk_size}) / {step}) + 1)"
+    first = f"greatest(0, ceil((_rn - {chunk_size} + 1) / {step}))"
+    last = f"least({n_chunks} - 1, floor(_rn / {step}))"
+    with_chunks = ranked.selectExpr(
+        "*", f"explode(sequence(CAST({first} AS INT), CAST({last} AS INT))) AS chunk_index"
     )
 
-    members = F.array_sort(F.collect_list(F.struct(order_col, text_col, *member_cols)))
-    return (
-        with_chunks.groupBy(part_col, "chunk_index")
-        .agg(
-            F.min(order_col).alias(f"start_{order_col}"),
-            F.max(order_col).alias(f"end_{order_col}"),
-            F.count(F.lit(1)).alias("n_rows"),
-            members.alias("members"),
-        )
-        .withColumn(
-            "chunk_text",
-            F.concat_ws("\n\n", F.transform("members", lambda s: s[text_col])),
-        )
+    members = ", ".join([order_col, text_col, *member_cols])
+    return with_chunks.groupBy(part_col, "chunk_index").agg(
+        F.expr(f"min({order_col}) AS start_{order_col}"),
+        F.expr(f"max({order_col}) AS end_{order_col}"),
+        F.expr("count(1) AS n_rows"),
+        F.expr(f"array_sort(collect_list(struct({members}))) AS members"),
+    ).selectExpr(
+        "*", f"concat_ws(repeat(char(10), 2), transform(members, s -> s.{text_col})) AS chunk_text"
     )
 
 

@@ -14,10 +14,16 @@ SURVEY §2.3 J2 + §2.8 F2-F4. Reference semantics
 Spark-first: the targets side is tiny (10-500 rows, reference design
 envelope), so the join is an explicit ``broadcast`` nested-loop join; the
 score is a pure column expression (``aggregate`` over the token array) that
-runs inside codegen — no UDF.
+runs inside codegen — no UDF. The matching expressions are SQL text,
+applied with one ``selectExpr`` per dependency level: each ``F.*`` call
+is a py4j round trip that also records its Python call site, and a chain
+built from them cost more on the driver than its small inputs cost to
+run. Literal text that reaches the SQL goes through :func:`sql_str`.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -109,8 +115,27 @@ def expand_variants(
     return F.array_distinct(expanded)
 
 
-def wordify(upper_text: Column) -> Column:
-    """Collapse non-word chars to single spaces and pad — turns
+_WORD_SPLIT = r"[^\p{L}\p{N}_]+"
+
+
+def sql_str(s: str) -> str:
+    """``s`` as Spark SQL text that holds no quote, backslash or ``$``:
+    those three are spelled ``char(n)`` (the rest stays quoted), so neither
+    ``escapedStringLiterals`` nor ``${...}`` variable substitution can
+    change what the parser reads. Constant folding turns it back into
+    one literal."""
+    parts = [
+        f"char({ord(p)})" if p in ("'", "\\", "$") else f"'{p}'"
+        for p in re.split(r"(['\\$])", s)
+        if p
+    ]
+    if len(parts) == 1:
+        return parts[0]
+    return f"concat({', '.join(parts)})" if parts else "''"
+
+
+def wordify(upper_text: str) -> str:
+    """SQL: collapse non-word chars to single spaces and pad — turns
     ``\\b``-bounded matching into plain substring containment. The word
     class is ``\\p{L}\\p{N}_`` (all Unicode letters/digits), matching
     the REFERENCE's Python ``\\b`` (text_localization.py:190), which is
@@ -118,66 +143,39 @@ def wordify(upper_text: Column) -> Column:
     token '123' must not hit — an ASCII class would space out the 'Ó'
     and invent one. ``\\p{L}\\p{N}`` parses identically in Java regex
     and RE2, so the SQL oracles replay the same class."""
-    return F.concat(
-        F.lit(" "),
-        F.regexp_replace(upper_text, r"[^\p{L}\p{N}_]+", " "),
-        F.lit(" "),
-    )
+    return f"concat(' ', regexp_replace({upper_text}, {sql_str(_WORD_SPLIT)}, ' '), ' ')"
 
 
-def match_texts(text_col: str, prefix: str) -> dict[str, Column]:
-    """``match_hits``' per-row inputs: ``<prefix>upper`` and
-    ``<prefix>wordified`` of ``text_col``, to be made as columns below a
-    join, shuffle or generator (see :func:`match_hits`)."""
-    upper = F.upper(F.col(text_col))
+def match_texts(text: str, prefix: str) -> dict[str, str]:
+    """``match_hits``' per-row inputs as name -> SQL: ``<prefix>upper`` and
+    ``<prefix>wordified`` of the column ``text``, to be made as columns
+    below a join, shuffle or generator (see :func:`match_hits`)."""
+    upper = f"upper({text})"
     return {f"{prefix}upper": upper, f"{prefix}wordified": wordify(upper)}
 
 
-def match_hits(
-    tokens_col: Column, upper_col: Column, wordified_col: Column
-) -> Column:
-    """F4's hit count: digit tokens match word-bounded (padded containment
-    in the wordified text), word tokens by plain substring. THE single
-    definition of the matching semantics — localize, match_score, the
-    boundary per-page re-match, and the variants query all call this so
-    they cannot drift apart. Callers should pass MATERIALIZED columns for
-    ``upper_col``/``wordified_col``: expressions referenced inside the
-    aggregate lambda re-evaluate per token."""
-    return F.aggregate(
-        tokens_col,
-        F.lit(0),
-        lambda acc, t: acc
-        + F.when(
-            t.rlike(r"^\d+$"),
-            F.when(
-                wordified_col.contains(F.concat(F.lit(" "), t, F.lit(" "))), 1
-            ).otherwise(0),
-        ).otherwise(F.when(upper_col.contains(t), 1).otherwise(0)),
+def match_hits(tokens: str, upper: str, wordified: str) -> str:
+    """SQL: F4's hit count. Digit tokens match word-bounded (padded
+    containment in the wordified text), word tokens by plain substring:
+    ``\\b123\\b`` is ``contains(' 123 ')`` over the text wordified ONCE
+    per row, so the per-(row, token) work is substring search, never
+    regex compilation. THE single definition of the matching semantics —
+    localize, the boundary per-page re-match and the variants query all
+    call this so they cannot drift apart. Pass ATTRIBUTES (columns made
+    by :func:`match_texts` below a join or generator) for
+    ``upper``/``wordified``: an expression referenced inside the
+    aggregate lambda re-evaluates per token. ``^[0-9]+$`` is Java's
+    ASCII ``\\d``."""
+    return (
+        f"aggregate({tokens}, 0, (acc, t) -> acc + IF(t RLIKE '^[0-9]+$', "
+        f"IF(contains({wordified}, concat(' ', t, ' ')), 1, 0), "
+        f"IF(contains({upper}, t), 1, 0)))"
     )
 
 
-def match_score(tokens_col: Column, text_col: Column) -> Column:
-    """F4: fraction of tokens present in the uppercased text. Digit tokens
-    need word boundaries; word tokens match by substring. Pure expression
-    (aggregate over the array) — whole-stage codegen, no Python.
-
-    Word-boundary check without a per-token dynamic regex: non-word chars
-    are collapsed to single spaces ONCE per row (the Unicode word class —
-    see :func:`wordify` for why ASCII would diverge from the reference's
-    Python ``\\b``), so ``\\b123\\b`` becomes a plain
-    ``contains(' 123 ')`` over the padded wordified text — the
-    per-(row, token) work is substring search, never regex compilation.
-
-    NOTE: this convenience form builds upper/wordified inline, which the
-    aggregate lambda re-evaluates per token. On hot paths materialize
-    them as columns first and call ``match_hits`` directly (see localize).
-    """
-    upper_text = F.upper(text_col)
-    wordified = wordify(upper_text)
-    hits = match_hits(tokens_col, upper_text, wordified)
-    return F.when(F.size(tokens_col) > 0, hits / F.size(tokens_col)).otherwise(
-        F.lit(0.0)
-    )
+def hit_ratio(tokens: str, hits: str) -> str:
+    """SQL: F4's score, the fraction of ``tokens`` hit (0 for none)."""
+    return f"IF(size({tokens}) > 0, {hits} / size({tokens}), 0D)"
 
 
 def localize(
@@ -196,13 +194,13 @@ def localize(
     # Materialize the per-row derived texts BEFORE the cross join so they
     # are computed once per chunk row (inside the aggregate lambda Catalyst
     # would re-evaluate them per token) and never per (chunk, target) pair.
-    prepped = chunks.withColumns(match_texts(text_col, "_"))
-    joined = prepped.crossJoin(F.broadcast(targets))
-    hits = match_hits(F.col(tokens_col), F.col("_upper"), F.col("_wordified"))
-    scored = joined.withColumn(
-        "score",
-        F.when(
-            F.size(F.col(tokens_col)) > 0, hits / F.size(F.col(tokens_col))
-        ).otherwise(F.lit(0.0)),
+    prepped = chunks.selectExpr(
+        "*", *(f"{e} AS {n}" for n, e in match_texts(text_col, "_").items())
     )
-    return scored.filter(F.col("score") >= threshold).drop("_upper", "_wordified")
+    score = hit_ratio(tokens_col, match_hits(tokens_col, "_upper", "_wordified"))
+    return (
+        prepped.crossJoin(F.broadcast(targets))
+        .selectExpr("*", f"{score} AS score")
+        .filter(f"score >= {float(threshold)!r}D")
+        .drop("_upper", "_wordified")
+    )

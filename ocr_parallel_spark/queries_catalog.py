@@ -436,33 +436,40 @@ def q_embedding_neardup(spark, sf_dir):
     )
 
 
-def q_full_process(spark, sf_dir):
-    """SURVEY §3.3 composite: chunk (W1) -> localize (J2) -> chunk->pages
-    (W2) -> ordered concat (W3) per matched target. One broadcast join +
-    two keyed shuffles; the reference's whole full-process endpoint as a
-    single logical plan."""
-    docs = _docs(spark, sf_dir)
-    chunks = overlap_chunks(docs, "source", "doc_id", "norm", TCHUNK, TOVERLAP)
+def _matched_pages(spark, sf_dir) -> DataFrame:
+    """(target_id, source, doc_id, norm) of every member page of a chunk
+    the target matches (chunk (W1) -> localize (J2) -> chunk -> pages
+    (W2)); a page in two matching chunks appears twice."""
+    chunks = overlap_chunks(_docs(spark, sf_dir), "source", "doc_id", "norm", TCHUNK, TOVERLAP)
     targets = local_frame(spark, TARGETS, "target_id int, tokens array<string>")
-    loc = localize(targets, chunks, "tokens", "chunk_text")
-    pages = loc.select(
+    return localize(targets, chunks, "tokens", "chunk_text").selectExpr(
+        "target_id", "source", "inline(members)"
+    )
+
+
+def _concat_pages(pages: DataFrame, cap: int | None = None) -> DataFrame:
+    """Ordered concat (W3) of each (target_id, source)'s distinct pages,
+    the lowest ``cap`` page numbers when capped, and their count."""
+    kept = "array_sort(collect_set(struct(doc_id, norm)))"
+    if cap is not None:
+        kept = f"slice({kept}, 1, {cap})"
+    return pages.groupBy("target_id", "source").agg(
+        F.expr(f"{kept} AS _pages")
+    ).selectExpr(
         "target_id",
         "source",
-        F.explode(
-            F.sequence(F.col("start_doc_id"), F.col("end_doc_id"))
-        ).alias("doc_id"),
-    ).distinct()
-    joined = pages.join(docs.select("doc_id", "norm"), "doc_id")
-    return joined.groupBy("target_id", "source").agg(
-        F.concat_ws(
-            "\n\n",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("doc_id", "norm"))),
-                lambda s: s["norm"],
-            ),
-        ).alias("refined_text"),
-        F.count(F.lit(1)).alias("n_pages"),
+        "concat_ws(repeat(char(10), 2), transform(_pages, s -> s.norm)) AS refined_text",
+        "CAST(size(_pages) AS BIGINT) AS n_pages",
     )
+
+
+def q_full_process(spark, sf_dir):
+    """SURVEY §3.3 composite: chunk (W1) -> localize (J2) -> chunk->pages
+    (W2) -> ordered concat (W3) per matched target. A matching chunk's
+    pages are its members, so they never leave the chunk's source. One
+    broadcast join; the reference's whole full-process endpoint as a
+    single logical plan."""
+    return _concat_pages(_matched_pages(spark, sf_dir))
 
 
 def q_full_process_capped(spark, sf_dir):
@@ -470,32 +477,7 @@ def q_full_process_capped(spark, sf_dir):
     most 20 pages per matched target (MAX_PAGES_WITHOUT_BOUNDARIES,
     text_localization.py:685-705), keeping the LOWEST page numbers — the
     reference's deterministic truncation — before the ordered concat."""
-    docs = _docs(spark, sf_dir)
-    chunks = overlap_chunks(docs, "source", "doc_id", "norm", TCHUNK, TOVERLAP)
-    targets = local_frame(spark, TARGETS, "target_id int, tokens array<string>")
-    loc = localize(targets, chunks, "tokens", "chunk_text")
-    pages = loc.select(
-        "target_id",
-        "source",
-        F.explode(
-            F.sequence(F.col("start_doc_id"), F.col("end_doc_id"))
-        ).alias("doc_id"),
-    ).distinct()
-    w = Window.partitionBy("target_id", "source").orderBy("doc_id")
-    capped = pages.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= 20
-    )
-    joined = capped.join(docs.select("doc_id", "norm"), "doc_id")
-    return joined.groupBy("target_id", "source").agg(
-        F.concat_ws(
-            "\n\n",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("doc_id", "norm"))),
-                lambda s: s["norm"],
-            ),
-        ).alias("refined_text"),
-        F.count(F.lit(1)).alias("n_pages"),
-    )
+    return _concat_pages(_matched_pages(spark, sf_dir), cap=20)
 
 
 def _shingles(norm_col, k: int = 3):
@@ -3055,19 +3037,17 @@ def q_localization_variants(spark, sf_dir):
     expansion's effect on match outcomes is oracle-pinned."""
     from ocr_parallel_spark.operators.localization import (
         expand_variants,
+        hit_ratio,
+        match_hits,
+        match_texts,
         tokenize,
     )
-
-    from ocr_parallel_spark.operators.localization import match_hits, wordify
 
     # Materialize the derived texts ONCE per doc row BEFORE the cross
     # join: referenced inside the scoring lambda they would re-evaluate
     # (upper + the wordify regex) per token per (doc, target) pair.
-    docs = (
-        _docs(spark, sf_dir)
-        .select("doc_id", "norm")
-        .withColumn("_upper", F.upper(F.col("norm")))
-        .withColumn("_wordified", wordify(F.col("_upper")))
+    docs = _docs(spark, sf_dir).selectExpr(
+        "doc_id", *(f"{e} AS {n}" for n, e in match_texts("norm", "_").items())
     )
     targets = local_frame(
         spark, VARIANT_TARGETS, "target_id int, name string"
@@ -3076,23 +3056,17 @@ def q_localization_variants(spark, sf_dir):
         tokenize("name").alias("raw_tokens"),
         expand_variants(tokenize("name")).alias("exp_tokens"),
     )
-    j = docs.crossJoin(F.broadcast(targets))
-
-    def score(tokens_col):
-        hits = match_hits(tokens_col, F.col("_upper"), F.col("_wordified"))
-        return F.when(
-            F.size(tokens_col) > 0, hits / F.size(tokens_col)
-        ).otherwise(F.lit(0.0))
-
-    raw_s = score(F.col("raw_tokens"))
-    exp_s = score(F.col("exp_tokens"))
-    return j.select(
+    raw_s, exp_s = (
+        hit_ratio(t, match_hits(t, "_upper", "_wordified"))
+        for t in ("raw_tokens", "exp_tokens")
+    )
+    return docs.crossJoin(F.broadcast(targets)).selectExpr(
         "target_id",
         "doc_id",
-        F.round(raw_s, 4).alias("score_raw"),
-        F.round(exp_s, 4).alias("score_expanded"),
-        (raw_s >= MATCH_THRESHOLD).alias("matched_raw"),
-        (exp_s >= MATCH_THRESHOLD).alias("matched_expanded"),
+        f"round({raw_s}, 4) AS score_raw",
+        f"round({exp_s}, 4) AS score_expanded",
+        f"{raw_s} >= {MATCH_THRESHOLD!r}D AS matched_raw",
+        f"{exp_s} >= {MATCH_THRESHOLD!r}D AS matched_expanded",
     )
 
 
@@ -3529,6 +3503,28 @@ chunks AS (
 _TARGETS_SQL = "targets(target_id, tokens) AS (VALUES " + ", ".join(
     f"({tid}, [{', '.join(repr(t) for t in toks)}])" for tid, toks in TARGETS
 ) + ")"
+
+# The full_process twins' candidate pages: (target, source, page) for
+# every member page of a chunk the target matches at >= 0.6 (full F4
+# scoring over the chunk text), each page once. Membership is the chunk
+# join ``j`` of _CHUNKS_CTE, so a page never leaves its own source.
+_MATCHED_PAGES_SQL = """loc AS (
+              SELECT t.target_id, c.source, c.chunk_index
+              FROM chunks c CROSS JOIN targets t
+              WHERE CAST(list_sum(list_transform(t.tokens, tok ->
+                CASE WHEN regexp_matches(tok, '^\\d+$')
+                     THEN CASE WHEN contains(' ' || regexp_replace(upper(c.chunk_text),
+                            '[^\\p{L}\\p{N}_]+', ' ', 'g') || ' ',
+                            ' ' || tok || ' ') THEN 1 ELSE 0 END
+                     ELSE CASE WHEN contains(upper(c.chunk_text), tok)
+                          THEN 1 ELSE 0 END
+                END)) AS DOUBLE) / len(t.tokens) >= 0.6
+            ),
+            pj AS (
+              SELECT DISTINCT l.target_id, l.source, j.doc_id, j.norm
+              FROM loc l JOIN j ON j.source = l.source
+               AND j.chunk_index = l.chunk_index
+            )"""
 
 # The trigram-LM fit + per-doc scoring (functions/lm.py) replayed
 # entirely in SQL — reference split, taint planting, trigram/context
@@ -5065,27 +5061,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "full_process": _CHUNKS_CTE + f""",
             {_TARGETS_SQL},
-            loc AS (
-              SELECT t.target_id, c.source, c.start_doc_id, c.end_doc_id
-              FROM chunks c CROSS JOIN targets t
-              WHERE CAST(list_sum(list_transform(t.tokens, tok ->
-                CASE WHEN regexp_matches(tok, '^\\d+$')
-                     THEN CASE WHEN contains(' ' || regexp_replace(upper(c.chunk_text),
-                            '[^\\p{{L}}\\p{{N}}_]+', ' ', 'g') || ' ',
-                            ' ' || tok || ' ') THEN 1 ELSE 0 END
-                     ELSE CASE WHEN contains(upper(c.chunk_text), tok)
-                          THEN 1 ELSE 0 END
-                END)) AS DOUBLE) / len(t.tokens) >= 0.6
-            ),
-            pg AS (
-              SELECT DISTINCT target_id, source,
-                     unnest(generate_series(start_doc_id, end_doc_id)) AS doc_id
-              FROM loc
-            ),
-            pj AS (
-              SELECT p.target_id, p.source, p.doc_id, d.norm
-              FROM pg p JOIN docs d ON d.doc_id = p.doc_id
-            )
+            {_MATCHED_PAGES_SQL}
             SELECT target_id, source,
                    string_agg(norm, e'\n\n' ORDER BY doc_id) AS refined_text,
                    count(*) AS n_pages
@@ -5141,38 +5117,14 @@ def oracle_sql() -> dict[str, str]:
         """,
         "full_process_capped": _CHUNKS_CTE + f""",
             {_TARGETS_SQL},
-            loc AS (
-              SELECT t.target_id, c.source, c.start_doc_id, c.end_doc_id
-              FROM chunks c CROSS JOIN targets t
-              WHERE CAST(list_sum(list_transform(t.tokens, tok ->
-                CASE WHEN regexp_matches(tok, '^\\d+$')
-                     THEN CASE WHEN contains(' ' || regexp_replace(upper(c.chunk_text),
-                            '[^\\p{{L}}\\p{{N}}_]+', ' ', 'g') || ' ',
-                            ' ' || tok || ' ') THEN 1 ELSE 0 END
-                     ELSE CASE WHEN contains(upper(c.chunk_text), tok)
-                          THEN 1 ELSE 0 END
-                END)) AS DOUBLE) / len(t.tokens) >= 0.6
-            ),
-            pg AS (
-              SELECT DISTINCT target_id, source,
-                     unnest(generate_series(start_doc_id, end_doc_id)) AS doc_id
-              FROM loc
-            ),
-            pc AS (
-              SELECT target_id, source, doc_id FROM (
-                SELECT target_id, source, doc_id,
-                       row_number() OVER (PARTITION BY target_id, source
-                                          ORDER BY doc_id) AS rn
-                FROM pg) WHERE rn <= 20
-            ),
-            pj AS (
-              SELECT p.target_id, p.source, p.doc_id, d.norm
-              FROM pc p JOIN docs d ON d.doc_id = p.doc_id
-            )
+            {_MATCHED_PAGES_SQL}
             SELECT target_id, source,
                    string_agg(norm, e'\n\n' ORDER BY doc_id) AS refined_text,
                    count(*) AS n_pages
-            FROM pj GROUP BY target_id, source
+            FROM (SELECT *, row_number() OVER (PARTITION BY target_id, source
+                                               ORDER BY doc_id) AS rn
+                  FROM pj)
+            WHERE rn <= 20 GROUP BY target_id, source
         """,
         "media_meta": """
             WITH m AS (

@@ -336,6 +336,54 @@ def test_branch_targeted_cases(spark):
     _check(spark, cases)
 
 
+def _placed(n: int, *spots: tuple[int, str]) -> str:
+    """An ``n``-char filler page with each (position, text) written over
+    it at that char position."""
+    chars = list(_sized(n, ""))
+    for pos, text in spots:
+        chars[pos : pos + len(text)] = text
+    assert len(chars) == n
+    return "".join(chars)
+
+
+def test_start_marker_fold_cases(spark):
+    """The start-marker fold over each 300-char window, one page each:
+    0: the marker straddles the stride edge at 250 and only the window at
+    200 holds it whole plus the tokens; 1: the lower-priority marker comes
+    first in the window, the higher-priority one still sets the start; 2:
+    the window at 0 ends in a prefix of the higher-priority marker, so its
+    lower-priority marker at 100 sets the start (that window has the most
+    hits; the later ones hold the whole marker but fewer tokens)."""
+    cases = [
+        (
+            {0: _placed(600, (245, "qqstart alpha"), (470, "delta echo"))},
+            ["DELTA", "ECHO"],
+            "ZZNOANCHOR",
+        ),
+        (
+            {0: _placed(400, (20, "qqalt"), (60, "delta echo"), (150, "qqstart alpha"))},
+            ["DELTA", "ECHO"],
+            "ZZNOANCHOR",
+        ),
+        (
+            {
+                0: _placed(
+                    420,
+                    (0, "delta echo foxtrot"),
+                    (100, "qqalt"),
+                    (200, "delta echo"),
+                    (290, "qqstart alpha"),
+                )
+            },
+            ["DELTA", "ECHO", "FOXTROT"],
+            "ZZNOANCHOR",
+        ),
+    ]
+    _check(spark, cases)
+    starts = [_mirror_refine(*case)[2] for case in cases]
+    assert starts == [245, 150, 100], starts
+
+
 def test_digit_token_cases(spark):
     """Digit tokens match a page only between word boundaries (F4), in the
     Unicode word class: not inside 'A12B', after '_' or after a letter

@@ -128,3 +128,27 @@ def test_run_full_process_equals_range_join_chain(spark, sf_dir, tmp_path, case)
     assert got_rows, "no refined rows: the case exercises nothing"
     assert got_rows == sorted(map(tuple, want.collect()), key=repr)
     assert len({r.method for r in got.collect()}) >= 2
+
+
+@pytest.mark.parametrize("name", ["full_process", "full_process_capped"])
+def test_full_process_pages_stay_in_their_source(spark, sf_dir, name):
+    """The catalog's concat entries take a matching chunk's pages from its
+    members, so every row's pages belong to its own source (sources
+    interleave doc ids, so a chunk's [start, end] id range also covers
+    other sources' documents). The F1 text holds no "\\n\\n", so the
+    refined text splits back into its pages."""
+    docs = qc._docs(spark, sf_dir).select("source", "doc_id", "norm").collect()
+    by_source = {}
+    for d in docs:
+        by_source.setdefault(d.source, []).append(d)
+    rows = qc.queries()[name](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        own = by_source[r.source]
+        texts = r.refined_text.split("\n\n")
+        assert r.n_pages == len(texts) <= len(own), (r.target_id, r.source, r.n_pages)
+        # the texts are a subsequence of the source's page texts in page
+        # order
+        own_texts = [d.norm for d in sorted(own, key=lambda d: d.doc_id)]
+        it = iter(own_texts)
+        assert all(t in it for t in texts), (r.target_id, r.source)

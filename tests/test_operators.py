@@ -7,6 +7,7 @@ grouping, status classification).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_parallel_spark.operators.chunking import (
@@ -18,11 +19,27 @@ from ocr_parallel_spark.operators.classify import classify_status, normalize_col
 from ocr_parallel_spark.operators.dedup import keep_first
 from ocr_parallel_spark.operators.localization import (
     expand_variants,
+    hit_ratio,
     localize,
+    match_hits,
+    match_texts,
+    sql_str,
     tokenize,
 )
 from ocr_parallel_spark.operators.sessionize import densest_range, sessionize
 from ocr_parallel_spark.kernel.normalize import clean_text
+
+
+def _scores(df, text_col, tokens_cols):
+    """F4 scores of ``text_col`` against each array column in
+    ``tokens_cols``: ``match_hits`` over the ``match_texts`` columns."""
+    texts = df.selectExpr(
+        "*", *(f"{e} AS {n}" for n, e in match_texts(text_col, "_").items())
+    )
+    return texts.selectExpr(*(
+        f"{hit_ratio(t, match_hits(t, '_upper', '_wordified'))} AS {t}"
+        for t in tokens_cols
+    ))
 
 
 def _pages(spark, n, doc="d1"):
@@ -103,18 +120,15 @@ def test_expand_variants_reverse_lookup_flips_match(spark):
     changes a match outcome at threshold 0.6. 'ORDER ARRANGE' raw scores
     1/2 = 0.5 (no match); expanded to {ORDER, ARRANGE, SORT} it scores
     2/3 = 0.667 (match) against text containing 'order' and 'sort'."""
-    from ocr_parallel_spark.operators.localization import match_score
-
     syn = {"SORT": ["ORDER", "ARRANGE"]}
     df = spark.createDataFrame(
         [("order arrange", "the sort and order of things")], "name string, text string"
+    ).select(
+        "text",
+        tokenize("name").alias("raw"),
+        expand_variants(tokenize("name"), syn).alias("exp"),
     )
-    row = df.select(
-        match_score(tokenize("name"), F.col("text")).alias("raw"),
-        match_score(expand_variants(tokenize("name"), syn), F.col("text")).alias(
-            "exp"
-        ),
-    ).collect()[0]
+    row = _scores(df, "text", ["raw", "exp"]).collect()[0]
     assert row.raw < 0.6 <= row.exp
 
     # forward direction: key token pulls in its values
@@ -388,7 +402,6 @@ def test_pagerank_dangling_redistribution_conserves_mass(spark):
     """dangling='redistribute' must conserve total rank mass (within
     floor-division dust), where the teleport default visibly leaks the
     dangling node's share each iteration."""
-    import pytest
 
     from ocr_parallel_spark.operators.graph import pagerank_int
 
@@ -488,25 +501,41 @@ def test_normalize_col_matches_kernel_on_unicode_whitespace(spark):
     assert got == [clean_text(s) for s in cases]
 
 
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_sql_str_reads_back_verbatim(spark, escaped):
+    """Text spliced into SQL by ``sql_str`` (markers, the word-class
+    regex) reads back as itself whatever the parser's escape mode, and
+    ``${...}`` is never substituted."""
+    texts = [
+        "", "plain", "it's", "back\\slash", "${env:HOME}", "${spark.app.name}",
+        "$", "new\nline", "ÑANDÚ 😀", "'\\$'",
+    ]
+    key = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, escaped)
+    try:
+        row = spark.range(1).selectExpr(
+            *(f"{sql_str(t)} AS c{i}" for i, t in enumerate(texts))
+        ).collect()[0]
+    finally:
+        spark.conf.set(key, prev)
+    assert list(row) == texts
+
+
 def test_digit_boundary_matches_python_word_class(spark):
     """Digit tokens bound by the reference's Python \\b (Unicode word
     chars): an accented letter flush against the digits is NOT a
     boundary, so '123' must not hit 'CESI\u00d3N123' — an ASCII word
     class would space the accented letter out and invent the boundary —
     while punctuation/space-bounded digits still hit."""
-    from ocr_parallel_spark.operators.localization import match_score
-
     rows = [
         ("CESI\u00d3N123 TRAS", 0.0),   # digit glued to accented letter
         ("CESION 123 TRAS", 1.0),        # space-bounded
         ("NO(123)SI", 1.0),              # punctuation-bounded
         ("X1234 Y", 0.0),                # longer number, no boundary
     ]
-    df = spark.createDataFrame([(t,) for t, _ in rows], "t string")
-    got = [
-        r.s
-        for r in df.select(
-            match_score(F.array(F.lit("123")), F.col("t")).alias("s")
-        ).collect()
-    ]
+    df = spark.createDataFrame([(t,) for t, _ in rows], "t string").select(
+        "t", F.array(F.lit("123")).alias("s")
+    )
+    got = [r.s for r in _scores(df, "t", ["s"]).collect()]
     assert got == [e for _, e in rows], got

@@ -290,6 +290,58 @@ def test_full_process_scans_documents_once(spark, sf_dir):
     assert _lambda_regexp_replaces(opt) == []
 
 
+# py4j round trips to build q_full_process_boundaries (warm, no action),
+# 4 cores: 1,913 with the chain built from F.* Columns, 364 with it built
+# as SQL text, one call per dependency level. The budget is 1.5x the
+# latter.
+FULL_PROCESS_BUILD_ROUND_TRIPS = 546
+
+
+def _round_trips(fn) -> int:
+    """py4j commands sent while ``fn()`` runs, not counting the memory
+    releases: those free proxies of earlier frames whenever Python's GC
+    gets to them, so they vary between identical builds."""
+    from py4j import protocol
+    from py4j.java_gateway import GatewayClient
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    orig, sent = GatewayClient.send_command, []
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith(release):
+            sent.append(command)
+        return orig(self, command, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        fn()
+    finally:
+        GatewayClient.send_command = orig
+    return len(sent)
+
+
+def test_full_process_build_round_trip_budget(spark, sf_dir):
+    """Building the full-process chain stays cheap on the driver: each
+    F.* call is a py4j round trip (recording its Python call site too), so
+    the chain is SQL text, one selectExpr or agg per dependency level."""
+    from ocr_parallel_spark.queries_catalog import q_full_process_boundaries
+
+    q_full_process_boundaries(spark, sf_dir)  # warm: the first build loads classes
+    n = _round_trips(lambda: q_full_process_boundaries(spark, sf_dir))
+    assert 0 < n <= FULL_PROCESS_BUILD_ROUND_TRIPS, n
+
+
+def test_full_process_broadcasts_targets_once(spark, sf_dir):
+    """The targets join the chunks once, in localization; refinement's
+    per-page re-match rides on the localized rows, so no second targets
+    join (and no second broadcast job) remains."""
+    from ocr_parallel_spark.queries_catalog import q_full_process_boundaries
+
+    p = plan_of(q_full_process_boundaries(spark, sf_dir), "simple")
+    assert p.count("BroadcastExchange") == 1, p
+    assert "BroadcastHashJoin" not in p
+
+
 def test_salted_rollup_two_stage(spark, sf_dir):
     from ocr_parallel_spark.queries_catalog import q_salted_rollup
 
