@@ -16,9 +16,8 @@ whose state is bounded at depth x width cells regardless of input
 (kilobytes to megabytes); heavy-hitter CANDIDATES read off the sketch,
 and only candidates pay an exact verification count — the same
 prefilter-then-verify shape as the Bloom dedup sidecar. The grid is
-MERGEABLE (cell-wise sum), so per-shard or per-run sketches fold
-together without re-scanning (``cms_merge`` == rebuild exactly,
-pytest-pinned).
+MERGEABLE: the cell-wise sum of two grids built with the same
+(width, depth) equals the grid of the combined input (pytest-pinned).
 
 Fully deterministic — no rand(), no Python on the hot path — so the
 DuckDB oracle replays build AND estimate cell-for-cell (``cms_heavy``).
@@ -76,18 +75,6 @@ def cms_build(
         cells.filter(F.col("col_idx").isNotNull())
         .groupBy("row_idx", "col_idx")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Cell-wise sum of two grids BUILT WITH THE SAME (width, depth):
-    cms_merge(build(A), build(B)) == build(A ++ B) exactly — fold
-    per-run sketches without rescanning committed data."""
-    return (
-        a.select("row_idx", "col_idx", "cnt")
-        .unionByName(b.select("row_idx", "col_idx", "cnt"))
-        .groupBy("row_idx", "col_idx")
-        .agg(F.sum("cnt").alias("cnt"))
     )
 
 

@@ -17,7 +17,6 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ocr_parallel_spark import local_frame
 from ocr_parallel_spark.fanout import fan_out
 
 # Hard per-cell occupancy bound for SemDedup pairing (the MAX_BAND_BUCKET
@@ -42,18 +41,10 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Convenience form. NOTE: evaluates norm(a)/norm(b) inline — inside
-    a pair join that recomputes per-side norms PER PAIR (and twice each:
-    when-condition plus value). The top-k paths below precompute each
-    side's norm once per ROW and combine with ``cosine_from_norms``."""
-    d = norm(a) * norm(b)
-    return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
-
-
 def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """Same arithmetic as ``cosine`` (bit-identical IEEE results) with
-    the per-side norms supplied as precomputed columns."""
+    """Cosine similarity ``dot(a, b) / (na * nb)``, 0.0 when either norm
+    is 0, with the per-side norms supplied as precomputed columns: inside
+    a pair join, norms computed inline would be recomputed per pair."""
     d = na * nb
     return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
 
@@ -312,25 +303,6 @@ def kmeans_centroids(
     return np.round(C, 6).tolist()
 
 
-def centroids_to_df(spark, centroids: list[list[float]]) -> DataFrame:
-    """Serialize IVF centroids as a ``(cell, centroid)`` table so an
-    index survives the session — the build-once/query-many deployment
-    shape (snapshot-append the result next to ``build_ivf_index``'s
-    assignment rows)."""
-    return local_frame(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    )
-
-
-def centroids_from_df(df: DataFrame) -> list[list[float]]:
-    """Inverse of :func:`centroids_to_df` (cell order restored — the
-    cell ids in a persisted assignment index are positional)."""
-    rows = df.select("cell", "centroid").collect()
-    return [list(map(float, r.centroid)) for r in sorted(rows, key=lambda r: r.cell)]
-
-
 def build_ivf_index(
     vectors: DataFrame,
     centroids: list[list[float]],
@@ -339,9 +311,10 @@ def build_ivf_index(
 ) -> DataFrame:
     """Corpus-side IVF index: ``(id, cell)`` rows — the nearest-centroid
     assignment amortized across query batches, exactly like
-    ``build_lsh_index``'s bucket rows. Persist together with
-    ``centroids_to_df`` (queries still need the centroids to pick probe
-    cells) and pass back via ``ivf_topk(index=...)``."""
+    ``build_lsh_index``'s bucket rows. Persist together with the
+    centroid list (queries still need the centroids to pick probe cells;
+    ``scripts/job_index.py`` pins them as JSON) and pass back via
+    ``ivf_topk(index=...)``."""
     return ivf_assign(
         fan_out(vectors.select(id_col, vec_col)), centroids, vec_col, 1
     ).select(id_col, F.element_at("ivf_cells", 1).alias("cell"))

@@ -36,10 +36,6 @@ def stopword_hits_from_tokens(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
-def stopword_hits(text_col: Column | str, lang: str) -> Column:
-    return stopword_hits_from_tokens(tokens_col(text_col), lang)
-
-
 def detect_lang_from_hits(hits: dict[str, Column]) -> Column:
     """Language case-expression over precomputed per-language hit counts
     (materialize them as columns — referenced here each count appears
@@ -50,16 +46,6 @@ def detect_lang_from_hits(hits: dict[str, Column]) -> Column:
     for lang in reversed(LANG_PRECEDENCE):
         expr = F.when((best > 0) & (hits[lang] == best), F.lit(lang)).otherwise(expr)
     return expr
-
-
-def detect_lang(text_col: Column | str) -> Column:
-    """Convenience form: highest stopword-hit language from raw text.
-    NOTE: builds the token split inline inside every hit expression (the
-    case references each count ~3x -> up to a dozen splits per row). Hot
-    paths should materialize a tokens column + per-language hit columns
-    and call ``detect_lang_from_hits`` (see q_langid)."""
-    hits = {lang: stopword_hits(text_col, lang) for lang in LANG_PRECEDENCE}
-    return detect_lang_from_hits(hits)
 
 
 def token_count_ws(text_col: Column | str) -> Column:

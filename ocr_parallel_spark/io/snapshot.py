@@ -53,28 +53,16 @@ class SnapshotTable:
         name = cur.read_text().strip()
         return json.loads((self.manifest_dir / name).read_text())
 
-    def snapshots(self) -> list[dict]:
-        if not self.manifest_dir.exists():
-            return []
-        out = []
-        for p in sorted(self.manifest_dir.glob("snapshot-*.json")):
-            out.append(json.loads(p.read_text()))
-        return out
-
     def snapshot_at(self, ordinal: int) -> dict | None:
-        """Time travel (Iceberg ``VERSION AS OF`` analog): the manifest of
-        a PAST commit. Snapshots are immutable and append-only data dirs
-        are never rewritten, so any committed ordinal stays readable."""
+        """The manifest of a past commit (None if there is none).
+        Snapshots are immutable, so an ordinal's manifest never changes."""
         p = self.manifest_dir / f"snapshot-{ordinal:06d}.json"
         if not p.exists():
             return None
         return json.loads(p.read_text())
 
-    def read(
-        self, spark: SparkSession, ordinal: int | None = None
-    ) -> DataFrame | None:
-        """Read the committed table state (union of live data dirs) —
-        current by default, or as of a past ``ordinal`` (time travel).
+    def read(self, spark: SparkSession) -> DataFrame | None:
+        """Read the committed table state (union of live data dirs).
 
         ``mergeSchema``: runs may carry evolved schemas (an added column
         — Iceberg's most-used schema evolution); the union reconciles by
@@ -90,9 +78,7 @@ class SnapshotTable:
         that run's columns; a dir whose manifest is missing falls back
         to merging (safe, just slower). Same-name type changes are out
         of scope for this fallback, like renames."""
-        snap = (
-            self.current_snapshot() if ordinal is None else self.snapshot_at(ordinal)
-        )
+        snap = self.current_snapshot()
         if snap is None or not snap["data_dirs"]:
             return None
         paths = [str(self.root / d) for d in snap["data_dirs"]]
@@ -102,45 +88,37 @@ class SnapshotTable:
         return reader.parquet(*paths)
 
     def read_increment(
-        self,
-        spark: SparkSession,
-        since_ordinal: int,
-        until_ordinal: int | None = None,
+        self, spark: SparkSession, since_ordinal: int
     ) -> DataFrame | None:
         """Iceberg incremental-scan analog: ONLY the rows appended after
-        ``since_ordinal``, up to ``until_ordinal`` (default: current).
-        Because appends never rewrite data dirs, the increment is exactly
-        the file-set difference of the two manifests — a downstream
-        consumer (extract output feeding curation, verdicts feeding
-        packing) processes each commit's delta without scanning the
-        accumulated table or anti-joining keys: at 10^12 committed rows
-        the anti-join resume shuffles the key column of the WHOLE table
-        every run, while the incremental read plans only the new files.
+        ``since_ordinal`` up to the current snapshot. Because appends
+        never rewrite data dirs, the increment is exactly the file-set
+        difference of the two manifests — a downstream consumer (extract
+        output feeding curation, verdicts feeding packing) processes each
+        commit's delta without scanning the accumulated table or
+        anti-joining keys: at 10^12 committed rows the anti-join resume
+        shuffles the key column of the WHOLE table every run, while the
+        incremental read plans only the new files.
 
-        Raises ValueError when the lineage between the two ordinals is
-        not append-only (an overwrite/compaction/recompute replaced the
-        layout — ``since``'s dirs are no longer a subset of ``until``'s):
+        Raises ValueError when the lineage since ``since_ordinal`` is
+        not append-only (an overwrite/recompute replaced the layout —
+        ``since``'s dirs are no longer a subset of the current ones):
         "what's new" stops being a file-level question there, and the
         caller must fall back to a full read (+ key anti-join if it needs
         exactly-once). Iceberg's incremental scan has the same contract.
         Returns None when no rows were appended."""
-        until = (
-            self.current_snapshot()
-            if until_ordinal is None
-            else self.snapshot_at(until_ordinal)
-        )
+        until = self.current_snapshot()
         since = self.snapshot_at(since_ordinal)
         if since is None or until is None:
             raise ValueError(
-                f"read_increment: missing snapshot (since={since_ordinal}, "
-                f"until={until_ordinal})"
+                f"read_increment: missing snapshot (since={since_ordinal})"
             )
         since_set = set(since["data_dirs"])
         if not since_set <= set(until["data_dirs"]):
             raise ValueError(
                 "read_increment: non-append lineage between ordinals "
-                f"{since['ordinal']} and {until['ordinal']} (overwrite/"
-                "compaction rewrote the layout); fall back to read()"
+                f"{since['ordinal']} and {until['ordinal']} (an overwrite "
+                "rewrote the layout); fall back to read()"
             )
         new_dirs = [d for d in until["data_dirs"] if d not in since_set]
         if not new_dirs:
@@ -150,54 +128,6 @@ class SnapshotTable:
         if len(new_dirs) > 1 and self._schemas_differ(new_dirs):
             reader = reader.option("mergeSchema", "true")
         return reader.parquet(*paths)
-
-    def diff(
-        self,
-        spark: SparkSession,
-        ordinal_a: int,
-        ordinal_b: int,
-        key_col: str,
-    ) -> DataFrame | None:
-        """Row-level audit of what changed between two committed
-        snapshots — the companion to the recompute arbiter: after a
-        ``--recompute`` overwrite, ``diff(pre, post, "doc_id")`` is
-        exactly the verdicts the corpus-global rerun flipped. Returns
-        one row per affected key with ``change`` in
-        (added, removed, changed); unchanged keys are absent. Rows
-        compare on the COMMON non-key columns of the two ordinals
-        (schema evolution adds columns — comparing them would mark
-        every old row changed), by a canonical struct equality that is
-        null-safe. Both sides remain readable because snapshots are
-        immutable and expire_snapshots is the only deleter."""
-        a = self.read(spark, ordinal=ordinal_a)
-        b = self.read(spark, ordinal=ordinal_b)
-        if a is None or b is None:
-            raise ValueError(
-                f"diff: missing snapshot (a={ordinal_a}, b={ordinal_b})"
-            )
-        common = sorted(set(a.columns) & set(b.columns) - {key_col})
-        pa = a.select(
-            F.col(key_col),
-            F.struct(*[F.col(c) for c in common]).alias("_va"),
-        )
-        pb = b.select(
-            F.col(key_col).alias("_kb"),
-            F.struct(*[F.col(c) for c in common]).alias("_vb"),
-        )
-        j = pa.join(pb, F.col(key_col) == F.col("_kb"), "full_outer")
-        change = (
-            F.when(F.col(key_col).isNull(), F.lit("added"))
-            .when(F.col("_kb").isNull(), F.lit("removed"))
-            .when(~F.col("_va").eqNullSafe(F.col("_vb")), F.lit("changed"))
-        )
-        return (
-            j.withColumn("change", change)
-            .filter(F.col("change").isNotNull())
-            .select(
-                F.coalesce(F.col(key_col), F.col("_kb")).alias(key_col),
-                "change",
-            )
-        )
 
     def _schemas_differ(self, data_dirs: list[str]) -> bool:
         """True when the live runs committed different column lists (or
@@ -263,63 +193,12 @@ class SnapshotTable:
             "ordinal": int(run_dir.rsplit("-", 1)[1]),
             "data_dirs": kept + [run_dir],
             # schema as committed THIS run (Iceberg records schema per
-            # snapshot; an added column shows up here and time-travel
-            # readers of older ordinals never see it)
+            # snapshot; read() merges schemas only when these differ)
             "columns": list(columns),
             "lineage": lineage or {},
         }
         self._commit(snap)
         return snap
-
-    def compact(
-        self,
-        spark: SparkSession,
-        target_partitions: int | None = None,
-        lineage: dict | None = None,
-    ) -> dict:
-        """Small-file compaction (Iceberg ``rewrite_data_files`` analog):
-        read the live set, rewrite it as ONE run directory, commit a
-        snapshot whose live set is just that directory. After hundreds
-        of incremental appends the live set is hundreds of small run
-        dirs — every read pays per-file open/footer costs and the resume
-        anti-join scans them all; compaction collapses that to one
-        columnar dir. History is untouched: old snapshots keep
-        referencing the old dirs (time travel intact — compaction
-        rewrites the live LAYOUT, never the past); reclaim the old dirs
-        with ``expire_snapshots`` once history is no longer needed."""
-        df = self.read(spark)
-        prior = self.current_snapshot()
-        if df is None or prior is None:
-            return {"ordinal": -1, "noop": True}
-        if target_partitions:
-            df = df.repartition(target_partitions)
-        info = dict(lineage or {})
-        info["compaction_of"] = prior["ordinal"]
-        info["compacted_dirs"] = len(prior["data_dirs"])
-        return self.overwrite(df, lineage=info)
-
-    def expire_snapshots(self, keep_last: int = 1) -> list[str]:
-        """Iceberg ``expire_snapshots`` analog: drop all but the newest
-        ``keep_last`` manifests and DELETE data dirs referenced only by
-        the dropped ones. Time travel to expired ordinals is gone — by
-        choice; every kept snapshot (including CURRENT) still reads.
-        Append-lineage means an old run dir usually also appears in
-        newer snapshots' live sets — such dirs are NOT deleted; real
-        space comes back after a compaction made the old dirs
-        unreferenced by the kept tail. Returns the deleted dirs."""
-        if keep_last < 1:
-            raise ValueError("expire_snapshots: keep_last must be >= 1")
-        snaps = self.snapshots()
-        keep, drop = snaps[-keep_last:], snaps[:-keep_last]
-        live = {d for s in keep for d in s["data_dirs"]}
-        removed: list[str] = []
-        for s in drop:
-            for d in s["data_dirs"]:
-                if d not in live and (self.root / d).exists():
-                    shutil.rmtree(self.root / d)
-                    removed.append(d)
-            (self.manifest_dir / f"snapshot-{s['ordinal']:06d}.json").unlink()
-        return removed
 
     def _commit(self, snap: dict) -> None:
         self.manifest_dir.mkdir(parents=True, exist_ok=True)

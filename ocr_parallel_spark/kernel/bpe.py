@@ -113,24 +113,6 @@ def encode(text: str, merges: list[tuple[str, str]]) -> list[str]:
     return out
 
 
-def count_tokens(text: str, merges: list[tuple[str, str]], _cache: dict | None = None) -> int:
-    """Token count of ``text`` under the merge table. ``_cache`` maps
-    word -> count across calls (web text repeats words heavily; the
-    Arrow batch path passes one cache per batch)."""
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    cache = _cache if _cache is not None else {}
-    n = 0
-    for word in text.split(" "):
-        if not word:
-            continue
-        c = cache.get(word)
-        if c is None:
-            c = len(apply_merges(list(_word_units(word)), ranks))
-            cache[word] = c
-        n += c
-    return n
-
-
 def make_counter(merges: list[tuple[str, str]]):
     """Return a ``text -> token count`` callable with the rank table
     built once and a shared word -> count cache — the shape the Arrow

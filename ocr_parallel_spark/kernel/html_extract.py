@@ -327,7 +327,7 @@ def join_links_escaped(links: list[str]) -> str:
     commas (e.g. Google Maps /@lat,lng paths); a naive ``",".join``
     would both corrupt the element count and be ambiguous to split.
     Inverse: ``split(",")`` then unquote ``%2C`` -> ``,`` and ``%25``
-    -> ``%`` (split_links_escaped)."""
+    -> ``%``."""
     return ",".join(escape_link(link) for link in links)
 
 
@@ -336,12 +336,3 @@ def escape_link(s: str) -> str:
     list (% -> %25 first, then , -> %2C); a second implementation of
     this rule anywhere is a drift bug."""
     return s.replace("%", "%25").replace(",", "%2C")
-
-
-def split_links_escaped(s: str) -> list[str]:
-    """Inverse of :func:`join_links_escaped` (empty string -> [])."""
-    if s == "":
-        return []
-    return [
-        part.replace("%2C", ",").replace("%25", "%") for part in s.split(",")
-    ]

@@ -2,8 +2,11 @@
 
 Reproduces the reference's per-page cleaning semantics
 (/root/reference/app/utils/text_cleaning.py:6-37): drop literal ``\\n``
-escapes, flatten real newlines, collapse runs of whitespace, strip. Also the
-separator-collapse pass (/root/reference/app/utils/text_localization.py:799-816).
+escapes, flatten real newlines, collapse runs of whitespace, strip. The
+reference's separator-collapse pass (``app/utils/text_localization.py``
+lines 799-816) has no twin here: ``html_extract.extract_html`` joins kept
+blocks, each already flattened by ``clean_text``, with exactly
+``"\\n\\n"``, so a run of three or more newlines never forms.
 
 Pure Python, no Spark imports — used both by the Arrow kernel (batch loop is
 over *blocks*, not rows-at-the-DataFrame-level) and by tests. The same chain
@@ -13,10 +16,7 @@ is mirrored as built-in column expressions in
 
 from __future__ import annotations
 
-import re
 import unicodedata
-
-_SEP3_RE = re.compile(r"\n{3,}")
 
 
 def clean_text(text: str) -> str:
@@ -37,11 +37,3 @@ def clean_text(text: str) -> str:
 def nfc(text: str) -> str:
     """UTF-8 NFC normalization (determinism rule, FIXTURES.md §5)."""
     return unicodedata.normalize("NFC", text)
-
-
-def remove_redundant_separators(text: str) -> str:
-    """Collapse 3+ newlines to 2, strip each line, re-collapse, strip ends."""
-    text = _SEP3_RE.sub("\n\n", text)
-    text = "\n".join(line.strip() for line in text.split("\n"))
-    text = re.sub(r"\n\n\n+", "\n\n", text)
-    return text.strip()

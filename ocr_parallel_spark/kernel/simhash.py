@@ -50,14 +50,6 @@ def _mix64(z: np.ndarray) -> np.ndarray:
     return z
 
 
-def shingles(text: str, k: int = 3) -> list[str]:
-    """Word k-shingles over lowercased ``\\w+`` tokens."""
-    toks = _TOKEN_RE.findall(text.lower())
-    if len(toks) < k:
-        return [" ".join(toks)] if toks else []
-    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
-
-
 def shingle_hashes(text: str, k: int = 3) -> np.ndarray:
     """uint64 hash per word k-shingle, vectorized.
 
@@ -102,18 +94,6 @@ def simhash64(text: str, k: int = 3) -> int:
     for i in np.nonzero(votes > 0)[0]:
         out |= 1 << int(i)
     return out
-
-
-def simhash_bands(value: int, n_bands: int = 4) -> list[int]:
-    """Split a 64-bit SimHash into ``n_bands`` equal bit-bands. Two texts
-    within Hamming distance ``n_bands - 1`` share at least one band."""
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    return [(value >> (i * width)) & mask for i in range(n_bands)]
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin(a ^ b).count("1")
 
 
 @lru_cache(maxsize=8)

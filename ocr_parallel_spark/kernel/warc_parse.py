@@ -13,7 +13,7 @@ which the spec counts OUTSIDE the block.
 
 Compression: CC ships ``.warc.gz`` with one gzip MEMBER PER RECORD,
 concatenated. A single whole-file ``zlib`` pass stops at the first
-member boundary, so :func:`maybe_gunzip` loops a fresh
+member boundary, so :func:`gunzip_salvage` loops a fresh
 ``decompressobj`` over ``unused_data`` until the stream is exhausted —
 this also transparently handles the single-member whole-file case.
 
@@ -66,16 +66,6 @@ def gunzip_salvage(data: bytes) -> tuple[bytes, str | None]:
             f"gzip: {len(rest)} trailing bytes after last member are not gzip",
         )
     return b"".join(out), None
-
-
-def maybe_gunzip(data: bytes) -> bytes:
-    """Strict twin of :func:`gunzip_salvage`: identical decoding, but
-    raises ``ValueError`` instead of returning a partial prefix — for
-    callers (fixtures, property tests) where ANY damage is a bug."""
-    out, err = gunzip_salvage(data)
-    if err is not None:
-        raise ValueError(err)
-    return out
 
 
 def parse_warc_salvage(data: bytes) -> tuple[list[dict], str | None]:
@@ -150,17 +140,6 @@ def parse_warc_salvage(data: bytes) -> tuple[list[dict], str | None]:
     return records, None
 
 
-def parse_warc(data: bytes) -> list[dict]:
-    """Strict twin of :func:`parse_warc_salvage`: identical parsing,
-    but raises ``ValueError`` on any malformed record instead of
-    returning the salvaged prefix — for fixtures and round-trip tests
-    where damage means a bug, not data."""
-    records, err = parse_warc_salvage(data)
-    if err is not None:
-        raise ValueError(err)
-    return records
-
-
 def split_http_response(block: bytes) -> tuple[str, bytes]:
     """Split an ``application/http`` response block into (status line,
     body bytes). The body is everything after the first blank line —
@@ -179,7 +158,7 @@ def build_record(
     content_type: str = "application/http; msgtype=response",
     warc_date: str = "",
 ) -> bytes:
-    """Serialize one WARC record (the writer twin of :func:`parse_warc`,
+    """Serialize one WARC record (the writer twin of :func:`parse_warc_salvage`,
     used by tests and fixture synthesis). Header order is fixed so the
     bytes are deterministic."""
     date_line = f"WARC-Date: {warc_date}\r\n" if warc_date else ""

@@ -6,8 +6,6 @@ discipline as the text kernel (no per-row Python). The actual pixel/sample
 decode would need image/audio libraries that are not in this container, so
 the decode boundary is explicit:
 
-- ``decode_image_pixels`` raises ``NotImplementedError`` — the real decode
-  hook, deliberately stubbed (container has no PIL/ffmpeg).
 - ``decode_media_meta`` computes *deterministic* metadata from the raw
   bytes (size-derived width/height/duration). The arithmetic is fake, the
   plumbing — schema, Arrow batch shape, UDF signature, partitioning — is
@@ -57,14 +55,6 @@ def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") % 3 + 1).cast("int"),
         ).alias("kind"),
         F.encode(F.col("text"), "utf-8").alias("payload"),
-    )
-
-
-def decode_image_pixels(payload: bytes):
-    """The real decode hook. Container ships no image codec — explicit gap."""
-    raise NotImplementedError(
-        "pixel decode requires an image library not present in this "
-        "container; wire PIL/opencv here in production"
     )
 
 
@@ -146,7 +136,8 @@ def resize_plan(
     """Image resize planning: target dims that fit ``max_side`` preserving
     aspect ratio. Integer arithmetic only (w*max_side // longest) so the
     result is bit-identical across engines — the SQL oracle recomputes it.
-    The pixel work itself happens in ``resize_images``."""
+    The pixel work itself needs an image codec library, which the
+    package does not ship."""
     longest = F.greatest("width", "height")
     need = longest > max_side
     # floor(int*int/int) is bit-identical across engines (exact operands,
@@ -165,41 +156,6 @@ def resize_plan(
         new_w.alias("new_width"),
         new_h.alias("new_height"),
     )
-
-
-def resize_images(
-    media: DataFrame,
-    plan: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Arrow-batched resize execution. The pixel transform is STUBBED
-    (container ships no codec): the payload is deterministically truncated
-    to the area ratio, standing in for the resized encoding while keeping
-    the real plumbing — join plan to payloads, per-batch pandas transform
-    over binary, typed output schema."""
-    joined = media.select(id_col, payload_col).join(plan, id_col)
-    schema = f"{id_col} bigint, new_width int, new_height int, n_bytes_resized bigint"
-
-    def do_resize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            area_in = (pdf["width"] * pdf["height"]).clip(lower=1)
-            area_out = pdf["new_width"] * pdf["new_height"]
-            n = pdf[payload_col].map(len)
-            keep = (n * area_out // area_in).clip(lower=1)
-            out_bytes = [
-                b[: int(k)] for b, k in zip(pdf[payload_col], keep)
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "new_width": pdf["new_width"],
-                    "new_height": pdf["new_height"],
-                    "n_bytes_resized": [len(b) for b in out_bytes],
-                }
-            )
-
-    return joined.mapInPandas(do_resize, schema=schema)
 
 
 def frame_sample_plan(

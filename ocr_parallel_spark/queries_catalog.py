@@ -23,7 +23,6 @@ from ocr_parallel_spark.config import MATCH_THRESHOLD
 from ocr_parallel_spark.fanout import fan_out
 from ocr_parallel_spark.functions.similarity import brute_force_topk
 from ocr_parallel_spark.functions.text_quality import (
-    detect_lang,
     fingerprint_prefix,
     quality_features,
     token_count_re,

@@ -1,10 +1,6 @@
-"""Input connectors: pages table, extraction-target CSV, media/embeddings."""
+"""Input connectors: extraction-target CSV and WARC/WET archives."""
 
-from ocr_parallel_spark.sources.readers import (  # noqa: F401
-    read_embeddings,
-    read_pages,
-    read_targets_csv,
-)
+from ocr_parallel_spark.sources.readers import read_targets_csv  # noqa: F401
 from ocr_parallel_spark.sources.warc import (  # noqa: F401
     read_warc,
     warc_docs,

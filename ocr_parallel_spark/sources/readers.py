@@ -1,14 +1,13 @@
 """Source readers (SURVEY §2.1).
 
-- ``read_pages`` (S1/S4): the CC-style pages table with the input_hint
-  schema enforced (never inferred).
+- ``DOCUMENTS_SCHEMA`` / ``EMBEDDINGS_SCHEMA``: the catalog's sf tables,
+  read with their known schemas (never inferred).
 - ``read_targets_csv`` (S6): extraction targets from CSV with sniffed
   delimiter and case-insensitive headers, empty rows dropped (P3) —
   the semantics of the reference's loader
   (/root/reference/scripts/test_full_process.py:39-112) without the
   driver-side csv module: sniffing reads one line, parsing is a Spark csv
   scan.
-- ``read_embeddings``: typed embedding table for the similarity toolkit.
 """
 
 from __future__ import annotations
@@ -17,24 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
-)
-
-PAGES_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("warc_ts", TimestampType()),
-        StructField("html", BinaryType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-    ]
 )
 
 # The catalog's two sf tables, read with their known schemas: inferring a
@@ -58,15 +45,6 @@ EMBEDDINGS_SCHEMA = StructType(
 )
 
 _SNIFF_DELIMS = [",", ";", "\t", "|"]
-
-
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    """Pages table scan with the explicit input_hint schema. Extra columns
-    in the files are ignored; missing ones fail analysis loudly."""
-    df = spark.read.parquet(path)
-    return df.select(
-        *[F.col(f.name).cast(f.dataType) for f in PAGES_SCHEMA.fields]
-    )
 
 
 def sniff_delimiter(spark: SparkSession, path: str) -> str:
@@ -109,12 +87,4 @@ def read_targets_csv(
     ).filter((F.col("name") != "") & (F.col("ref") != ""))
     return out.select(
         F.abs(F.hash("name", "ref")).alias("target_id"), "name", "ref"
-    )
-
-
-def read_embeddings(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    return df.select(
-        F.col("vec_id").cast("long"),
-        F.col("embedding").cast("array<float>"),
     )

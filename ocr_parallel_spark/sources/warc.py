@@ -369,15 +369,16 @@ def warc_pages(spark: SparkSession, path: str) -> DataFrame:
     """WARC archives -> the flagship extraction pipeline's pages shape
     ``(url, warc_ts, html, text, lang)``: html is the raw response body
     (the kernel does its own boilerplate extraction), ``warc_ts`` parses
-    the WARC-Date header (ISO 8601; records without one get null and
-    sort last in the earliest-crawl-wins keep-first), text/lang start
-    null exactly as a fresh crawl has them."""
+    the WARC-Date header (ISO 8601; records without one, or with one that
+    does not parse, get null and sort last in the earliest-crawl-wins
+    keep-first: ``try_to_timestamp`` never raises, ANSI mode or not),
+    text/lang start null exactly as a fresh crawl has them."""
     from pyspark.sql import functions as F
 
     b = response_bodies(read_warc(spark, path), extra_cols=("warc_date",))
     return b.select(
         F.col("target_uri").alias("url"),
-        F.to_timestamp(F.col("warc_date")).alias("warc_ts"),
+        F.try_to_timestamp(F.col("warc_date")).alias("warc_ts"),
         F.col("body").alias("html"),
         F.lit(None).cast("string").alias("text"),
         F.lit(None).cast("string").alias("lang"),

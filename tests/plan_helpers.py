@@ -1,9 +1,6 @@
-"""Physical-plan inspection helpers.
-
-Used by tests/test_plans.py and scripts/dump_plans.py: the plan SHAPE is a
-first-class deliverable at 100 TB (a silently-regressed broadcast or a
-lost pushdown is a 100x cost bug no row-count test catches).
-"""
+"""Physical-plan text helpers for the plan-shape tests: the plan SHAPE is
+a first-class deliverable at 100 TB (a silently-regressed broadcast or a
+lost pushdown is a 100x cost bug no row-count test catches)."""
 
 from __future__ import annotations
 

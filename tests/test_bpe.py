@@ -8,7 +8,6 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ocr_parallel_spark.kernel.bpe import (
-    count_tokens,
     encode,
     make_counter,
     merges_from_strings,
@@ -35,7 +34,7 @@ def test_bpe_golden_textbook_example():
     assert encode("low", m) == ["low▁"]
     # unseen word with a trained suffix reuses it
     assert encode("tallest", m)[-1] == "est▁"
-    assert count_tokens("low lower newest", m) == 1 + 4 + 1
+    assert make_counter(m)("low lower newest") == 1 + 4 + 1
 
 
 def test_bpe_determinism_and_serialization():
@@ -57,11 +56,12 @@ def test_bpe_distributivity_and_bounds(words, n_merges):
         freqs[w] = freqs.get(w, 0) + 1
     m = train_bpe(freqs, n_merges)
     text = " ".join(words)
-    total = count_tokens(text, m)
-    assert total == sum(count_tokens(w, m) for w in words)
+    count = make_counter(m)
+    total = count(text)
+    assert total == sum(count(w) for w in words)
     assert len(words) <= total <= sum(len(w) for w in words)
-    # counter factory agrees with the plain function
-    assert make_counter(m)(text) == total
+    # the counter's word cache agrees with the plain encoder
+    assert total == sum(len(encode(w, m)) for w in words)
 
 
 def test_fit_and_count_distributed(spark, sf_dir):

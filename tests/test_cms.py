@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_parallel_spark.functions.cms import cms_build, cms_estimate, cms_merge
+from ocr_parallel_spark.functions.cms import cms_build, cms_estimate
 
 W = 256  # deliberately small so collisions actually happen
 
@@ -46,16 +46,19 @@ def test_cms_overcount_law_under_heavy_collisions(spark):
 
 
 def test_cms_merge_equals_rebuild(spark):
+    """Grids built with the same (width, depth) merge by cell-wise sum:
+    the sum of build(A) and build(B) equals build(A ++ B) exactly."""
     a = _stream(spark, {"x": 5, "y": 2})
     b = _stream(spark, {"y": 3, "z": 9})
-    merged = sorted(
-        map(tuple, cms_merge(
-            cms_build(a, "k", W, 4), cms_build(b, "k", W, 4)
-        ).collect())
-    )
-    rebuilt = sorted(
-        map(tuple, cms_build(a.union(b), "k", W, 4).collect())
-    )
+    merged: dict = {}
+    for part in (a, b):
+        for r in cms_build(part, "k", W, 4).collect():
+            cell = (r.row_idx, r.col_idx)
+            merged[cell] = merged.get(cell, 0) + r.cnt
+    rebuilt = {
+        (r.row_idx, r.col_idx): r.cnt
+        for r in cms_build(a.union(b), "k", W, 4).collect()
+    }
     assert merged == rebuilt and len(merged) > 0
 
 

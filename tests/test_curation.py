@@ -231,7 +231,7 @@ def test_curation_plans_stay_jvm_side(spark, sf_dir):
     (pure expressions / built-in aggregates — whole-stage codegen), and
     the line-frequency count must shuffle on the 32-byte sha2 key, not
     on raw line text."""
-    from ocr_parallel_spark.plans import plan_string
+    from plan_helpers import plan_string
     from ocr_parallel_spark.queries_catalog import queries
 
     q = queries()
@@ -251,7 +251,7 @@ def test_repetition_signals_planted_dup_line(spark, sf_dir):
 
 
 def test_decontaminate_flags_bench_docs_and_broadcasts(spark, sf_dir):
-    from ocr_parallel_spark.plans import plan_string
+    from plan_helpers import plan_string
     from ocr_parallel_spark.queries_catalog import q_decontaminate
 
     out = q_decontaminate(spark, sf_dir)

@@ -29,8 +29,8 @@ def test_append_accumulates(spark, tmp_path):
     t.append(_mkdf(spark, range(5)))
     t.append(_mkdf(spark, range(5, 8)))
     assert t.read(spark).count() == 8
-    assert len(t.snapshots()) == 2
     assert t.current_snapshot()["ordinal"] == 1
+    assert t.snapshot_at(0)["data_dirs"] == ["data/run-000000"]
 
 
 def test_resume_skips_committed(spark, tmp_path):
@@ -106,7 +106,7 @@ def test_lineage_counters_match_committed_rows(spark, tmp_path):
     again = run_resumable(pages, t, spark, transform, "url")
     assert again["noop"] is True and again["ordinal"] == snap["ordinal"]
     assert again["lineage"]["rows_written"] == 0
-    assert len(t.snapshots()) == 1
+    assert t.snapshot_at(snap["ordinal"] + 1) is None
     assert sorted(p.name for p in (t.root / "data").iterdir()) == ["run-000000"]
 
     fresh = (
@@ -123,28 +123,30 @@ def test_lineage_counters_match_committed_rows(spark, tmp_path):
 
 
 def test_time_travel_read_at_ordinal(spark, tmp_path):
-    """Iceberg 'VERSION AS OF' analog: every committed ordinal stays
-    readable after later appends and even after an overwrite (old data
-    dirs are never rewritten)."""
+    """Every committed ordinal keeps its manifest and its data dirs after
+    later appends and even after an overwrite (old data dirs are never
+    rewritten): the history ``read_increment`` diffs against."""
     t = SnapshotTable(str(tmp_path / "t6"))
     t.append(_mkdf(spark, range(3)))
     t.append(_mkdf(spark, range(10, 15)))
     assert t.read(spark).count() == 8
-    assert t.read(spark, ordinal=0).count() == 3
-    assert t.read(spark, ordinal=1).count() == 8
-    assert t.snapshot_at(99) is None and t.read(spark, ordinal=99) is None
+    assert t.snapshot_at(99) is None
+
+    def count_at(ordinal):
+        dirs = t.snapshot_at(ordinal)["data_dirs"]
+        return spark.read.parquet(*[str(t.root / d) for d in dirs]).count()
+
+    assert (count_at(0), count_at(1)) == (3, 8)
     t.overwrite(_mkdf(spark, range(100, 102)))
     assert t.read(spark).count() == 2
     # history still intact post-overwrite
-    assert t.read(spark, ordinal=0).count() == 3
-    assert t.read(spark, ordinal=1).count() == 8
-    assert [s["ordinal"] for s in t.snapshots()] == [0, 1, 2]
+    assert (count_at(0), count_at(1)) == (3, 8)
+    assert t.current_snapshot()["data_dirs"] == ["data/run-000002"]
 
 
 def test_schema_evolution_added_column(spark, tmp_path):
     """Add-column evolution: a later run commits an extra column; the
-    current read reconciles by name (old rows read NULL), a time-travel
-    read of the pre-evolution ordinal never sees the column, and each
+    current read reconciles by name (old rows read NULL), and each
     manifest records the schema as committed."""
     from pyspark.sql import functions as F
 
@@ -159,59 +161,9 @@ def test_schema_evolution_added_column(spark, tmp_path):
     # old rows surface the added column as NULL; new rows carry values
     assert cur.filter("score IS NULL").count() == 3
     assert cur.filter("score = v * 2.0").count() == 2
-    # time travel predates the evolution
-    old = t.read(spark, ordinal=0)
-    assert set(old.columns) == {"url", "v"}
     # per-snapshot schema recorded in the manifest
     assert t.snapshot_at(0)["columns"] == ["url", "v"]
     assert t.snapshot_at(1)["columns"] == ["url", "v", "score"]
-
-
-def test_compaction_collapses_live_set_preserving_rows_and_history(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "t7"))
-    t.append(_mkdf(spark, range(5)))
-    t.append(_mkdf(spark, range(5, 8)))
-    t.append(_mkdf(spark, range(8, 12)))
-    before = sorted(r["url"] for r in t.read(spark).collect())
-    assert len(t.current_snapshot()["data_dirs"]) == 3
-
-    snap = t.compact(spark, target_partitions=2)
-    assert len(snap["data_dirs"]) == 1
-    assert snap["lineage"]["compaction_of"] == 2
-    after = sorted(r["url"] for r in t.read(spark).collect())
-    assert after == before
-    # history untouched: pre-compaction ordinals still read their state
-    assert t.read(spark, ordinal=1).count() == 8
-    # resume semantics survive compaction: everything is still committed
-    todo = resume_filter(_mkdf(spark, range(12)), t, spark, "url")
-    assert todo.count() == 0
-
-
-def test_expire_snapshots_reclaims_only_unreferenced_dirs(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "t8"))
-    t.append(_mkdf(spark, range(5)))
-    t.append(_mkdf(spark, range(5, 8)))
-    # without compaction, run-000000 is still in the kept live set
-    assert t.expire_snapshots(keep_last=1) == []
-    assert t.read(spark).count() == 8
-
-    t.compact(spark)
-    removed = t.expire_snapshots(keep_last=1)
-    # the two pre-compaction run dirs are now unreferenced -> deleted
-    assert sorted(removed) == ["data/run-000000", "data/run-000001"]
-    assert t.read(spark).count() == 8
-    assert t.snapshot_at(0) is None and t.snapshot_at(1) is None
-    # time travel to the kept (compacted) snapshot still works
-    assert t.read(spark, ordinal=t.current_snapshot()["ordinal"]).count() == 8
-
-
-def test_expire_snapshots_validates_keep_last(spark, tmp_path):
-    import pytest
-
-    t = SnapshotTable(str(tmp_path / "t9"))
-    t.append(_mkdf(spark, range(3)))
-    with pytest.raises(ValueError):
-        t.expire_snapshots(keep_last=0)
 
 
 def test_read_increment_returns_only_appended_rows(spark, tmp_path):
@@ -221,8 +173,8 @@ def test_read_increment_returns_only_appended_rows(spark, tmp_path):
     t.append(_mkdf(spark, range(8, 12)))      # ordinal 2
     inc = t.read_increment(spark, since_ordinal=0)
     assert sorted(r.v for r in inc.collect()) == list(range(5, 12))
-    inc12 = t.read_increment(spark, since_ordinal=1, until_ordinal=2)
-    assert sorted(r.v for r in inc12.collect()) == list(range(8, 12))
+    inc1 = t.read_increment(spark, since_ordinal=1)
+    assert sorted(r.v for r in inc1.collect()) == list(range(8, 12))
     # nothing appended since current -> None
     assert t.read_increment(spark, since_ordinal=2) is None
 
@@ -233,37 +185,16 @@ def test_read_increment_rejects_rewritten_lineage(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "t11"))
     t.append(_mkdf(spark, range(5)))          # ordinal 0
     t.append(_mkdf(spark, range(5, 8)))       # ordinal 1
-    t.compact(spark)                          # ordinal 2: layout rewritten
+    t.overwrite(t.read(spark))                # ordinal 2: layout rewritten
     with pytest.raises(ValueError, match="non-append"):
         t.read_increment(spark, since_ordinal=0)
-    # but increments WITHIN the post-compaction lineage work again
+    # but increments WITHIN the post-overwrite lineage work again
     t.append(_mkdf(spark, range(8, 10)))      # ordinal 3
     inc = t.read_increment(spark, since_ordinal=2)
     assert sorted(r.v for r in inc.collect()) == [8, 9]
     # and a missing ordinal is an explicit error, not a silent full read
     with pytest.raises(ValueError, match="missing snapshot"):
         t.read_increment(spark, since_ordinal=99)
-
-
-def test_snapshot_diff_reports_added_removed_changed(spark, tmp_path):
-    """diff(pre, post, key) is exactly the rows a recompute/append
-    flipped: added keys, removed keys, changed values; unchanged keys
-    are absent; comparison is null-safe."""
-    t = SnapshotTable(str(tmp_path / "t12"))
-    df0 = spark.createDataFrame(
-        [("u1", 1), ("u2", None), ("u3", 3)], "url string, v int"
-    )
-    t.append(df0)                                        # ordinal 0
-    df1 = spark.createDataFrame(
-        [("u1", 1), ("u2", 9), ("u4", 4)], "url string, v int"
-    )
-    t.overwrite(df1)                                     # ordinal 1 (recompute)
-    got = {r.url: r.change for r in t.diff(spark, 0, 1, "url").collect()}
-    assert got == {"u2": "changed", "u3": "removed", "u4": "added"}
-    # evolved schema: a new column on ordinal 2 must not mark old rows
-    df2 = df1.withColumn("extra", F.lit("x"))
-    t.overwrite(df2)                                     # ordinal 2
-    assert t.diff(spark, 1, 2, "url").count() == 0
 
 
 def test_reason_histogram_rides_lineage(spark, tmp_path):

@@ -508,9 +508,9 @@ def test_recompute_arbiter_applies_corpus_global_truth(spark, tmp_path):
     assert len(after) == 6
     # corpus truth: banner in 6 docs >= min_line_count -> boilerplate line dropped
     assert all(r["n_kept_lines"] == 1 for r in after.values())
-    # pre-recompute state remains time-travelable
-    before = table.read(spark, ordinal=snap["ordinal"] - 1)
-    assert before.count() == 6
+    # the pre-recompute snapshot and its data dirs stay on disk
+    before = table.snapshot_at(snap["ordinal"] - 1)["data_dirs"]
+    assert spark.read.parquet(*[str(table.root / d) for d in before]).count() == 6
 
 
 def test_recompute_job_counts_its_overwrite(spark, sf_dir, tmp_path):

@@ -15,15 +15,9 @@ import pathlib
 import pytest
 
 from ocr_parallel_spark.fixtures import fixture_payloads
-from ocr_parallel_spark.kernel import (
-    clean_text,
-    extract_payload,
-    remove_redundant_separators,
-    simhash64,
-    simhash_bands,
-)
+from ocr_parallel_spark.kernel import clean_text, extract_payload, simhash64
 from ocr_parallel_spark.kernel.pdf_layout import reconstruct_layout
-from ocr_parallel_spark.kernel.simhash import hamming64, minhash_signature
+from ocr_parallel_spark.kernel.simhash import minhash_signature
 
 GOLDENS = json.loads(
     (pathlib.Path(__file__).parent / "goldens" / "extraction_goldens.json").read_text()
@@ -71,9 +65,22 @@ def test_clean_text_reference_chain():
 
 
 def test_remove_redundant_separators():
-    assert remove_redundant_separators("a\n\n\n\nb") == "a\n\nb"
-    assert remove_redundant_separators("  a  \n   b ") == "a\nb"
-    assert remove_redundant_separators("a\n \n \nb") == "a\n\nb"
+    """Separator collapse happens in extract_html: kept blocks are
+    flattened by clean_text and joined by exactly one blank line, so
+    blank-line runs and ragged line edges in the page never reach the
+    text."""
+    from ocr_parallel_spark.kernel import extract_html
+
+    para = "word " * 20
+    html = (
+        f"<div>\n\n\n  {para}\n \n \n</div>"
+        f"<p>  {para}  \n\n\n\n  {para}</p>\n\n\n<p>{para}</p>"
+    )
+    text = extract_html(html)["text"]
+    assert "\n\n\n" not in text
+    assert text.split("\n\n") == [
+        para.strip(), f"{para.strip()} {para.strip()}", para.strip()
+    ]
 
 
 def test_layout_reconstruction_reading_order():
@@ -90,10 +97,8 @@ def test_simhash_near_texts_close():
     a = "the quick brown fox jumps over the lazy dog near the river bank today"
     b = "the quick brown fox jumps over the lazy dog near the river bank tonight"
     c = "completely different content about distributed query engines and shuffles"
-    assert hamming64(simhash64(a), simhash64(b)) <= 16
-    assert hamming64(simhash64(a), simhash64(c)) > 20
-    # identical text => identical bands
-    assert simhash_bands(simhash64(a)) == simhash_bands(simhash64(a))
+    assert (simhash64(a) ^ simhash64(b)).bit_count() <= 16
+    assert (simhash64(a) ^ simhash64(c)).bit_count() > 20
 
 
 def test_simhash_deterministic():
@@ -190,8 +195,13 @@ def test_link_join_escaped_lossless():
     from ocr_parallel_spark.kernel.html_extract import (
         extract_links,
         join_links_escaped,
-        split_links_escaped,
     )
+
+    def split_links_escaped(s):
+        """The inverse the join's docstring defines (empty string -> [])."""
+        if s == "":
+            return []
+        return [p.replace("%2C", ",").replace("%25", "%") for p in s.split(",")]
 
     links = ["/@40.7,-74.0", "/p?a=1,2", "/100%25off", "/plain"]
     s = join_links_escaped(links)

@@ -13,10 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
-
-
-from ocr_parallel_spark.plans import count_nodes, plan_string as plan_of  # noqa: E402
+from plan_helpers import count_nodes, plan_string as plan_of
 
 
 def test_scan_pushdown_and_pruning(spark, sf_dir):
@@ -132,32 +129,6 @@ def test_cosine_topk_broadcasts_query_side(spark, sf_dir):
 
     p = plan_of(q_cosine_topk(spark, sf_dir), "simple")
     assert "BroadcastExchange" in p
-
-
-def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
-    """Bucket-by-url storage (io/bucketed.py): two tables bucketed on the
-    same key join with NO Exchange — the parquet analog of Iceberg
-    bucket(N, url), the north_star partitioning requirement."""
-    from ocr_parallel_spark.io.bucketed import write_bucketed
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    left = docs.select("doc_id", "source")
-    right = docs.select("doc_id", "n_chars")
-    write_bucketed(left, "t_bleft", str(tmp_path / "bl"), key="doc_id", n_buckets=4)
-    write_bucketed(right, "t_bright", str(tmp_path / "br"), key="doc_id", n_buckets=4)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("t_bleft").join(spark.table("t_bright"), "doc_id")
-        p = plan_of(j, "simple")
-        assert "SortMergeJoin" in p
-        assert "Exchange" not in p, "bucketed join must not shuffle"
-        # sanity: result is right
-        assert j.count() == docs.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_bleft")
-        spark.sql("DROP TABLE IF EXISTS t_bright")
 
 
 def test_fan_out_probes_only_scan_chains(spark, sf_dir):

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from ocr_parallel_spark.sources import read_embeddings, read_pages, read_targets_csv
+from ocr_parallel_spark.sources import read_targets_csv
 from ocr_parallel_spark.sources.readers import sniff_delimiter
 
 
@@ -32,20 +32,10 @@ def test_read_targets_csv_missing_column_fails_loud(spark, tmp_path):
         read_targets_csv(spark, str(p))
 
 
-def test_read_pages_enforces_schema(spark, sf_dir, tmp_path):
-    from ocr_parallel_spark.pages import synthesize_pages
-
-    path = str(tmp_path / "pages")
-    synthesize_pages(spark, sf_dir).write.parquet(path)  # has extra doc_id
-    df = read_pages(spark, path)
-    assert [f.name for f in df.schema.fields] == [
-        "url", "warc_ts", "html", "text", "lang",
-    ]
-    assert df.count() > 0
-
-
 def test_read_embeddings_types(spark, sf_dir):
-    df = read_embeddings(spark, f"{sf_dir}/embeddings.parquet")
+    from ocr_parallel_spark.queries_catalog import _embeddings
+
+    df = _embeddings(spark, sf_dir)
     assert df.schema["embedding"].dataType.simpleString() == "array<float>"
     assert df.count() > 0
 
@@ -56,13 +46,14 @@ def test_read_embeddings_types(spark, sf_dir):
 def test_warc_parse_length_driven_not_delimiter_scanned():
     """A payload that CONTAINS 'WARC/1.0' (a crawled page about WARC)
     must not split the record — parsing is Content-Length-driven."""
-    from ocr_parallel_spark.kernel.warc_parse import build_record, parse_warc
+    from ocr_parallel_spark.kernel.warc_parse import build_record, parse_warc_salvage
 
     evil = b"look: WARC/1.0\r\nWARC-Type: fake\r\n\r\n inside a body"
     data = build_record("response", "http://e/1", evil, "<urn:1>") + build_record(
         "response", "http://e/2", b"second", "<urn:2>"
     )
-    recs = parse_warc(data)
+    recs, err = parse_warc_salvage(data)
+    assert err is None
     assert [r["target_uri"] for r in recs] == ["http://e/1", "http://e/2"]
     assert recs[0]["block"] == evil
     assert recs[1]["block"] == b"second"
@@ -75,29 +66,28 @@ def test_warc_gunzip_multi_member():
 
     from ocr_parallel_spark.kernel.warc_parse import (
         build_record,
-        maybe_gunzip,
-        parse_warc,
+        gunzip_salvage,
+        parse_warc_salvage,
     )
 
     a = build_record("response", "http://e/1", b"alpha", "<urn:1>")
     b = build_record("response", "http://e/2", b"beta", "<urn:2>")
     wire = gzip.compress(a, mtime=0) + gzip.compress(b, mtime=0)
-    assert maybe_gunzip(wire) == a + b
-    assert len(parse_warc(maybe_gunzip(wire))) == 2
+    assert gunzip_salvage(wire) == (a + b, None)
+    recs, err = parse_warc_salvage(a + b)
+    assert len(recs) == 2 and err is None
     # plain bytes pass through untouched
-    assert maybe_gunzip(a) == a
+    assert gunzip_salvage(a) == (a, None)
 
 
 def test_warc_parse_rejects_truncation():
-    import pytest
-
-    from ocr_parallel_spark.kernel.warc_parse import build_record, parse_warc
+    from ocr_parallel_spark.kernel.warc_parse import build_record, parse_warc_salvage
 
     rec = build_record("response", "http://e/1", b"0123456789", "<urn:1>")
-    with pytest.raises(ValueError, match="truncated"):
-        parse_warc(rec[:-8])  # cut inside the block
-    with pytest.raises(ValueError, match="version"):
-        parse_warc(b"HTTP/1.1 200 OK\r\n\r\n")
+    recs, err = parse_warc_salvage(rec[:-8])  # cut inside the block
+    assert recs == [] and "truncated" in err
+    recs, err = parse_warc_salvage(b"HTTP/1.1 200 OK\r\n\r\n")
+    assert recs == [] and "version" in err
 
 
 def test_warc_http_split_and_reader(spark, sf_dir):
@@ -224,8 +214,8 @@ def test_warc_gz_salvages_complete_members(spark, tmp_path):
 
 
 def test_gunzip_salvage_kernel():
-    """gunzip_salvage keeps complete members' bytes on a damaged tail;
-    maybe_gunzip stays the strict raising twin."""
+    """gunzip_salvage keeps complete members' bytes on a damaged tail
+    and reports the damage."""
     import gzip
 
     from ocr_parallel_spark.kernel.warc_parse import gunzip_salvage
@@ -240,25 +230,21 @@ def test_gunzip_salvage_kernel():
 
 
 def test_maybe_gunzip_rejects_corrupt_tails():
-    """Trailing non-gzip bytes or a truncated member must raise (and so
-    become an error row via read_warc), never silently drop records."""
+    """Trailing non-gzip bytes or a truncated member must be reported
+    (and so become an error row via read_warc), never silently drop
+    records; an all-NUL tail is padding, not damage. The strict
+    raising twin is gone: gunzip_salvage is the decoder read_warc runs."""
     import gzip
 
-    import pytest
-
-    from ocr_parallel_spark.kernel.warc_parse import maybe_gunzip
+    from ocr_parallel_spark.kernel.warc_parse import gunzip_salvage
 
     member = gzip.compress(b"payload", mtime=0)
-    assert maybe_gunzip(member + member) == b"payloadpayload"
-    assert maybe_gunzip(b"plain bytes") == b"plain bytes"
     # all-NUL tail = benign block-alignment padding, records preserved
-    assert maybe_gunzip(member + b"\x00" * 512) == b"payload"
-    with pytest.raises(ValueError, match="trailing"):
-        maybe_gunzip(member + b"JUNKJUNK")
-    with pytest.raises(ValueError, match="trailing"):
-        maybe_gunzip(member + b"\x00" * 8 + b"X")
-    with pytest.raises(ValueError, match="truncated|corrupt"):
-        maybe_gunzip(member[:-4])
+    assert gunzip_salvage(member + b"\x00" * 512) == (b"payload", None)
+    out, err = gunzip_salvage(member + b"\x00" * 8 + b"X")
+    assert out == b"payload" and "trailing" in err
+    out, err = gunzip_salvage(member[:-4])
+    assert err and ("truncated" in err or "corrupt" in err)
 
 
 def test_warc_docs_survives_malformed_utf8(spark, tmp_path):
@@ -334,6 +320,41 @@ def test_warc_pages_feed_extraction_pipeline(spark, sf_dir):
     assert all(r.status in ("found", "not_found", "error") for r in rows)
     # the synthetic bodies are plain text -> kernel output is non-empty
     assert sum(1 for r in rows if r.text) > 0
+
+
+def test_warc_pages_undated_or_bad_date_is_null(spark, tmp_path):
+    """A record without a WARC-Date, or with one that does not parse,
+    gets a NULL warc_ts under the session's ANSI mode instead of failing
+    the whole read; a dated record still parses."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from ocr_parallel_spark.kernel.warc_parse import build_record
+    from ocr_parallel_spark.sources.warc import warc_pages
+
+    body = b"HTTP/1.1 200 OK\r\n\r\n<p>ok</p>"
+    (tmp_path / "mixed.warc").write_bytes(
+        build_record("response", "http://e/undated", body, "<urn:1>")
+        + build_record(
+            "response", "http://e/bad", body, "<urn:2>", warc_date="not-a-date"
+        )
+        + build_record(
+            "response", "http://e/dated", body, "<urn:3>",
+            warc_date="2026-01-05T00:00:00Z",
+        )
+    )
+    pages = warc_pages(spark, str(tmp_path))
+    got = {
+        r.url: r.epoch_s
+        for r in pages.select("url", F.col("warc_ts").cast("long").alias("epoch_s")).collect()
+    }
+    dated = datetime.datetime(2026, 1, 5, tzinfo=datetime.timezone.utc)
+    assert got == {
+        "http://e/undated": None,
+        "http://e/bad": None,
+        "http://e/dated": int(dated.timestamp()),
+    }
 
 
 def test_warc_docs_sniff_charset_mode(spark, sf_dir):
